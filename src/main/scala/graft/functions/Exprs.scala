@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -156,6 +156,16 @@ object Exprs {
     // original through unchanged instead
     when(scheme === "", u)
       .otherwise(concat(scheme, lit("://"), authNoPort, pathNorm, qNorm))
+  }
+
+  /** F35 — edit distance between two strings, equal to Spark's
+    * `levenshtein` on every input but computed by the native bit-parallel
+    * [[graft.plans.EditDistance]] kernel (SQL `graft_levenshtein`): the
+    * engine's one edit-distance implementation. Column-only API: resolves
+    * the session from the thread context. */
+  def editDistance(a: Column, b: Column): Column = {
+    graft.plans.EditDistance.register(SparkSession.active)
+    call_function("graft_levenshtein", a, b)
   }
 
   /** F18 — the type-conversion matrix `convert_column_types`

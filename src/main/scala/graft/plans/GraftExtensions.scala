@@ -28,6 +28,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[ShingleArray].getName, "graft_shingles"),
       (exprs: Seq[Expression]) => ShingleArray.build(exprs)))
     e.injectFunction((
+      new FunctionIdentifier("graft_levenshtein"),
+      new ExpressionInfo(classOf[EditDistance].getName, "graft_levenshtein"),
+      (exprs: Seq[Expression]) => EditDistance.build(exprs)))
+    e.injectFunction((
       new FunctionIdentifier("graft_bpe_apply"),
       new ExpressionInfo(classOf[BpeApplyMerges].getName, "graft_bpe_apply"),
       (exprs: Seq[Expression]) => BpeApplyMerges(exprs(0), exprs(1))))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.ext.{BoundedCache, Similarity, TextDedup}
+import graft.functions.Exprs
 import graft.schemas.Tables
 
 /** Curation & evaluation operators — the round-9 continuation batch: the
@@ -253,11 +254,15 @@ object PackCuration {
     // Fuzzy dedup, production-shaped: MinHash-LSH candidate generation
     // (the banded index that never goes all-pairs — shared machinery and
     // oracle CTE with dedup_minhash_lsh) VERIFIED by exact edit
-    // distance. The Levenshtein DP runs only on candidate pairs, whose
-    // count tracks the true near-dup density, not n²; texts are fetched
-    // for candidates only via two id equi-joins, so the corpus text
-    // column is never crossed. is_dup flags pairs within 10% edits of
-    // the longer text — integer arithmetic end to end.
+    // distance. The verifier runs only on candidate pairs, whose count
+    // tracks the true near-dup density, not n²; texts are fetched for
+    // candidates only via two id equi-joins, so the corpus text column
+    // is never crossed. The distance is the bit-parallel
+    // graft.plans.EditDistance kernel (Myers/Hyyrö, O(⌈m/64⌉·n) word
+    // ops per pair after stripping the common prefix and suffix, against
+    // the O(m·n) byte-walking DP of Spark's levenshtein, whose values it
+    // returns). is_dup flags pairs within 10% edits of the longer text —
+    // integer arithmetic end to end.
     QDef("dedup_fuzzy_levenshtein",
       s"""WITH $minhashBandsCte,
          |cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
@@ -277,7 +282,7 @@ object PackCuration {
       val t2 = docs.select(col("doc_id").as("d2"), col("text").as("t2"))
       cand.join(t1, Seq("d1")).join(t2, Seq("d2"))
         .select(col("d1"), col("d2"),
-          levenshtein(col("t1"), col("t2")).cast("int").as("dist"),
+          Exprs.editDistance(col("t1"), col("t2")).as("dist"),
           greatest(length(col("t1")), length(col("t2"))).cast("int").as("len_max"))
         .withColumn("is_dup", col("dist") * 10 <= col("len_max"))
         .orderBy(col("d1"), col("d2"))

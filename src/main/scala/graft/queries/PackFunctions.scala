@@ -395,7 +395,8 @@ object PackFunctions {
         |  AND levenshtein(a.p_name, b.p_name) <= 4
         |ORDER BY k1, k2""".stripMargin) { (s, d) =>
       // install the value-preserving length-difference prefilter rule
-      // (graft.plans.LevenshteinPrefilter) so impossible pairs skip the DP
+      // (graft.plans.LevenshteinPrefilter) so impossible pairs skip the
+      // edit-distance kernel
       if (!s.experimental.extraOptimizations.contains(graft.plans.LevenshteinPrefilter))
         s.experimental.extraOptimizations =
           s.experimental.extraOptimizations :+ graft.plans.LevenshteinPrefilter
@@ -404,7 +405,7 @@ object PackFunctions {
       val a = p.select($"p_partkey".as("k1"), $"p_name".as("n1"))
       val b = p.select($"p_partkey".as("k2"), $"p_name".as("n2"))
       a.join(broadcast(b), $"k1" < $"k2")
-        .withColumn("dist", levenshtein($"n1", $"n2"))
+        .withColumn("dist", Exprs.editDistance($"n1", $"n2"))
         .filter($"dist" <= 4)
         .select($"k1", $"k2", $"dist")
         .orderBy($"k1", $"k2")

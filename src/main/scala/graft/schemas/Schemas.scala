@@ -140,15 +140,47 @@ object Tables {
     * path read as mtime 0 collapsed all missing-path keys into one. The
     * fingerprint folds the directory listing (sorted child names +
     * lengths + mtimes) — any rewrite changes at least one part-file name
-    * or length — and distinguishes missing paths explicitly. Pure local
-    * metadata: one listing, no Spark job, no data read. */
+    * or length — and distinguishes missing paths explicitly. A single
+    * parquet FILE has no listing to change, and a same-length rewrite
+    * within one mtime tick (a renamed column of equal length) kept its
+    * key, so its key also folds a hash of the parquet footer, where the
+    * schema lives. Local metadata only: one listing or one footer read,
+    * no Spark job. */
   private def fingerprint(path: String): String = {
     val f = new java.io.File(path)
     if (!f.exists()) s"missing:$path"
-    else if (f.isFile) s"f:${f.length()}:${f.lastModified()}"
+    else if (f.isFile) s"f:${f.length()}:${f.lastModified()}:${footerHash(f)}"
     else Option(f.listFiles()).map(_.sortBy(_.getName).map(c =>
       s"${c.getName}:${c.length()}:${c.lastModified()}").mkString("|"))
       .getOrElse(s"unlistable:${f.lastModified()}")
+  }
+
+  /** CRC32 of a parquet file's footer: the last 8 bytes are the footer
+    * length (little-endian int32) and the `PAR1` magic. A tail that is not
+    * a well-formed footer hashes the 8 tail bytes themselves (the parquet
+    * read then fails on its own terms). */
+  private def footerHash(f: java.io.File): Long = {
+    val in = new java.io.RandomAccessFile(f, "r")
+    try {
+      val len = in.length()
+      if (len < 8) return -1L
+      val tail = new Array[Byte](8)
+      in.seek(len - 8)
+      in.readFully(tail)
+      val footerLen = java.nio.ByteBuffer.wrap(tail)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt(0)
+      val bytes =
+        if (footerLen <= 0 || footerLen > len - 8) tail
+        else {
+          val footer = new Array[Byte](footerLen)
+          in.seek(len - 8 - footerLen)
+          in.readFully(footer)
+          footer
+        }
+      val crc = new java.util.zip.CRC32()
+      crc.update(bytes)
+      crc.getValue
+    } finally in.close()
   }
 
   private def pinnedSchema(spark: SparkSession, path: String): StructType = {

@@ -159,15 +159,22 @@ object ExprNullProps extends Properties("exprnull") {
       if (!spark.experimental.extraOptimizations.contains(graft.plans.LevenshteinPrefilter))
         spark.experimental.extraOptimizations =
           spark.experimental.extraOptimizations :+ graft.plans.LevenshteinPrefilter
+      graft.plans.EditDistance.register(spark)
       val ids = pairs.zipWithIndex.map { case ((a, b), i) => (i.toLong, a, b) }
-      val got = ids.toDF("id", "a", "b")
-        .filter(expr(s"levenshtein(a, b) <= $k"))
-        .select(col("id")).as[Long].collect().toSet
       // SQL 3VL: a NULL operand makes the predicate UNKNOWN -> row drops
       val expected = ids.collect {
         case (id, Some(a), Some(b)) if editDistance(a, b) <= k => id
       }.toSet
-      Prop(got == expected) :| s"got=$got expected=$expected"
+      // Spark's levenshtein and the engine's kernel both gain the guard;
+      // an RDD source keeps the filter out of local-relation folding, so
+      // the guarded predicate is what actually runs
+      Prop.all(Seq("levenshtein", "graft_levenshtein").map { fn =>
+        val df = spark.sparkContext.parallelize(ids, 2).toDF("id", "a", "b")
+          .filter(expr(s"$fn(a, b) <= $k"))
+        val guarded = df.queryExecution.optimizedPlan.toString.contains("abs(")
+        val got = df.select(col("id")).as[Long].collect().toSet
+        Prop(guarded && got == expected) :| s"$fn: guarded=$guarded got=$got expected=$expected"
+      }: _*)
     }
 
   // ---- asof/band joins: SQL join semantics under NULL keys AND times ---

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.Pack
+import org.apache.spark.sql.functions.expr
 
 /** Physical-plan regression guards: the scale properties the perf work
   * established must survive future edits — broadcasts on dim joins, anti
@@ -17,7 +18,8 @@ class PlanSpec extends AnyFunSuite {
     df.queryExecution.executedPlan.toString
   }
 
-  import org.apache.spark.sql.execution.SparkPlan
+  import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+  import graft.plans.EditDistance
   import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
   import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
   import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
@@ -211,6 +213,17 @@ class PlanSpec extends AnyFunSuite {
     // value preservation is covered by the DuckDB oracle, which compares
     // the rule-on result against plain SQL levenshtein
     assert(p.count() > 0)
+  }
+
+  test("thresholded levenshtein gets no length guard (its -1 would flip)") {
+    // levenshtein(a, b, 2) is -1 past the threshold, so -1 <= 4 holds for
+    // this pair although its lengths differ by 10; a guard would drop it
+    val s = spark
+    import s.implicits._
+    val df = s.sparkContext.parallelize(Seq(("", "aaaaaaaaaa")), 1).toDF("a", "b")
+      .filter(expr("levenshtein(a, b, 2) <= 4"))
+    val optimized = graft.plans.LevenshteinPrefilter(df.queryExecution.optimizedPlan)
+    assert(!optimized.toString.contains("abs("), s"no guard expected:\n$optimized")
   }
 
   test("q3 join: date filters pushed to both fact scans, top-10 without global sort") {
@@ -660,11 +673,25 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("fuzzy dedup verifies banded-LSH candidates: equi-joins only, no cross product") {
-    val p = plan("dedup_fuzzy_levenshtein")
+    val df = Pack.byName("dedup_fuzzy_levenshtein").fn(spark, TestSpark.sf0001)
+    df.collect() // run this plan itself, so AQE finalizes its codegen stages
+    val exec = df.queryExecution.executedPlan
+    val p = exec.toString
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"candidate generation and text fetch must stay equi-joins:\n$p")
-    assert(p.contains("levenshtein"),
-      s"the verification stage must compute the edit distance in-plan:\n$p")
+    // the verifier is the compiled bit-parallel kernel: graft_levenshtein
+    // evaluated inside a whole-stage codegen stage (not crossing the
+    // stage's InputAdapter borders), and Spark's DP appears nowhere
+    def stage(pl: SparkPlan): Seq[SparkPlan] = pl match {
+      case _: InputAdapter => Nil
+      case o               => o +: o.children.flatMap(stage)
+    }
+    val compiled = walk(exec).collect { case w: WholeStageCodegenExec => w }
+      .exists(w => stage(w.child).exists(_.expressions.exists(_.exists(_.isInstanceOf[EditDistance]))))
+    assert(compiled,
+      s"the verification stage must call graft_levenshtein inside WholeStageCodegen:\n$p")
+    assert("(?<!\\w)levenshtein\\(".r.findFirstIn(p).isEmpty,
+      s"Spark's levenshtein DP must not appear in the plan:\n$p")
   }
 
   test("dense rerank cascade: candidate and embedding joins are equi-joins, no cross product") {

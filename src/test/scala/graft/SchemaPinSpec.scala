@@ -40,6 +40,29 @@ class SchemaPinSpec extends AnyFunSuite {
       "a rewritten fixture must re-infer, never serve the stale schema")
   }
 
+  test("a same-length single-file rewrite with the same mtime re-infers") {
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_schemapin_file")
+    // one parquet file per dataset, differing only in a same-length
+    // column name: equal byte length, so only the footer tells them apart
+    def singleFile(name: String): java.nio.file.Path = {
+      val out = dir.resolve(s"w_$name").toString
+      Seq((1L, 2L)).toDF("id", name).coalesce(1).write.parquet(out)
+      new java.io.File(out).listFiles().filter(_.getName.endsWith(".parquet")).head.toPath
+    }
+    val target = dir.resolve("t.parquet")
+    java.nio.file.Files.copy(singleFile("a"), target)
+    val mtime = target.toFile.lastModified()
+    assert(Tables(s, dir.toString, "t").schema.fieldNames.toSeq === Seq("id", "a"))
+    val b = singleFile("b")
+    assert(b.toFile.length() === target.toFile.length(), "the rewrite must keep the length")
+    java.nio.file.Files.copy(b, target, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    assert(target.toFile.setLastModified(mtime))
+    assert(Tables(s, dir.toString, "t").schema.fieldNames.toSeq === Seq("id", "b"),
+      "a rewritten single-file fixture must re-infer, never serve the stale schema")
+  }
+
   test("siteRead pins by call site across per-run paths") {
     val s = spark
     import s.implicits._
