@@ -1,8 +1,9 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.GraftBridge.{column, expression}
 import graft.plans.DotProduct
 
 /** Similarity search over embedding columns (`Array[Float]`) — the
@@ -31,10 +32,8 @@ object Similarity {
 
   /** Same arithmetic as [[dot]] through the codegen'd graft.plans.DotProduct
     * Catalyst expression (bit-identical results, one tight loop per row). */
-  def nativeDot(spark: SparkSession, a: Column, b: Column): Column = {
-    DotProduct.register(spark)
-    call_function("graft_dot", a, b)
-  }
+  def nativeDot(a: Column, b: Column): Column =
+    column(DotProduct(expression(a), expression(b)))
 
   /** Exact cosine similarity between two float-array columns. Cosine is
     * undefined for a zero-norm vector (the all-zeros embedding a broken
@@ -72,7 +71,7 @@ object Similarity {
     * values are bitwise identical to inline sqrt(dot(x,x)), so oracle
     * comparisons are unaffected). Deterministic tiebreak on neighbor id. */
   def bruteTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val nd = nativeDot(corpus.sparkSession, _, _)
+    val nd = nativeDot(_, _)
     val q = broadcast(queries.select(col("vec_id").as("qid"), col("embedding").as("qe"),
       sqrt(nd(col("embedding"), col("embedding"))).as("qn")))
     val c = corpus.select(col("vec_id").as("nid"), col("embedding").as("ne"),
@@ -94,7 +93,7 @@ object Similarity {
     * candidate generation upgrades to the IVF/LSH bucketed forms exactly
     * like the ANN queries; the mismatch filter composes unchanged. */
   def hardNegativeTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val nd = nativeDot(corpus.sparkSession, _, _)
+    val nd = nativeDot(_, _)
     val q = broadcast(queries.select(col("vec_id").as("qid"), col("label").as("ql"),
       col("embedding").as("qe"), sqrt(nd(col("embedding"), col("embedding"))).as("qn")))
     val c = corpus.select(col("vec_id").as("nid"), col("label").as("neg_label"),
@@ -174,7 +173,7 @@ object Similarity {
     * [[ivfMultiProbeTopK]]'s probe, nprobe=1): (vec_id, b, embedding). */
   private def servingAssign(batch: DataFrame, cents: DataFrame,
                             bucketCol: String): DataFrame = {
-    val nd = nativeDot(batch.sparkSession, _, _)
+    val nd = nativeDot(_, _)
     val byBucket = cents.groupBy(col(bucketCol))
       .agg(array_sort(collect_list(struct(col("i"), col("mean")))).as("c"))
       .select(col(bucketCol).as("pb"),
@@ -353,7 +352,7 @@ object Similarity {
   def ivfPqAdcTopKStored(codes: DataFrame, cent: DataFrame, cells: DataFrame,
                          queries: DataFrame, dims: Int, nSub: Int, k: Int,
                          nprobe: Int): DataFrame = {
-    val nd = nativeDot(queries.sparkSession, _, _)
+    val nd = nativeDot(_, _)
     // coarse routing: same probe selection as ivfMultiProbeTopK
     val byBucket = cent.groupBy(col("label"))
       .agg(array_sort(collect_list(struct(col("i"), col("mean")))).as("c"))
@@ -392,7 +391,7 @@ object Similarity {
       .select(col(bucketCol).as("__bucket"),
         transform(col("c"), x => x.getField("mean")).as("__centroid"))
     val scored = vecs.crossJoin(broadcast(byBucket))
-      .withColumn("__score", nativeDot(vecs.sparkSession, col("embedding"), col("__centroid")))
+      .withColumn("__score", nativeDot(col("embedding"), col("__centroid")))
     // argmax = top-1 per vector through the bounded-heap operator: no
     // window, no sort of the n×k scored rows.
     // A NULL embedding scores NULL against every centroid and is
@@ -442,7 +441,7 @@ object Similarity {
     * persisted table instead of re-deriving it per run. */
   def ivfMultiProbeTopK(corpus: DataFrame, queries: DataFrame, cents: DataFrame,
                         bucketCol: String, k: Int, nprobe: Int): DataFrame = {
-    val nd = nativeDot(corpus.sparkSession, _, _)
+    val nd = nativeDot(_, _)
     val byBucket = cents
       .groupBy(col(bucketCol))
       .agg(array_sort(collect_list(struct(col("i"), col("mean")))).as("c"))
@@ -473,7 +472,7 @@ object Similarity {
     * same order (see dot). Planes are broadcast (numPlanes × dims floats);
     * the corpus side never shuffles — `2^numPlanes` buckets. */
   def lshAssign(vecs: DataFrame, numPlanes: Int): DataFrame = {
-    val nd = nativeDot(vecs.sparkSession, _, _)
+    val nd = nativeDot(_, _)
     // all planes in ONE broadcast row (numPlanes × dims floats), so bucket
     // assignment is a row-local fold over the plane array: the corpus side
     // is map-only — no shuffle at any scale. (A per-plane join + groupBy
@@ -496,7 +495,7 @@ object Similarity {
     * path when approximate recall is acceptable. Recall dial = fewer
     * planes (bigger buckets) or multi-probe on Hamming-adjacent buckets. */
   def lshTopK(corpus: DataFrame, queryPred: Column, numPlanes: Int, k: Int): DataFrame = {
-    val nd = nativeDot(corpus.sparkSession, _, _)
+    val nd = nativeDot(_, _)
     val hashed = lshAssign(corpus, numPlanes)
     val q = broadcast(hashed.filter(queryPred)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"),
@@ -520,7 +519,7 @@ object Similarity {
     * (vec_id, bucket, kept). */
   def semanticDedup(corpus: DataFrame, bucketCol: String,
                     threshold: Double): DataFrame = {
-    val nd = nativeDot(corpus.sparkSession, _, _)
+    val nd = nativeDot(_, _)
     val a = corpus.select(col("vec_id"), col("embedding").as("ae"),
       sqrt(nd(col("embedding"), col("embedding"))).as("an"), col(bucketCol).as("ab"))
     val b = corpus.select(col("vec_id").as("bid"), col("embedding").as("be"),
@@ -549,7 +548,7 @@ object Similarity {
     * (vec_id, bucket, kept). */
   def semanticDedupStored(corpus: DataFrame, cents: DataFrame,
                           bucketCol: String, threshold: Double): DataFrame = {
-    val nd = nativeDot(corpus.sparkSession, _, _)
+    val nd = nativeDot(_, _)
     val byBucket = cents.groupBy(col(bucketCol))
       .agg(array_sort(collect_list(struct(col("i"), col("mean")))).as("c"))
       .select(col(bucketCol).as("__bucket"),
@@ -589,7 +588,7 @@ object Similarity {
     * see ann_recall_refine_eval). */
   def refineTopK(candidates: DataFrame, corpus: DataFrame, queries: DataFrame,
                  k: Int): DataFrame = {
-    val nd = nativeDot(corpus.sparkSession, _, _)
+    val nd = nativeDot(_, _)
     val q = broadcast(queries.select(col("vec_id").as("qid"), col("embedding").as("qe"),
       sqrt(nd(col("embedding"), col("embedding"))).as("qn")))
     val cand = broadcast(candidates.select(col("qid"), col("nid")))
@@ -636,7 +635,7 @@ object Similarity {
     * pruned to the query's coarse bucket (equi-join on `bucketCol`).
     * probe=1; multi-probe = union over adjacent buckets, same shape. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, bucketCol: String, k: Int): DataFrame = {
-    val nd = nativeDot(corpus.sparkSession, _, _)
+    val nd = nativeDot(_, _)
     val q = broadcast(queries.select(col("vec_id").as("qid"), col("embedding").as("qe"),
       sqrt(nd(col("embedding"), col("embedding"))).as("qn"), col(bucketCol).as("qb")))
     val c = corpus.select(col("vec_id").as("nid"), col("embedding").as("ne"),

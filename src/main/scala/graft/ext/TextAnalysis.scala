@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftBridge.{column, expression}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -118,12 +119,10 @@ object TextAnalysis {
     * scan per merge — chain depth constant in vocabulary size). The two
     * paths are pinned equal by TextAnalysisSpec's equivalence property;
     * applyMerges stays the single statement of the train/serve rule. */
-  def bpeEncodeTrained(spark: org.apache.spark.sql.SparkSession, text: Column,
-      merges: Seq[(String, String)]): Column = {
+  def bpeEncodeTrained(text: Column, merges: Seq[(String, String)]): Column = {
     validateMerges(merges)
-    graft.plans.BpeApplyMerges.register(spark)
-    call_function("graft_bpe_apply", charSpaced(text),
-      lit(merges.map { case (a, b) => s"$a $b" }.mkString(",")))
+    column(graft.plans.BpeApplyMerges(expression(charSpaced(text)),
+      expression(lit(merges.map { case (a, b) => s"$a $b" }.mkString(",")))))
   }
 
   /** Symbols are interpolated into regex patterns (and, in the declared

@@ -1,7 +1,8 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.GraftBridge.{column, expression}
 
 /** Document deduplication for training-data pipelines (SURVEY.md §7.1
   * item 8): exact, canonical-fingerprint, MinHash+LSH, SimHash, and
@@ -86,12 +87,8 @@ object TextDedup {
   def positionalShingles(text: Column, n: Int): Column =
     nativeShingles(text, n, distinct = false)
 
-  private def nativeShingles(text: Column, n: Int, distinct: Boolean): Column = {
-    // Column-only API: resolve the session from the thread context (every
-    // query function builds its plan under an active session)
-    graft.plans.ShingleArray.register(SparkSession.active)
-    call_function("graft_shingles", split(text, " "), lit(n), lit(distinct))
-  }
+  private def nativeShingles(text: Column, n: Int, distinct: Boolean): Column =
+    column(graft.plans.ShingleArray(expression(split(text, " ")), n, distinct))
 
   /** Exact-substring (span-level) deduplication — the RefinedWeb /
     * MassiveText stage that EDITS documents instead of dropping them:
@@ -522,12 +519,11 @@ object TextDedup {
     * runs the identical integer math in a tight loop, bit-exact vs the
     * oracle. */
   def simhash(df: DataFrame, id: String, text: String): DataFrame = {
-    graft.plans.SimHash64.register(df.sparkSession)
     // row-local (no groupBy), so NULL-key rows keep their OWN signature
     // (no chimera merge) and NULL text yields a NULL signature; the
     // pairing stages' `d1 < d2` predicate keeps NULL keys out of pairs
     df.select(col(id).as("doc_id"),
-      call_function("graft_simhash", tokens(col(text))).as("simhash"))
+      column(graft.plans.SimHash64(expression(tokens(col(text))))).as("simhash"))
   }
 
   /** Connected components over an undirected near-dup pair graph —

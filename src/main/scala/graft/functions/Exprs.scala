@@ -1,7 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.GraftBridge.{column, expression}
 import org.apache.spark.sql.types.DecimalType
 
 /** Scalar-function layer (SURVEY.md §2.8, F10-F34): every string/date/math/
@@ -161,12 +162,9 @@ object Exprs {
   /** F35 — edit distance between two strings, equal to Spark's
     * `levenshtein` on every input but computed by the native bit-parallel
     * [[graft.plans.EditDistance]] kernel (SQL `graft_levenshtein`): the
-    * engine's one edit-distance implementation. Column-only API: resolves
-    * the session from the thread context. */
-  def editDistance(a: Column, b: Column): Column = {
-    graft.plans.EditDistance.register(SparkSession.active)
-    call_function("graft_levenshtein", a, b)
-  }
+    * engine's one edit-distance implementation. */
+  def editDistance(a: Column, b: Column): Column =
+    column(graft.plans.EditDistance(expression(a), expression(b)))
 
   /** F18 — the type-conversion matrix `convert_column_types`
     * (redshift_to_bq/lambda_function.py:38-131): per-column declarative

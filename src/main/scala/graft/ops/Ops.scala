@@ -383,9 +383,7 @@ object Ops {
                leftTime: String, rightTime: String,
                lo: Long, hi: Long): DataFrame = {
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(graft.plans.BandJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.BandJoinStrategy
+    graft.plans.GraftExtensions.install(spark)
     val lp = left.queryExecution.analyzed
     val rp = right.queryExecution.analyzed
     def attr(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, n: String) =
@@ -439,9 +437,7 @@ object Ops {
                  k: Int): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrder}
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(graft.plans.TopKPerKeyStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.TopKPerKeyStrategy
+    graft.plans.GraftExtensions.install(spark)
     val lp = df.queryExecution.analyzed
     def attr(n: String) = lp.output.filter(_.name == n) match {
       case Seq(a) => a

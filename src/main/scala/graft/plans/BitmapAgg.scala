@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -92,16 +91,4 @@ case class BitmapAgg(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
     copy(child = newChildren.head)
-}
-
-object BitmapAgg {
-  /** Register `graft_bitmap_card` (idempotent). Wrong arity fails as a
-    * clean error at resolution, not NoSuchElementException. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bitmap_card", exprs => {
-        if (exprs.length != 1) throw new IllegalArgumentException(
-          s"graft_bitmap_card(offset) takes exactly 1 argument, got ${exprs.length}")
-        BitmapAgg(exprs.head)
-      }, "built-in")
 }

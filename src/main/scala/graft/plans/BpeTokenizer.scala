@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -118,16 +117,5 @@ object BpeApplyMerges {
       k += 2
     }
     UTF8String.fromString(toks.mkString(" "))
-  }
-
-  /** Register `graft_bpe_apply` in the session registry (idempotent, the
-    * [[DotProduct.register]] discipline); also injected application-wide
-    * by [[GraftExtensions]]. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(
-        new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_bpe_apply")))
-      reg.createOrReplaceTempFunction(
-        "graft_bpe_apply", exprs => BpeApplyMerges(exprs(0), exprs(1)), "built-in")
   }
 }

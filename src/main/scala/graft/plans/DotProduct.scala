@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -111,17 +110,4 @@ object DotProduct {
     new IllegalArgumentException(
       s"graft_dot: length mismatch ($a vs $b elements) — equal-dimension " +
         "vectors required (slice or re-embed before scoring)")
-
-  /** Register `graft_dot` in the session function registry (makes the
-    * expression usable from Column programs via call_function and from
-    * SQL text). Truly idempotent: a no-op when already registered, so
-    * repeated query runs don't log `replaced a previously registered
-    * function` on every execution. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(
-        new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot")))
-      reg.createOrReplaceTempFunction(
-        "graft_dot", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-  }
 }

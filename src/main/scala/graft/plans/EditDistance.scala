@@ -1,7 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
@@ -220,21 +218,5 @@ object EditDistance {
     i = 0
     while (i < rows) { mapRows(s.mapUsed(i)) = 0; i += 1 }
     score
-  }
-
-  /** Register `graft_levenshtein(a, b)` (idempotent, same discipline as
-    * [[SimHash64.register]]). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(new FunctionIdentifier("graft_levenshtein")))
-      reg.createOrReplaceTempFunction("graft_levenshtein", build, "built-in")
-  }
-
-  /** Expression builder shared by runtime registration and
-    * [[GraftExtensions]] injection. */
-  def build(exprs: Seq[Expression]): EditDistance = {
-    if (exprs.length != 2) throw new IllegalArgumentException(
-      s"graft_levenshtein: expected 2 arguments (a, b), got ${exprs.length}")
-    EditDistance(exprs(0), exprs(1))
   }
 }

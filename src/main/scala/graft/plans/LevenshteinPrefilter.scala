@@ -47,8 +47,9 @@ object LevenshteinPrefilter extends Rule[LogicalPlan] {
   }
 
   // matches both shapes the predicate can end up in: a standalone Filter,
-  // and a Join condition (predicate pushdown moves it there before
-  // extraOptimizations run)
+  // and a Join condition (predicate pushdown may move it there first,
+  // whether the rule runs injected in the operator-optimization batches
+  // or, after GraftExtensions.install, among the extra optimizations)
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case f @ Filter(cond, child) =>
       val g = guarded(cond)

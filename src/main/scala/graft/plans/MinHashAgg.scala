@@ -1,7 +1,6 @@
 package graft.plans
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -119,12 +118,4 @@ case class MinHashAgg(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
     copy(child = newChildren.head)
-}
-
-object MinHashAgg {
-  /** Register `graft_minhash` (idempotent; the analyzer wraps the
-    * AggregateFunction in an AggregateExpression on resolution). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash", exprs => MinHashAgg(exprs.head), "built-in")
 }

@@ -1,7 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -80,14 +78,10 @@ object ShingleArray {
     }
   }
 
-  /** Expression builder shared by runtime registration and
-    * [[GraftExtensions]] injection; n and distinct must be literals —
+  /** The SQL builder of `graft_shingles(arr, n, distinct)` (arity
+    * checked by [[GraftExtensions]]); n and distinct must be literals —
     * they select the compiled loop, they are not data. */
   def build(exprs: Seq[Expression]): ShingleArray = {
-    // session-wide SQL surface (GraftExtensions): a wrong-arity call must
-    // fail as a clean analysis error, not an IndexOutOfBoundsException
-    if (exprs.length != 3) throw new IllegalArgumentException(
-      s"graft_shingles: expected 3 arguments (arr, n, distinct), got ${exprs.length}")
     val n = exprs(1) match {
       case Literal(v: Int, IntegerType) => v
       case other => throw new IllegalArgumentException(
@@ -99,13 +93,5 @@ object ShingleArray {
         s"graft_shingles: distinct must be a BOOLEAN literal, got $other")
     }
     ShingleArray(exprs.head, n, dist)
-  }
-
-  /** Register `graft_shingles(arr, n, distinct)` (idempotent, same
-    * discipline as [[SimHash64.register]]). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(new FunctionIdentifier("graft_shingles")))
-      reg.createOrReplaceTempFunction("graft_shingles", build, "built-in")
   }
 }

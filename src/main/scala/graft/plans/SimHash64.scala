@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -80,15 +79,5 @@ object SimHash64 {
       b += 1
     }
     sim
-  }
-
-  /** Register `graft_simhash` (idempotent, same discipline as
-    * [[DotProduct.register]]). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(
-        new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_simhash")))
-      reg.createOrReplaceTempFunction(
-        "graft_simhash", exprs => SimHash64(exprs.head), "built-in")
   }
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -41,17 +40,4 @@ case class TicketItemsGenerator(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object TicketItemsGenerator {
-  /** Register `graft_parse_ticket` for LATERAL VIEW use. Truly
-    * idempotent: a no-op when already registered, so repeated query runs
-    * don't log `replaced a previously registered function`. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(
-        new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_parse_ticket")))
-      reg.createOrReplaceTempFunction(
-        "graft_parse_ticket", exprs => TicketItemsGenerator(exprs.head), "built-in")
-  }
 }

@@ -22,11 +22,10 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   *
   * Preference order (c) from the build rules: a custom `LogicalPlan` +
   * `SparkStrategy` + `SparkPlan`, because no composition of built-ins
-  * expresses "group-local bounded selection without a sort". Registered
-  * per-session via `spark.experimental.extraStrategies` (see
-  * [[graft.ops.Ops.topKPerKey]]) — cluster deployments can inject the
-  * strategy with a `SparkSessionExtensions` the same way
-  * [[GraftExtensions]] does for functions and rules.
+  * expresses "group-local bounded selection without a sort". The
+  * planner gets [[TopKPerKeyStrategy]] from [[GraftExtensions]]: injected
+  * at session build, or installed by [[graft.ops.Ops.topKPerKey]] on a
+  * session built without the extensions.
   *
   * Ties beyond the given sort columns keep an arbitrary row — pass a
   * unique final sort column (ids) for deterministic output, exactly as a

@@ -216,7 +216,7 @@ object PackCuration {
           Window.partitionBy(col("qid")).orderBy(col("jac").desc, col("nid"))))
         .filter(col("lr") <= 20).select(col("qid"), col("nid"))
       val emb = Tables.embeddings(s, d)
-      val nd = Similarity.nativeDot(s, _: Column, _: Column)
+      val nd = Similarity.nativeDot(_: Column, _: Column)
       val scored = cand
         .join(broadcast(emb.select(col("vec_id").as("qid"), col("embedding").as("qe"))), Seq("qid"))
         .join(emb.select(col("vec_id").as("nid"), col("embedding").as("ne")), Seq("nid"))
@@ -563,7 +563,7 @@ object PackCuration {
          |  CAST(sum(CASE WHEN pb = true_label THEN 1 ELSE 0 END) AS BIGINT) AS n_correct,
          |  round(CAST(sum(CASE WHEN pb = true_label THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 6) AS accuracy
          |FROM asg WHERE rn = 1 GROUP BY true_label ORDER BY label""".stripMargin) { (s, d) =>
-      val nd = Similarity.nativeDot(s, _: Column, _: Column)
+      val nd = Similarity.nativeDot(_: Column, _: Column)
       val cents = PackExt.persistedCentroids(s, d)
       val byBucket = cents.groupBy(col("label"))
         .agg(array_sort(collect_list(struct(col("i"), col("mean")))).as("c"))
@@ -725,7 +725,7 @@ object PackCuration {
          |  UNION ALL SELECT qid, nid, 2, score FROM s2
          |  UNION ALL SELECT qid, nid, 3, score FROM s3)
          |ORDER BY qid, rank""".stripMargin) { (s, d) =>
-      val nd = Similarity.nativeDot(s, _: Column, _: Column)
+      val nd = Similarity.nativeDot(_: Column, _: Column)
       def cosC(a: Column, b: Column) =
         round(nd(a, b) / (sqrt(nd(a, a)) * sqrt(nd(b, b))), 6)
       val emb = Tables.embeddings(s, d)
@@ -846,7 +846,7 @@ object PackCuration {
          |SELECT e.vec_id, p.j, round(${dotSql("e.embedding", "p.pe")}, 6) AS v
          |FROM embeddings e, planes p
          |ORDER BY e.vec_id, p.j""".stripMargin) { (s, d) =>
-      val nd = Similarity.nativeDot(s, _: Column, _: Column)
+      val nd = Similarity.nativeDot(_: Column, _: Column)
       val emb = Tables.embeddings(s, d)
       val planes = broadcast(emb.filter(col("vec_id") < 16)
         .select(col("vec_id").as("j"), col("embedding").as("pe")))

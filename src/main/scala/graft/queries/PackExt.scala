@@ -213,7 +213,7 @@ object PackExt {
       .select(col("vec_id").as("qid"), col("mx").as("qmx"), col("qv").as("qqv"))
     enc.join(broadcast(qs8), col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("nid"),
-        round(Similarity.nativeDot(s, col("qv"), col("qqv"))
+        round(Similarity.nativeDot(col("qv"), col("qqv"))
           * col("qmx") * col("mx") / lit(16129.0), 6).as("score"))
   }
 
@@ -1254,7 +1254,7 @@ object PackExt {
          |GROUP BY label, i ORDER BY label, i""".stripMargin) { (s, d) =>
       val e = Tables.embeddings(s, d)
       e.select(col("label"),
-          sqrt(Similarity.nativeDot(s, col("embedding"), col("embedding"))).as("nrm"),
+          sqrt(Similarity.nativeDot(col("embedding"), col("embedding"))).as("nrm"),
           posexplode(col("embedding")).as(Seq("pos", "v")))
         .groupBy(col("label"), (col("pos") + 1).as("i"))
         .agg(round(avg(col("v").cast("double") / col("nrm")), 6).as("pooled"))
@@ -1992,7 +1992,7 @@ object PackExt {
          |FROM q JOIN e ON q.doc_id = e.vec_id
          |WHERE q.quality >= 0.74 AND e.align >= 0.1
          |ORDER BY q.doc_id""".stripMargin) { (s, d) =>
-      val nd = Similarity.nativeDot(s, _: Column, _: Column)
+      val nd = Similarity.nativeDot(_: Column, _: Column)
       val q = Tables.documents(s, d)
         .select(col("doc_id"), TextAnalysis.qualityScore(col("text")).as("quality"))
         .filter(col("quality") >= 0.74)
@@ -2163,7 +2163,7 @@ object PackExt {
       val docs = Tables.documents(s, d)
       val learned = TextAnalysis.bpeTrain(docs, "text", rounds = 256)
         .map { case (a, b, _) => (a, b) }
-      val enc = trim(TextAnalysis.bpeEncodeTrained(s, col("text"), learned))
+      val enc = trim(TextAnalysis.bpeEncodeTrained(col("text"), learned))
       docs.select(col("doc_id"), enc.as("enc"))
         .select(col("doc_id"),
           when(length(col("enc")) === 0, lit(0L))
@@ -2241,7 +2241,7 @@ object PackExt {
       }
       val arrivals = docs.filter(col("doc_id") % 10 === 0)
       def encoded(tag: String, merges: Seq[(String, String)]) = {
-        val enc = trim(TextAnalysis.bpeEncodeTrained(s, col("text"), merges))
+        val enc = trim(TextAnalysis.bpeEncodeTrained(col("text"), merges))
         arrivals.select(col("doc_id"), enc.as("enc"))
           .select(lit(tag).as("vocab"), col("doc_id"),
             when(length(col("enc")) === 0, lit(0L))
@@ -2318,11 +2318,7 @@ object PackExt {
             val merges = s.read.schema(vocSchema).format("graft-atomic")
               .load(vocLoc).orderBy(col("rank")).collect()
               .map(r => (r.getString(1), r.getString(2))).toSeq
-            // register against the BATCH's session: foreachBatch hands a
-            // micro-batch-cloned session whose function registry does
-            // not share the outer session's temp functions
-            val enc = trim(TextAnalysis.bpeEncodeTrained(
-              batch.sparkSession, col("text"), merges))
+            val enc = trim(TextAnalysis.bpeEncodeTrained(col("text"), merges))
             batch.select(col("doc_id"), enc.as("enc"))
               .select(lit(ver.toInt).as("vocab_version"), col("doc_id"),
                 when(length(col("enc")) === 0, lit(0L))

@@ -394,12 +394,6 @@ object PackFunctions {
         |WHERE a.p_partkey < 60 AND b.p_partkey < 60
         |  AND levenshtein(a.p_name, b.p_name) <= 4
         |ORDER BY k1, k2""".stripMargin) { (s, d) =>
-      // install the value-preserving length-difference prefilter rule
-      // (graft.plans.LevenshteinPrefilter) so impossible pairs skip the
-      // edit-distance kernel
-      if (!s.experimental.extraOptimizations.contains(graft.plans.LevenshteinPrefilter))
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ graft.plans.LevenshteinPrefilter
       val p = Tables.part(s, d).filter($"p_partkey" < 60)
         .select($"p_partkey", $"p_name")
       val a = p.select($"p_partkey".as("k1"), $"p_name".as("n1"))

@@ -275,7 +275,6 @@ object PackParsers {
          |FROM it JOIN tot USING (nro_ticket)
          |ORDER BY nro_ticket, prod, p_total, categ""".stripMargin) { (s, d) =>
       import s.implicits._
-      graft.plans.TicketItemsGenerator.register(s)
       ticketTextsFiltered(s, d, col("l_orderkey") % 20 === 0)
         .createOrReplaceTempView("u3_gen_texts")
       s.sql("SELECT t.* FROM u3_gen_texts LATERAL VIEW graft_parse_ticket(text) t")

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.GraftBridge.{column, expression}
 import graft.ext.{BoundedCache, Similarity, TextDedup}
 import graft.schemas.Tables
 
@@ -239,7 +240,7 @@ object PackPipeline {
          |FROM qs LEFT JOIN hits h ON qs.qid = h.qid
          |ORDER BY qs.qid""".stripMargin) { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      val nd = Similarity.nativeDot(s, _: Column, _: Column)
+      val nd = Similarity.nativeDot(_: Column, _: Column)
       val q = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
       val corpus = emb.filter(col("vec_id") >= 8 && col("vec_id") < 500)
@@ -755,12 +756,12 @@ object PackPipeline {
       """SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
         |  CAST(count(*) AS BIGINT) AS n_rows
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, d) =>
-      graft.plans.BitmapAgg.register(s)
       Tables.events(s, d)
         .select(col("event_type"), shiftright(col("user_id"), 16).as("seg"),
           col("user_id").bitwiseAND(lit(65535L)).as("off"))
         .groupBy(col("event_type"), col("seg"))
-        .agg(expr("graft_bitmap_card(off)").as("card"),
+        .agg(column(graft.plans.BitmapAgg(expression(col("off"))).toAggregateExpression())
+            .as("card"),
           count(lit(1)).as("n"))
         .groupBy(col("event_type"))
         .agg(sum(col("card")).as("n_users"), sum(col("n")).as("n_rows"))

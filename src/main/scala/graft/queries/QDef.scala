@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.plans.GraftExtensions
 
 /** One declared operator query: the Spark program plus (when SQL-expressible)
   * the equivalent DuckDB oracle SQL run by the driver at sf0.01
@@ -37,7 +38,7 @@ object QDef {
       sys.env.getOrElse("SPARK_GRAFT_CKPT_CHECKSUM", "false"))
 
   private def tuned(fn: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
-    (s, d) => { applyPolicy(s); fn(s, d) }
+    (s, d) => { applyPolicy(s); GraftExtensions.install(s); fn(s, d) }
 
   def apply(name: String, oracle: String)(fn: (SparkSession, String) => DataFrame): QDef =
     QDef(name, tuned(fn), Some(oracle))

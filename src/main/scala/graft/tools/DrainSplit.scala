@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
 import org.apache.spark.sql.types._
@@ -21,13 +20,7 @@ import org.apache.spark.sql.types._
   * checkpoints within one run either way. */
 object DrainSplit {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(graft.Session.cpus, 200)
 
     val ckKey = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
     println(s"[drainsplit] $ckKey default = " +

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.queries.Pack
 
@@ -35,15 +34,7 @@ object InvarianceSweep {
     val sfDir = args.head
     val names =
       if (args.length > 1) args.tail.toSeq else Pack.all.map(_.name)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(graft.Session.cpus, 4)
 
     def fingerprint(name: String, partitions: Int): (Long, String) = {
       graft.ext.BoundedCache.clear()

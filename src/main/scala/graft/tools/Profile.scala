@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Stagewise profiler for the slow bench queries: isolates construction
@@ -11,12 +10,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq else Seq()
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(32)
     import spark.implicits._
 
     def time(n: String)(f: => Long): Unit = {
@@ -67,10 +61,9 @@ object Profile {
           .agg(count(lit(1))).as[Long].head()
       }
       time("minhash_sigs_typedagg") {
-        graft.plans.MinHashAgg.register(spark)
         docs.select($"doc_id", graft.ext.TextDedup.tokens($"text").as("toks"))
           .groupBy($"doc_id")
-          .agg(call_function("graft_minhash", $"toks").as("sig"))
+          .agg(expr("graft_minhash(toks)").as("sig"))
           .agg(count(lit(1))).as[Long].head()
       }
     }

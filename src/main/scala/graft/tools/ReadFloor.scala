@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Measures the per-construction cost of `spark.read.parquet(path)` —
   * file listing + footer schema inference happen on the DRIVER at
   * DataFrame construction, and the bench pays it on EVERY timed run of
@@ -11,11 +9,7 @@ import org.apache.spark.sql.SparkSession
 object ReadFloor {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(32)
     val tables = Seq("lineitem", "orders", "documents", "embeddings", "events")
     tables.foreach { t =>
       val path = s"$d/$t.parquet"

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scaling-exponent measurement between two fixture dirs (r8 VERDICT
   * next-round #1): `runMain graft.tools.ScaleCheck <dirA> <dirB>
   * <ratio> <name> [name...]`.
@@ -24,15 +22,7 @@ object ScaleCheck {
   def main(args: Array[String]): Unit = {
     val Array(dirA, dirB, ratioS, names @ _*) = args
     val ratio = ratioS.toDouble
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cpus)
 
     def cold(): Unit = {
       graft.ext.BoundedCache.clear()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.queries.Pack
 
 /** Partition-count-shape sweep (r12 VERDICT next-round #4): run queries
@@ -16,21 +15,13 @@ import graft.queries.Pack
   * shape): one untimed warmup at the FIRST shape only (JIT), then one
   * timed run per shape, cache-cleared like ScaleCheck so per-run frames
   * recompute. shuffle.partitions is a runtime conf, so shapes share the
-  * session (cores stay local[32] — the sweep isolates the SHUFFLE shape,
+  * session (cores stay at SPARK_GRAFT_CPUS — the sweep isolates the SHUFFLE shape,
   * 4d's core sweep isolates compute lanes). */
 object ShapeCheck {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, names @ _*) = args
     val shapes = Seq(4, 32, 128)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shapes.head)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(graft.Session.cpus, shapes.head)
 
     def cold(): Unit = {
       graft.ext.BoundedCache.clear()

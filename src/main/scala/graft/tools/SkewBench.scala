@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Salted-vs-plain measurement on an ADVERSARIAL key distribution (r8
@@ -34,14 +33,7 @@ object SkewBench {
     // variant ties (a result worth recording, not hiding); ×20 makes the
     // hot side ~1 GB-class and separates the plans
     val rep = if (args.length > 1) args(1).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cpus)
     import spark.implicits._
 
     val base = spark.read.parquet(s"$dir/skew_events.parquet")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Cost split for st10_stream_stream_join: the equivalent BATCH interval
@@ -11,15 +10,8 @@ import org.apache.spark.sql.functions._
 object St10Split {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.Session.cpus
+    val spark = graft.Session.local(cpus)
     import spark.implicits._
 
     def time(tag: String)(f: => Long): Unit = {
@@ -44,7 +36,7 @@ object St10Split {
 
     // live streaming at the session default vs a reduced state-partition
     // count (state stores per side scale with shuffle partitions)
-    Seq(cpus, "8").foreach { p =>
+    Seq(cpus, 8).foreach { p =>
       spark.conf.set("spark.sql.shuffle.partitions", p)
       time(s"stream-p$p") {
         graft.queries.Pack.byName("st10_stream_stream_join")

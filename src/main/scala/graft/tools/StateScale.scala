@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
 import org.apache.spark.sql.types._
@@ -29,19 +28,12 @@ import org.apache.spark.sql.types._
   * per-key state is maximal, the conservative direction). */
 object StateScale {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // state-partition count is PINNED at 8 for every measurement —
-      // SPARK_GRAFT_CPUS varies only the executor threads, so rows/bytes
-      // compare across scales with the store layout held constant
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // state-partition count is PINNED at 8 for every measurement —
+    // SPARK_GRAFT_CPUS varies only the executor threads, so rows/bytes
+    // compare across scales with the store layout held constant
+    val spark = graft.Session.local(graft.Session.cpus, 8)
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import spark.implicits._
 
     val tsSchema = StructType(Seq(StructField("user_id", LongType),

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Measures the STREAMING MACHINERY FLOOR the bench pays per st* query
   * (r12 VERDICT next-round #2): a minimal AvailableNow parquet→parquet
   * drain over a 3-row fixture, timed three ways —
@@ -18,14 +16,7 @@ import org.apache.spark.sql.SparkSession
   * read its bench number. Printed min-of-3 per mode, warm JVM. */
 object StreamFloor {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(graft.Session.cpus)
     import spark.implicits._
 
     val base = java.nio.file.Files.createTempDirectory("graft_floor").toString

@@ -1,10 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Time individual pack queries: `runMain graft.tools.TimeQuery <sfDir>
-  * <name> [name...]` — three runs each, all times printed (the bench's
-  * min-of-N hides warmup effects this tool exists to expose).
+/** Time pack queries: `runMain graft.tools.TimeQuery <sfDir> [name...]`
+  * — three runs each, all times printed (the bench's min-of-N hides
+  * warmup effects this tool exists to expose); no names times every
+  * declared query.
+  *
+  * SPARK_GRAFT_SHUFFLE decouples partition count from core count for the
+  * cores-only scaling sweep (SCALE.md §4j): fix the shuffle shape, vary
+  * only the executor-lane analog.
   *
   * SPARK_GRAFT_MATERIALIZE=1 switches the per-run action from `count()`
   * to a noop-sink write: `count()` lets Catalyst PRUNE every unprojected
@@ -17,20 +20,8 @@ import org.apache.spark.sql.SparkSession
 object TimeQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val names = args.tail.toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_SHUFFLE decouples partition count from core count for
-    // the cores-only scaling sweep (SCALE.md §4j): fix the shuffle shape,
-    // vary only the executor-lane analog
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val names = if (args.length > 1) args.tail.toSeq else graft.queries.Pack.all.map(_.name)
+    val spark = graft.Session.local(graft.Session.cpus, graft.Session.shuffle)
     val materialize = sys.env.get("SPARK_GRAFT_MATERIALIZE").contains("1")
     // the same box-speed probe the bench records carry — without it a
     // standalone re-time can't be compared against a BENCH_r{N} number

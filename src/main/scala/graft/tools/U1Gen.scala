@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.queries.PackParsers
 
@@ -8,12 +7,7 @@ import graft.queries.PackParsers
   * graft_parse_ticket Generator (LATERAL VIEW). */
 object U1Gen {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.TicketItemsGenerator.register(spark)
+    val spark = graft.Session.local(32)
     val d = "/root/testdata/sf0.1"
     def time(n: String)(f: => Long): Unit = {
       val t0 = System.nanoTime; val r = f

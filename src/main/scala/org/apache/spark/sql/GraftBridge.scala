@@ -1,16 +1,26 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Minimal private[sql] bridge: build a DataFrame from a custom logical
-  * plan node (graft.plans.TopKPerKey). This is the standard extension
-  * seam for libraries that add whole operators — the only alternative is
-  * routing every custom node through SQL text. No Spark internals are
-  * modified; this file merely lives in the org.apache.spark.sql package
-  * to reach `Dataset.ofRows`. */
+  * plan node (graft.plans.TopKPerKey), and a Column from a custom
+  * expression. This is the standard extension seam for libraries that
+  * add whole operators — the only alternative is routing every custom
+  * node through SQL text or the session's function registry. No Spark
+  * internals are modified; this file merely lives in the
+  * org.apache.spark.sql package to reach `Dataset.ofRows` and
+  * `ExpressionUtils`. */
 object GraftBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** A Column over a Catalyst expression: resolves in whatever plan it
+    * lands in, with no function-registry lookup. */
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+
+  /** The Catalyst expression behind a Column, for wrapping in [[column]]. */
+  def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
   /** Drain the async listener bus — QueryExecutionListener events are
     * posted asynchronously, so plan-inspection tests that accumulate

@@ -88,7 +88,7 @@ object BpeProps extends Properties("bpe") {
         .toDF("id", "text")
       val both = df.select(
           TextAnalysis.bpeEncode(col("text"), merges).as("chain"),
-          TextAnalysis.bpeEncodeTrained(s, col("text"), merges).as("native"))
+          TextAnalysis.bpeEncodeTrained(col("text"), merges).as("native"))
         .collect()
       both.forall(r => r.getString(0) == r.getString(1))
     }
@@ -97,7 +97,6 @@ object BpeProps extends Properties("bpe") {
     Prop.secure {
       val s = spark
       import s.implicits._
-      graft.plans.BpeApplyMerges.register(s)
       val viaSql = s.sql(
         "SELECT graft_bpe_apply('t h e ', 't h,th e') AS e").head.getString(0)
       val nullText = s.sql(

@@ -305,7 +305,7 @@ class CurationSpec extends AnyFunSuite {
       }.maxBy { case (s, l) => (s, -l) }._2
     }.toMap
     // recompute the engine's top-1 for the same sample through the query machinery
-    val nd0 = graft.ext.Similarity.nativeDot(spark, _, _)
+    val nd0 = graft.ext.Similarity.nativeDot(_, _)
     val byBucket = graft.ext.Similarity.centroids(e, "label")
       .groupBy($"label")
       .agg(array_sort(collect_list(struct($"i", $"mean"))).as("c"))

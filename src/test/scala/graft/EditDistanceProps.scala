@@ -138,7 +138,6 @@ object EditDistanceProps extends Properties("editdistance") {
   private def compare(mode: String, wholeStage: Boolean,
                       rs: List[(Option[Array[Byte]], Option[Array[Byte]])]): Prop = {
     import spark.implicits._
-    EditDistance.register(spark)
     val conf = spark.conf
     val keys = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
     val saved = keys.map(k => k -> conf.getOption(k))

@@ -52,7 +52,6 @@ object ExprNullProps extends Properties("exprnull") {
   property("graft_simhash(arr) == graft_simhash(arr without nulls); no voters -> 0; NULL arr -> NULL") =
     Prop.forAll(toksGen) { toks =>
       import spark.implicits._
-      graft.plans.SimHash64.register(spark)
       val df = Seq((toks, toks.flatten)).toDF("with_nulls", "dense")
         .selectExpr("graft_simhash(with_nulls) AS a", "graft_simhash(dense) AS b")
       val r = df.head()
@@ -75,7 +74,6 @@ object ExprNullProps extends Properties("exprnull") {
   property("graft_shingles == sliding-window model (nulls read as empty string)") =
     Prop.forAll(shingleGen) { case (toks, n, dist) =>
       import spark.implicits._
-      graft.plans.ShingleArray.register(spark)
       val got = Seq(Tuple1(toks)).toDF("t")
         .selectExpr(s"graft_shingles(t, $n, $dist) AS g")
         .head().getSeq[String](0).toList
@@ -94,7 +92,6 @@ object ExprNullProps extends Properties("exprnull") {
   property("graft_bitmap_card == COUNT(DISTINCT non-null); all-null group -> 0") =
     Prop.forAll(bitmapGen) { offs =>
       import spark.implicits._
-      graft.plans.BitmapAgg.register(spark)
       val card = offs.toDF("off").repartition(4)
         .agg(expr("graft_bitmap_card(off)")).head().getLong(0)
       Prop(card == offs.flatten.distinct.size.toLong) :| s"card=$card"
@@ -103,7 +100,6 @@ object ExprNullProps extends Properties("exprnull") {
   property("graft_bitmap_card rejects out-of-domain offsets loudly") =
     Prop.forAll(Gen.oneOf(-1L, 65536L, 1L << 40)) { bad =>
       import spark.implicits._
-      graft.plans.BitmapAgg.register(spark)
       val e = Prop.throws(classOf[Throwable]) {
         Seq(bad).toDF("off").agg(expr("graft_bitmap_card(off)")).head()
       }
@@ -153,13 +149,16 @@ object ExprNullProps extends Properties("exprnull") {
     d(a.length)(b.length)
   }
 
+  // both placements of the rule: injected at build (the factory session)
+  // and appended to extraOptimizations by install (a bare session)
+  private lazy val installedBare = {
+    val s = TestSpark.bare()
+    graft.plans.GraftExtensions.install(s)
+    s
+  }
+
   property("levenshtein<=k filter with the prefilter rule == model (NULL operands drop)") =
     Prop.forAll(levGen) { case (pairs, k) =>
-      import spark.implicits._
-      if (!spark.experimental.extraOptimizations.contains(graft.plans.LevenshteinPrefilter))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ graft.plans.LevenshteinPrefilter
-      graft.plans.EditDistance.register(spark)
       val ids = pairs.zipWithIndex.map { case ((a, b), i) => (i.toLong, a, b) }
       // SQL 3VL: a NULL operand makes the predicate UNKNOWN -> row drops
       val expected = ids.collect {
@@ -168,13 +167,19 @@ object ExprNullProps extends Properties("exprnull") {
       // Spark's levenshtein and the engine's kernel both gain the guard;
       // an RDD source keeps the filter out of local-relation folding, so
       // the guarded predicate is what actually runs
-      Prop.all(Seq("levenshtein", "graft_levenshtein").map { fn =>
-        val df = spark.sparkContext.parallelize(ids, 2).toDF("id", "a", "b")
+      val checks = for {
+        (tag, session) <- Seq("factory" -> spark, "installed" -> installedBare)
+        fn <- Seq("levenshtein", "graft_levenshtein")
+      } yield {
+        import session.implicits._
+        val df = session.sparkContext.parallelize(ids, 2).toDF("id", "a", "b")
           .filter(expr(s"$fn(a, b) <= $k"))
         val guarded = df.queryExecution.optimizedPlan.toString.contains("abs(")
         val got = df.select(col("id")).as[Long].collect().toSet
-        Prop(guarded && got == expected) :| s"$fn: guarded=$guarded got=$got expected=$expected"
-      }: _*)
+        Prop(guarded && got == expected) :|
+          s"$tag $fn: guarded=$guarded got=$got expected=$expected"
+      }
+      Prop.all(checks: _*)
     }
 
   // ---- asof/band joins: SQL join semantics under NULL keys AND times ---
@@ -285,7 +290,6 @@ object ExprNullProps extends Properties("exprnull") {
   property("graft_dot throws the named density error on a NULL element") =
     Prop.forAll(Gen.choose(0, 2)) { at =>
       import spark.implicits._
-      graft.plans.DotProduct.register(spark)
       val v: Seq[Option[Double]] = Seq(Some(1.0), Some(2.0), Some(3.0))
       val sparse = v.updated(at, Option.empty[Double])
       val caught = try {
@@ -303,7 +307,6 @@ object ExprNullProps extends Properties("exprnull") {
   property("graft_dot throws the named dimension error on a length mismatch") =
     Prop.forAll(Gen.choose(1, 4), Gen.choose(1, 4)) { (la, lb) =>
       import spark.implicits._
-      graft.plans.DotProduct.register(spark)
       val a = Seq.tabulate(la)(_.toDouble)
       val b = Seq.tabulate(lb)(i => (i + 1).toDouble)
       val run = try {
@@ -325,7 +328,6 @@ object ExprNullProps extends Properties("exprnull") {
     Prop.forAll(Gen.listOfN(4, Gen.choose(-3.0, 3.0)),
                 Gen.listOfN(4, Gen.choose(-3.0, 3.0))) { (a, b) =>
       import spark.implicits._
-      graft.plans.DotProduct.register(spark)
       val got = Seq((a, b)).toDF("a", "b").selectExpr("graft_dot(a, b) AS d")
         .head().getDouble(0)
       val expected = a.zip(b).map { case (x, y) => x * y }

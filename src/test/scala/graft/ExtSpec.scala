@@ -943,7 +943,6 @@ class ExtSpec extends AnyFunSuite {
   }
 
   test("graft_simhash input contract: type check, null elements, empty array") {
-    graft.plans.SimHash64.register(TestSpark.spark)
     // non-ARRAY<STRING> argument → analysis-time error, not a runtime CCE
     val err = intercept[org.apache.spark.sql.AnalysisException] {
       TestSpark.spark.sql("SELECT graft_simhash(array(1, 2))").collect()

@@ -115,7 +115,6 @@ object OpsProps extends Properties("ops") {
   property("segmented graft_bitmap_card sums == count(DISTINCT) on random ids") =
     Prop.forAll(bitmapGen) { case (ids, parts) =>
       import spark.implicits._
-      graft.plans.BitmapAgg.register(spark)
       val df = ids.map(id => (id % 2, id)).toDF("k", "id").repartition(parts)
       val viaBitmap = df
         .selectExpr("k", "id >> 16 AS seg", "id & 65535 AS off")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.io.Warehouse
 import graft.ops.Ops
-import graft.plans.{DotProduct, GraftExtensions}
+import graft.plans.GraftExtensions
 
 /** The explicit scale tools: salted skew join, bucketed warehouse layout,
   * custom-function registration. */
@@ -41,7 +41,6 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("graft_dot is callable from SQL after registration; extension class applies cleanly") {
-    DotProduct.register(spark)
     val v = spark.sql("SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")
       .head().getDouble(0)
     assert(v == 11.0)
@@ -51,7 +50,6 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("graft_shingles is callable from SQL; literal-argument contract enforced") {
-    graft.plans.ShingleArray.register(spark)
     val r = spark.sql(
       """SELECT graft_shingles(split('a b a b c', ' '), 2, true) AS d,
         |       graft_shingles(split('a b a', ' '), 2, false) AS p""".stripMargin)
@@ -66,7 +64,6 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("graft_minhash typed aggregate equals the wide groupBy signature form") {
-    graft.plans.MinHashAgg.register(spark)
     val docs = Seq((0L, "the quick brown fox"), (1L, "spark parquet engines"))
       .toDF("doc_id", "text")
     docs.createOrReplaceTempView("mh_docs")
@@ -81,7 +78,6 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("graft_bitmap_card equals exact count(DISTINCT) and is partition-shape-proof") {
-    graft.plans.BitmapAgg.register(spark)
     // ids crafted to span segments and repeat across partitions
     val ids = (0L until 500L).flatMap(i => Seq(i * 131L % 200000L)) ++
       (0L until 300L).map(i => i * 131L % 200000L) // repeats
@@ -113,7 +109,6 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("graft_parse_ticket generator equals the typed-flatMap parser via LATERAL VIEW") {
-    graft.plans.TicketItemsGenerator.register(spark)
     val text = graft.parsers.TicketParser.render(42L, "05/03/24", 100.0, Seq(
       ("Bebidas", "Agua", 2L, 0.0, 850.50, 1701.00),
       ("Carniceria", "Lomo", 1L, 1.25, 8000.00, 10000.00)))
