@@ -270,18 +270,17 @@ object PackCore {
         .agg(sum(when($"o_orderdate" > $"wm", 1).otherwise(0)).as("n_after"))
     },
 
-    // ST3 (batch form) — deterministic keep-first dedup:
-    // groupBy + min/min_by instead of dropDuplicates so the result is
-    // stable; the true streaming dropDuplicates-with-state lives in
-    // graft.streaming (tested in StreamingSpec).
+    // ST3 (batch form) — deterministic keep-first dedup through
+    // Ops.dedupKeepFirst; the true streaming dropDuplicates-with-state
+    // lives in graft.streaming (tested in StreamingSpec).
     QDef("st3_dedup_state",
       """SELECT user_id, event_type, min(event_id) AS event_id,
         |       arg_min(value, event_id) AS value
         |FROM events GROUP BY user_id, event_type
         |ORDER BY user_id, event_type""".stripMargin) { (s, d) =>
-      Tables.events(s, d)
-        .groupBy($"user_id", $"event_type")
-        .agg(min($"event_id").as("event_id"), min_by($"value", $"event_id").as("value"))
+      Ops.dedupKeepFirst(
+          Tables.events(s, d).select($"user_id", $"event_type", $"event_id", $"value"),
+          Seq("user_id", "event_type"), "event_id")
         .orderBy($"user_id", $"event_type")
     },
 
@@ -408,7 +407,7 @@ object PackCore {
       def drain(): Unit = {
         val ds = graft.streaming.StreamingOps.fileSource(s, in, sch)
           .as(org.apache.spark.sql.Encoders.product[graft.streaming.StreamingOps.EventRow])
-        graft.streaming.StreamingOps.runningTotalsV2(ds)
+        graft.streaming.StreamingOps.runningTotals(ds)
           .writeStream.outputMode("update")
           .option("checkpointLocation", ckpt)
           .foreachBatch {
@@ -1170,13 +1169,14 @@ object PackCore {
     * batch. Production discipline is the same — size a streaming job's
     * shuffle partitions to its throughput, not the cluster width (state
     * repartitioning requires a new checkpoint, so jobs pin this at
-    * deploy). St10Split measured the stream-stream join at 5.6 s (32
-    * partitions) vs 2.2 s (8) on identical data; the batch-equivalent
-    * join is 0.45 s. Restores the previous value on exit; results are
-    * partition-count invariant (pinned by PartitionInvarianceSpec). */
+    * deploy). The stream-stream join measured 5.6 s at 32 partitions vs
+    * 2.2 s at 8 on identical data; the batch-equivalent join is 0.45 s
+    * (NOTES.md, "Measurement harness"). Restores the previous value on
+    * exit; results are partition-count invariant (pinned by
+    * PartitionInvarianceSpec). */
   /** Scoped shuffle-partition override for the streaming drains. The
-    * fixture dial is 4 (was 8 through r16): DrainFloor measured the
-    * stateful drain floor as per-state-partition RocksDB machinery
+    * fixture dial is 4 (was 8 through r16): a partition sweep measured
+    * the stateful drain floor as per-state-partition RocksDB machinery
     * (2.04 s at 8 → 1.58 s at 4 for an identical 100-row drain), and
     * the declared results are partition-count-invariant by hash check.
     * At deployment scale this same dial goes to thousands — SCALE.md
@@ -1197,7 +1197,8 @@ object PackCore {
     * RocksDB snapshot — the production discipline for RocksDB state at
     * scale (snapshot cost grows with STATE size, changelog with BATCH
     * size), and measured locally it shaves ~11% off the per-drain floor
-    * (graft.tools.DrainFloor: 0.84 → 0.75 s at 4 state partitions).
+    * (0.84 → 0.75 s at 4 state partitions; NOTES.md, "Measurement
+    * harness").
     * The state data source (st11/st21) reconstructs versions from
     * snapshot + changelogs, so the reader surface is unchanged. */
   private[queries] def withRocksDb[T](s: SparkSession)(body: => T): T = {

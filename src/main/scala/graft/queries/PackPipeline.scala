@@ -725,8 +725,9 @@ object PackPipeline {
       }
       // outer joins keep FOUR state stores per partition per side —
       // partition-count is the per-batch commit bill, so size it to the
-      // fixture's state volume (St10Split analysis; at deployment scale
-      // this is thousands, sized the same way): 8→4 cuts ~0.5 s/run here
+      // fixture's state volume (NOTES.md, "Measurement harness"; at
+      // deployment scale this is thousands, sized the same way): 8→4
+      // cuts ~0.5 s/run here
       PackCore.withStreamPartitions(s, 4) {
         PackCore.stageArrival(vin, views, "b1")
         PackCore.stageArrival(cin, clicks, "b1")

@@ -22,20 +22,16 @@ object QDef {
     * Streaming checkpoint FILE CHECKSUMS (new in Spark 4.1, default on)
     * write one sidecar checksum file per checkpoint file — at fixture
     * scale that is +16 synced small-file creates per stateful drain
-    * (graft.tools.DrainSplit: 50 → 34 checkpoint files, fresh tws drain
-    * 1.32 → 1.15 s), and at 100 TB it doubles the checkpoint store's
+    * (50 → 34 checkpoint files, fresh tws drain 1.32 → 1.15 s; the A/B is
+    * recorded in OPTIMIZATION_r18.md §4, indexed in NOTES.md "Measurement
+    * harness"), and at 100 TB it doubles the checkpoint store's
     * PUT/LIST rate for a verification that is advisory (the manager
     * proceeds with a WARN when a checksum file is absent — recovery and
     * the state data source read snapshots/changelogs identically either
     * way). The declared restart queries re-drain their own checkpoints
-    * with the policy applied consistently, so no mixed-mode reads occur.
-    * SPARK_GRAFT_CKPT_CHECKSUM=true restores the upstream default (the
-    * controlled A/B dial, and the opt-back for deployments that want
-    * end-to-end checksum verification over a store without its own
-    * integrity layer). */
+    * with the policy applied consistently, so no mixed-mode reads occur. */
   private def applyPolicy(s: SparkSession): Unit =
-    s.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-      sys.env.getOrElse("SPARK_GRAFT_CKPT_CHECKSUM", "false"))
+    s.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", false)
 
   private def tuned(fn: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
     (s, d) => { applyPolicy(s); GraftExtensions.install(s); fn(s, d) }

@@ -116,8 +116,8 @@ object Tables {
     * `spark.read.parquet(path)` INFERS the schema at every DataFrame
     * construction — a driver-side footer sweep that runs as its own tiny
     * Spark job and costs ~55-80 ms per call at fixture scale (measured,
-    * graft.tools.ReadFloor: construct 55-83 ms inferred vs 4-7 ms with an
-    * explicit schema). The pack constructs each query 3-4× per bench pass
+    * NOTES.md "Measurement harness": construct 55-83 ms inferred vs 4-7 ms
+    * with an explicit schema). The pack constructs each query 3-4× per bench pass
     * (warmup + timed runs), so inference alone taxed every query's timed
     * window by 50-200 ms. Production discipline is the same: catalog
     * tables pin their schema — a 100 TB table is never re-inferred per

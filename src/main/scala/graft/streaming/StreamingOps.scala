@@ -236,9 +236,9 @@ object StreamingOps {
       s"l.$key = r.$key AND r.$rightTs > l.$leftTs - INTERVAL $lag AND r.$rightTs <= l.$leftTs"))
   }
 
-  /** Per-user running state via mapGroupsWithState — the custom-state
-    * surface (KeyValueGroupedDataset) for aggregations the built-in
-    * operators can't express. State: (count, sum) per key. */
+  /** Input and output rows of [[runningTotals]]: per-user running state
+    * for an aggregation the built-in operators can't express. State:
+    * (count, sum) per key. */
   final case class EventRow(event_id: Long, user_id: Long, value: Double)
   final case class UserTotal(user_id: Long, n: Long, total: Double)
 
@@ -311,21 +311,7 @@ object StreamingOps {
         s"${e.id} ${e.exception.getOrElse("")}")
   }
 
-  def runningTotals(ds: Dataset[EventRow]): Dataset[UserTotal] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.groupByKey(_.user_id)
-      .mapGroupsWithState[(Long, Double), UserTotal](GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[EventRow], state: GroupState[(Long, Double)]) =>
-          val (n0, s0) = state.getOption.getOrElse((0L, 0.0))
-          var n = n0; var s = s0
-          rows.foreach { r => n += 1; s += r.value }
-          state.update((n, s))
-          UserTotal(uid, n, s)
-      }
-  }
-
-  /** Same running totals through the Spark 4 arbitrary-state v2 API
+  /** Per-user running totals through the Spark 4 arbitrary-state v2 API
     * (`transformWithState` + `StatefulProcessor`): typed named state
     * handles with per-state TTL, timers, and multiple state variables per
     * key — the successor to mapGroupsWithState for long-lived state.
@@ -349,7 +335,7 @@ object StreamingOps {
     }
   }
 
-  def runningTotalsV2(ds: Dataset[EventRow]): Dataset[UserTotal] = {
+  def runningTotals(ds: Dataset[EventRow]): Dataset[UserTotal] = {
     val spark = ds.sparkSession
     import spark.implicits._
     ds.groupByKey(_.user_id)

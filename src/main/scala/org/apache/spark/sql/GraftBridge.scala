@@ -22,9 +22,10 @@ object GraftBridge {
   /** The Catalyst expression behind a Column, for wrapping in [[column]]. */
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** Drain the async listener bus — QueryExecutionListener events are
-    * posted asynchronously, so plan-inspection tests that accumulate
-    * across executions must flush before asserting. */
+  /** Drain the async listener bus — Spark, query-execution and streaming
+    * listener events are all delivered asynchronously, so TimeQuery
+    * drains after each phase before reading its counters, and
+    * plan-inspection tests flush before asserting. */
   def waitListenerBusEmpty(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 

@@ -101,14 +101,16 @@ class SessionSpec extends AnyFunSuite {
     }
   }
 
-  test("src/main has one session builder and one extension registration point") {
+  /** Every `src/main` Scala file, keyed by its path under `src/main/scala`. */
+  private lazy val text: Map[String, String] = {
     val root = Paths.get("src/main/scala")
-    val text: Map[String, String] = {
-      val walk = Files.walk(root)
-      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
-        .map(p => root.relativize(p).toString -> Files.readString(p)).toMap
-      finally walk.close()
-    }
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString -> Files.readString(p)).toMap
+    finally walk.close()
+  }
+
+  test("src/main has one session builder and one extension registration point") {
     assert(text.nonEmpty)
     def filesWith(needle: String): Set[String] =
       text.collect { case (p, t) if t.contains(needle) => p }.toSet
@@ -121,5 +123,11 @@ class SessionSpec extends AnyFunSuite {
     val installs = text.toSeq.filter(_._1 != ext)
       .map(_._2.split("GraftExtensions.install\\(", -1).length - 1).sum
     assert(installs == 3, "install is called from QDef.tuned, Ops.bandJoin and Ops.topKPerKey")
+  }
+
+  test("src/main reads exactly the five SPARK_GRAFT_* dials") {
+    val dial = "\"SPARK_GRAFT_([A-Z0-9_]+)\"".r
+    val read = text.values.flatMap(t => dial.findAllMatchIn(t).map(_.group(1))).toSet
+    assert(read == Set("CPUS", "SHUFFLE", "SF_DIR", "PLAN_DIR", "PLAN_TAG"))
   }
 }

@@ -182,22 +182,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(errs.count() >= 1 && errs.columns.contains("error_class"))
   }
 
-  test("mapGroupsWithState: running totals accumulate across micro-batches") {
-    val in = tmp("graft_in5"); val ckpt = tmp("graft_ckpt5")
-    stageBatch(in, Seq((1L, "2024-01-01 10:00:00", 7L, 5.0),
-      (2L, "2024-01-01 10:01:00", 7L, 7.0)), "b1")
-    val src = StreamingOps.fileSource(spark, in, schema)
-      .select($"event_id", $"user_id", $"value").as[StreamingOps.EventRow]
-    val q = StreamingOps.runningTotals(src)
-      .writeStream.format("memory").queryName("totals_out").outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val row = spark.sql("SELECT n, total FROM totals_out WHERE user_id = 7 ORDER BY n DESC LIMIT 1")
-      .as[(Long, Double)].head()
-    assert(row == ((2L, 12.0)))
-  }
-
   test("K6: cleanSource=archive moves consumed files aside") {
     val in = tmp("graft_in6"); val arch = tmp("graft_arch6"); val ckpt = tmp("graft_ckpt6")
     stageBatch(in, Seq((1L, "2024-01-01 10:00:00", 1L, 1.0)), "b1")
@@ -257,7 +241,7 @@ class StreamingSpec extends AnyFunSuite {
         val ds = StreamingOps.fileSource(spark, in, schema)
           .selectExpr("event_id", "user_id", "value")
           .as[StreamingOps.EventRow]
-        val q = StreamingOps.runningTotalsV2(ds)
+        val q = StreamingOps.runningTotals(ds)
           .writeStream.outputMode("update")
           .option("checkpointLocation", ckpt)
           .foreachBatch { (b: org.apache.spark.sql.Dataset[StreamingOps.UserTotal], _: Long) =>

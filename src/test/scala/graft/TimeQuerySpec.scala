@@ -1,0 +1,110 @@
+package graft
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.{GraftBridge, ListenerCensus}
+import org.scalatest.funsuite.AnyFunSuite
+import graft.tools.TimeQuery
+
+/** TimeQuery's per-layer record: one parseable line per (query, run) with
+  * the three phases and their counters, attributed to the right phase,
+  * and no listener left behind on the session it measured. */
+class TimeQuerySpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+  private val phases = Seq("construct", "count", "noop")
+  private val names = Seq("q1_agg", "st4_stream_tumbling_live")
+
+  /** Listeners on the context before the run, the record, and the
+    * listeners after. The session's query-execution and streaming buses
+    * are created first (each is registered on first use), so the census
+    * before the run already holds them. A listener that holds up every
+    * stage-completed event makes delivery lag behind each phase: a phase
+    * counts its last stage only if the record waits for delivery. */
+  private lazy val (before, lines, after) = {
+    val noop = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = ()
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(noop)
+    spark.listenerManager.unregister(noop)
+    spark.streams
+    val lag = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = Thread.sleep(200)
+    }
+    spark.sparkContext.addSparkListener(lag)
+    try {
+      val before = ListenerCensus.of(spark)
+      val lines = TimeQuery.record(spark, TestSpark.sf0001, names, 1)
+      (before, lines, ListenerCensus.of(spark))
+    } finally spark.sparkContext.removeSparkListener(lag)
+  }
+  private lazy val json: Seq[JsonNode] = lines.map(new ObjectMapper().readTree(_))
+  private def recordOf(name: String): JsonNode =
+    json.find(j => j.has("query") && j.get("query").asText == name).get
+
+  /** Every numeric leaf under `n`, by dotted path. */
+  private def leaves(n: JsonNode, path: String): Seq[(String, Double)] =
+    if (n.isNumber) Seq(path -> n.asDouble)
+    else n.properties.asScala.toSeq.flatMap(e => leaves(e.getValue, s"$path.${e.getKey}"))
+
+  test("record: a calib line, then one line per (query, run) with three phases of the same counters") {
+    assert(lines.size == 1 + names.size)
+    assert(json.head.get("calib_s").asDouble > 0)
+    assert(json.tail.map(_.get("query").asText) == names)
+    val counterSets = for (j <- json.tail; ph <- phases) yield {
+      assert(j.get("run").asInt == 1)
+      val ls = leaves(j.get(ph), ph)
+      ls.foreach { case (k, v) => assert(v >= 0, s"${j.get("query")} $k") }
+      ls.map(_._1.stripPrefix(ph))
+    }
+    assert(counterSets.distinct.size == 1)
+    assert(counterSets.head.contains(".stream_ms.triggerExecution"))
+  }
+
+  test("record: a batch query's jobs land in count and noop, with no streaming batches") {
+    val q1 = recordOf("q1_agg")
+    for (ph <- Seq("count", "noop")) {
+      def n(k: String) = q1.get(ph).get(k).asDouble
+      // every job of q1 runs at least one stage, every stage a task
+      assert(n("jobs") >= 1 && n("stages") >= n("jobs") && n("tasks") >= n("stages"), q1.get(ph))
+    }
+    for (ph <- phases) assert(q1.get(ph).get("stream_batches").asDouble == 0, ph)
+  }
+
+  test("record: a live streaming query's batches land in construct") {
+    val c = recordOf("st4_stream_tumbling_live").get("construct")
+    assert(c.get("stream_queries").asDouble >= 1)
+    assert(c.get("stream_batches").asDouble >= 1)
+    assert(c.get("stream_ms").get("triggerExecution").asDouble > 0)
+  }
+
+  test("record: the run leaves no listener on the session or its context") {
+    assert(lines.nonEmpty)
+    val onBuses = before.keySet.flatMap(b => after.getOrElse(b, Set.empty) -- before(b))
+    assert(onBuses.isEmpty, onBuses.map(_.getClass.getName))
+    // A streaming query runs on a clone of the session, whose own buses
+    // Spark leaves on the context (with a copy of the session's
+    // query-execution listeners) until the clone is collected: new buses
+    // are not the run's, a new listener of any other class is.
+    val added = (after.keySet -- before.keySet).map(_.getClass.getName)
+    assert(added.forall(_.startsWith("org.apache.spark.sql.")), added)
+  }
+
+  test("record: an unknown query name fails naming it, before any query runs") {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    GraftBridge.waitListenerBusEmpty(spark)
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      val e = intercept[IllegalArgumentException](
+        TimeQuery.record(spark, TestSpark.sf0001, Seq("q1_agg", "no_such_query"), 1))
+      assert(e.getMessage.contains("no_such_query"))
+      GraftBridge.waitListenerBusEmpty(spark)
+      assert(jobs.get == 0)
+    } finally spark.sparkContext.removeSparkListener(counter)
+  }
+}
