@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -10,8 +10,9 @@ import org.apache.spark.sql.types.DecimalType
   *
   * Scale design: every superstep is one edge-keyed equi-join + one
   * dst-keyed aggregation — the Pregel contribution-exchange pattern that
-  * partitions by vertex id at any scale. Ranks persist per superstep so
-  * the lineage (and recomputation) never grows with iteration count.
+  * partitions by vertex id at any scale. The loops run through
+  * [[Fixpoint]], which caches and materializes their steps, so the
+  * lineage (and recomputation) never grows with iteration count.
   */
 object Graph {
 
@@ -21,13 +22,11 @@ object Graph {
     * broadcast near 100 MB — the same code path is then the plan at any
     * scale, degrading to a shuffled join instead of OOMing the driver. */
   val RankBroadcastMaxNodesKey = "graft.graph.rankBroadcastMaxNodes"
-  private val RankBroadcastMaxNodesDefault = 4000000L
 
-  // The returned ranks stay persisted (callers consume them lazily), but
-  // repeated runs in one session (bench re-executions, profile sweeps) must
-  // not accumulate cached RDDs — each run evicts the previous run's result.
-  private val lastRanks =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
+  /** The broadcast gate: [[RankBroadcastMaxNodesKey]] read from `spark`'s
+    * conf, 4M when unset. */
+  def broadcastGate(spark: SparkSession): Long =
+    spark.conf.get(RankBroadcastMaxNodesKey, "4000000").toLong
 
   /** Damped PageRank over an undirected graph, `iters` fixed supersteps.
     *
@@ -50,120 +49,68 @@ object Graph {
     * pairs are symmetrized and de-duplicated here.
     */
   def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85,
-               teleport: Double = 0.15): DataFrame = {
-    // AQE off for the duration of the fixed-point loop: a Pregel loop's
-    // value is the ITERATION-STABLE partitioning (the cached hash(src)
-    // frame feeds every superstep), and AQE's per-stage re-planning +
-    // runtime partition re-coalescing both fight that reuse and pay
-    // ~0.1 s of re-optimization per micro-job (measured 4.4 → 3.9 s for
-    // 5 supersteps at sf0.1). Skew is handled structurally (size-gated
-    // rank broadcast; degree is folded in, never re-joined), which is
-    // why the loop doesn't need AQE's skew-join either. Restored on
-    // exit; the session conf is read per-action so only this loop is
-    // affected.
-    val sess = edges.sparkSession
-    val aqePrev = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    try pageRankLoop(edges, iters, damping, teleport)
-    finally sess.conf.set("spark.sql.adaptive.enabled", aqePrev)
-  }
+               teleport: Double = 0.15): DataFrame =
+    Fixpoint.run("Graph.pageRank", edges.sparkSession) { loop =>
+      // NULL-endpoint edges drop (the graph family's hygiene rule —
+      // triangleCount's canonical filter and CC's symmetrize do the same).
+      // Without it one dirty edge MINTS a NULL rank sink that receives
+      // mass but never redistributes, distorting every real node's rank
+      // (measured: a 3-node chain's center fell 0.58 → 0.28 from one
+      // NULL-endpoint edge) and surfacing a (null, rank) output row.
+      // Symmetrize by EXPLODING each edge into both directions (r17
+      // optimization round): the old union-of-two-selects read the input
+      // twice, which forced a persist of the raw edge frame just to keep
+      // an expensive upstream derivation (a fact-table join) from running
+      // twice — the explode form scans it exactly once, so that persist,
+      // its materializing count(), and its unpersist all go away.
+      // Then fold the out-degree into the edge row with ONE window pass
+      // (outdeg never changes, so joining it per superstep — or deriving
+      // it with a groupBy+join, which recomputes the edge set — is wasted
+      // work); the cached frame keeps the window's hash(src) partitioning.
+      val withDeg = loop.keep(loop.bind(edges)
+        .filter(col("src").isNotNull && col("dst").isNotNull)
+        .select(explode(array(
+          struct(col("src"), col("dst")),
+          struct(col("dst").as("src"), col("src").as("dst")))).as("_e"))
+        .select(col("_e.src").as("src"), col("_e.dst").as("dst"))
+        .distinct()
+        .withColumn("outdeg", count(lit(1)).over(
+          org.apache.spark.sql.expressions.Window.partitionBy(col("src")))))
+      val nodes = withDeg.select(col("src").as("node")).distinct()
+      val n = nodes.count() // scalar graph size, not a data collect
+      // empty graph: no nodes, no ranks (avoid 1/0 literals)
+      if (n == 0) nodes.select(col("node"), lit(0.0).as("rank"))
+      else {
+        val maxBcastNodes = broadcastGate(edges.sparkSession)
+        // Under the broadcast gate the superstep's ONLY exchange is the
+        // dst-keyed contribution aggregation (the rank join broadcasts, the
+        // edge side streams) — pre-partition the cached edge frame by dst
+        // ONCE so hash(dst) satisfies every superstep agg's distribution and
+        // the whole loop runs exchange-free (guide §2.4: operations keyed
+        // the same way share one exchange; r18 optimization round). One
+        // edge-set shuffle at setup replaces `iters` edge-set shuffles. Past
+        // the gate the rank join itself is src-keyed and shuffled, so dst
+        // partitioning would buy nothing there — the window's hash(src)
+        // frame stays. withDeg stays cached until exit: the initial rank
+        // frame derives from it and is first evaluated inside the first
+        // superstep's job.
+        val edgeFrame =
+          if (n <= maxBcastNodes) loop.keep(withDeg.repartition(col("dst")))
+          else withDeg
+        // Materialize every SECOND superstep: ranks feed exactly one
+        // consumer (the next contribution join), so chaining two supersteps
+        // into one job evaluates each exactly once — half the actions for
+        // the same lineage bound. The win is fewer scheduler round-trips
+        // per run under driver contention, where the iterative queries
+        // showed a >2x driver-vs-local spread. (Contrast CC, where the
+        // propagated frame feeds BOTH a union and a join branch.)
+        loop.rounds(nodes.select(col("node"), q12(lit(1.0) / n).as("rank")), iters, every = 2)(
+          superstep(edgeFrame, _, n, damping, teleport, maxBcastNodes))
+      }
+    }
 
-  private def pageRankLoop(edges: DataFrame, iters: Int, damping: Double,
-                           teleport: Double): DataFrame = {
-    // the retained frame may belong to an already-stopped session (suite
-    // teardown in the same JVM) — eviction must never fail the new run
-    Option(lastRanks.getAndSet(null)).foreach(p =>
-      try p.unpersist() catch { case _: Exception => () })
-    // NULL-endpoint edges drop (the graph family's hygiene rule —
-    // triangleCount's canonical filter and CC's symmetrize do the same).
-    // Without it one dirty edge MINTS a NULL rank sink that receives
-    // mass but never redistributes, distorting every real node's rank
-    // (measured: a 3-node chain's center fell 0.58 → 0.28 from one
-    // NULL-endpoint edge) and surfacing a (null, rank) output row.
-    // Symmetrize by EXPLODING each edge into both directions (r17
-    // optimization round): the old union-of-two-selects read the input
-    // twice, which forced a persist of the raw edge frame just to keep
-    // an expensive upstream derivation (a fact-table join) from running
-    // twice — the explode form scans it exactly once, so that persist,
-    // its materializing count(), and its unpersist all go away.
-    // Then fold the out-degree into the edge row with ONE window pass
-    // (outdeg never changes, so joining it per superstep — or deriving
-    // it with a groupBy+join, which recomputes the edge set — is wasted
-    // work); the cached frame keeps the window's hash(src) partitioning.
-    val withDeg = edges
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("_e"))
-      .select(col("_e.src").as("src"), col("_e.dst").as("dst"))
-      .distinct()
-      .withColumn("outdeg", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
-      .persist()
-    val nodes = withDeg.select(col("src").as("node")).distinct()
-    val n = nodes.count() // scalar graph size, not a data collect
-    if (n == 0) { // empty graph: no nodes, no ranks (avoid 1/0 literals)
-      withDeg.unpersist()
-      return nodes.select(col("node"), lit(0.0).as("rank"))
-    }
-    // exact-IEEE 12-decimal quantizer (see class doc)
-    def q12(c: Column): Column = floor(c * lit(1e12) + lit(0.5)) / lit(1e12)
-    var ranks = nodes.select(col("node"), q12(lit(1.0) / n).as("rank"))
-    val maxBcastNodes = edges.sparkSession.conf
-      .get(RankBroadcastMaxNodesKey, RankBroadcastMaxNodesDefault.toString).toLong
-    // Under the broadcast gate the superstep's ONLY exchange is the
-    // dst-keyed contribution aggregation (the rank join broadcasts, the
-    // edge side streams) — pre-partition the cached edge frame by dst
-    // ONCE so hash(dst) satisfies every superstep agg's distribution and
-    // the whole loop runs exchange-free (guide §2.4: operations keyed the
-    // same way share one exchange; r18 optimization round). One edge-set
-    // shuffle at setup replaces `iters` edge-set shuffles. Past the gate
-    // the rank join itself is src-keyed and shuffled, so dst partitioning
-    // would buy nothing there — the window's hash(src) frame stays.
-    // Lazy persist (no eager count — the blocks build from the cached
-    // parent inside the first superstep's own job), and withDeg STAYS
-    // cached until loop exit: the initial rank frame derives from it and
-    // is first evaluated inside the first materialized superstep's cache
-    // build — unpersisting withDeg here would replan that subtree as a
-    // silent full edge-derivation recompute (fact join + distinct +
-    // window) under the broadcast build.
-    val edgeFrame =
-      if (n <= maxBcastNodes) withDeg.repartition(col("dst")).persist()
-      else withDeg
-    // Materialize every SECOND superstep: ranks feed exactly one
-    // consumer (the next contribution join), so chaining two supersteps
-    // into one plan evaluates each exactly once — half the actions and
-    // half the cache churn for the same lineage bound. Local wall-clock
-    // is neutral (measured); the win is fewer scheduler round-trips per
-    // run under driver contention, where the iterative queries showed a
-    // >2x driver-vs-local spread. (Contrast CC, where the propagated
-    // frame feeds BOTH a union and a join branch and an unmaterialized
-    // superstep would be evaluated twice.)
-    var lastMat = ranks // most recently PERSISTED frame (init frame is not)
-    var sinceMat = 0
-    for (i <- 1 to iters) {
-      val next = superstep(edgeFrame, ranks, n, damping, teleport, maxBcastNodes)
-      sinceMat += 1
-      if (sinceMat == 2 || i == iters) {
-        val mat = next.persist()
-        mat.count() // materialize before dropping the parent from cache
-        lastMat.unpersist()
-        lastMat = mat
-        ranks = mat
-        sinceMat = 0
-      } else ranks = next
-    }
-    edgeFrame.unpersist()
-    if (!edgeFrame.eq(withDeg)) withDeg.unpersist()
-    // same race guard as labelPropagationLoop's exit: a concurrent run's
-    // retained frame must not leak, but a same-semantics frame shares
-    // this run's cache entry and must not be evicted
-    val stale = lastRanks.getAndSet(ranks)
-    if (stale != null && !stale.eq(ranks) &&
-        !(try stale.sameSemantics(ranks) catch { case _: Exception => true }))
-      try stale.unpersist() catch { case _: Exception => () }
-    ranks
-  }
+  // exact-IEEE 12-decimal quantizer (see pageRank's doc)
+  private def q12(c: Column): Column = floor(c * lit(1e12) + lit(0.5)) / lit(1e12)
 
   /** Semi-supervised label propagation: spread seed labels over an
     * undirected graph for a FIXED number of synchronous rounds. Each
@@ -181,114 +128,68 @@ object Graph {
     * Scale shape: one round = one neighbor-label equi-join (the label
     * side is node-sized and rides the same size-gated broadcast flip as
     * pageRank's ranks) + one (node, label) count + one per-node argmax —
-    * all vertex-partitioned; per-node work is bounded by degree. Labels
-    * persist per round so lineage never grows with round count. */
-  def labelPropagation(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
-    // fixed-point loop: AQE off for the duration, same rationale and
-    // measurement as pageRank (iteration-stable partitioning + no
-    // shuffle join for AQE to improve under the broadcast gate)
-    val sess = edges.sparkSession
-    val aqePrev = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    try labelPropagationLoop(edges, seeds, rounds)
-    finally sess.conf.set("spark.sql.adaptive.enabled", aqePrev)
-  }
-
-  private def labelPropagationLoop(edges: DataFrame, seeds: DataFrame,
-                                   rounds: Int): DataFrame = {
-    // Evict the previous run's retained result BEFORE this run persists
-    // anything (same discipline as pageRankLoop). Evicting at the END is
-    // wrong in a subtle way: a rerun of the same query on the same input
-    // canonicalizes to the SAME logical plan, so the new persist() is a
-    // cache hit on the old entry — and unpersisting `prev` afterwards
-    // would evict the shared entry out from under the frame we just
-    // returned, silently recomputing the whole loop lineage on the
-    // caller's first action (observed: 3 → 10 shuffles on a warm JVM).
-    Option(lastLabels.getAndSet(null)).foreach(p =>
-      try p.unpersist() catch { case _: Exception => () })
-    val s = edges.sparkSession
-    val maxBcast = s.conf
-      .get(RankBroadcastMaxNodesKey, RankBroadcastMaxNodesDefault.toString).toLong
-    // graph hygiene (same rule as pageRank/triangleCount/CC): a
-    // NULL-endpoint edge drops, a seed with a NULL node is unaddressable
-    // and a NULL label is not a label — without these filters a NULL
-    // seed label PROPAGATES as the modal "label" of real nodes, and the
-    // left_anti clamp (NULL never equi-matches) re-adopts the NULL node
-    // every round, emitting duplicate (null, …) output rows
-    // explode-symmetrize: one scan of the (possibly join-derived) edge
-    // input instead of the union form's two — same rows, same distinct
-    val adj = edges.filter(col("src").isNotNull && col("dst").isNotNull)
-      .select(explode(array(
-        struct(col("src").as("x"), col("dst").as("y")),
-        struct(col("dst").as("x"), col("src").as("y")))).as("_e"))
-      .select(col("_e.x").as("x"), col("_e.y").as("y"))
-      .distinct()
-      .persist()
-    // one setup action: the edge count is a conservative gate for the
-    // node-sized label table (labels ⊆ nodes ≤ 2·edges). Per-round label
-    // counting would cost an extra job per round for a tighter bound the
-    // fixture never needs; past the gate the joins degrade to shuffles.
-    val nAdj = adj.count()
-    def gated(df: DataFrame): DataFrame =
-      if (nAdj <= maxBcast) broadcast(df) else df
-    // Under the gate both per-round joins broadcast their label side, so
-    // the round's only exchanges are the (x, label) vote count and the
-    // per-x argmax — and hash(x) satisfies BOTH distributions (x is a
-    // prefix of (x, label)). Pre-partition the cached adjacency by x ONCE
-    // and every round runs exchange-free (guide §2.4; r18 optimization
-    // round — same lever as pageRank's dst pre-partition). Past the gate
-    // the neighbor-label join shuffles by y and destroys any x
-    // partitioning, so the plain distinct frame stays there.
-    // Lazy persist — blocks build from the cached parent inside round 1's
-    // own jobs; adj stays cached until exit (same discipline as
-    // pageRank's withDeg).
-    val adjFrame =
-      if (nAdj <= maxBcast) adj.repartition(col("x")).persist()
-      else adj
-    var labels = seeds.filter(col("node").isNotNull && col("label").isNotNull)
-      .select(col("node"), col("label")).persist()
-    var toFree = List.empty[DataFrame]
-    (1 to rounds).foreach { r =>
-      val lbl = labels.select(col("node").as("y"), col("label"))
-      // the anti side rides the same gate: without it the EDGE-sized
-      // neighbor-label stream would shuffle just to subtract the
-      // node-sized labeled set
-      val counts = adjFrame.join(gated(lbl), Seq("y"))
-        .join(gated(labels.select(col("node").as("x"))), Seq("x"), "left_anti")
-        .groupBy(col("x"), col("label")).agg(count(lit(1)).as("c"))
-      // argmax by (count desc, label asc): max of (c, -label) needs no
-      // second shuffle beyond the per-node aggregation
-      val adopted = counts
-        .groupBy(col("x"))
-        .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
-        .select(col("x").as("node"), (-col("m.nl")).as("label"))
-      val next = labels.unionByName(adopted).persist()
-      // no per-round count: the NEXT round's broadcast collect (or the
-      // caller's first action on the final frame) materializes the
-      // persisted plan — per-round persists still bound lineage
-      toFree = labels :: toFree
-      labels = next
+    * all vertex-partitioned; per-node work is bounded by degree. Every
+    * round is cached ([[Fixpoint]]) so lineage never grows with round
+    * count. */
+  def labelPropagation(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame =
+    Fixpoint.run("Graph.labelPropagation", edges.sparkSession) { loop =>
+      val maxBcast = broadcastGate(edges.sparkSession)
+      // graph hygiene (same rule as pageRank/triangleCount/CC): a
+      // NULL-endpoint edge drops, a seed with a NULL node is unaddressable
+      // and a NULL label is not a label — without these filters a NULL
+      // seed label PROPAGATES as the modal "label" of real nodes, and the
+      // left_anti clamp (NULL never equi-matches) re-adopts the NULL node
+      // every round, emitting duplicate (null, …) output rows
+      // explode-symmetrize: one scan of the (possibly join-derived) edge
+      // input instead of the union form's two — same rows, same distinct
+      val adj = loop.keep(loop.bind(edges).filter(col("src").isNotNull && col("dst").isNotNull)
+        .select(explode(array(
+          struct(col("src").as("x"), col("dst").as("y")),
+          struct(col("dst").as("x"), col("src").as("y")))).as("_e"))
+        .select(col("_e.x").as("x"), col("_e.y").as("y"))
+        .distinct())
+      // one setup action: the edge count is a conservative gate for the
+      // node-sized label table (labels ⊆ nodes ≤ 2·edges). Per-round label
+      // counting would cost an extra job per round for a tighter bound the
+      // fixture never needs; past the gate the joins degrade to shuffles.
+      val nAdj = adj.count()
+      def gated(df: DataFrame): DataFrame =
+        if (nAdj <= maxBcast) broadcast(df) else df
+      // Under the gate both per-round joins broadcast their label side, so
+      // the round's only exchanges are the (x, label) vote count and the
+      // per-x argmax — and hash(x) satisfies BOTH distributions (x is a
+      // prefix of (x, label)). Pre-partition the cached adjacency by x ONCE
+      // and every round runs exchange-free (guide §2.4; r18 optimization
+      // round — same lever as pageRank's dst pre-partition). Past the gate
+      // the neighbor-label join shuffles by y and destroys any x
+      // partitioning, so the plain distinct frame stays there.
+      val adjFrame =
+        if (nAdj <= maxBcast) loop.keep(adj.repartition(col("x")))
+        else adj
+      val init = loop.bind(seeds).filter(col("node").isNotNull && col("label").isNotNull)
+        .select(col("node"), col("label"))
+      // a round's labels feed three consumers of the next round (the
+      // neighbor-label and clamp broadcasts and the union), so every round
+      // is cached; materializing every second round lets the next round's
+      // broadcast build the cache in between — at the pack's two rounds,
+      // one count for the whole loop
+      loop.rounds(init, rounds, every = 2) { labels =>
+        val lbl = labels.select(col("node").as("y"), col("label"))
+        // the anti side rides the same gate: without it the EDGE-sized
+        // neighbor-label stream would shuffle just to subtract the
+        // node-sized labeled set
+        val counts = adjFrame.join(gated(lbl), Seq("y"))
+          .join(gated(labels.select(col("node").as("x"))), Seq("x"), "left_anti")
+          .groupBy(col("x"), col("label")).agg(count(lit(1)).as("c"))
+        // argmax by (count desc, label asc): max of (c, -label) needs no
+        // second shuffle beyond the per-node aggregation
+        val adopted = counts
+          .groupBy(col("x"))
+          .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
+          .select(col("x").as("node"), (-col("m.nl")).as("label"))
+        labels.unionByName(adopted)
+      }
     }
-    labels.count(): Unit // materialize before freeing parents
-    toFree.foreach(df => try df.unpersist() catch { case _: Exception => () })
-    adjFrame.unpersist()
-    if (!adjFrame.eq(adj)) adj.unpersist()
-    // same retention discipline as pageRank's lastRanks: the result stays
-    // persisted for the caller; the PREVIOUS run's result was evicted at
-    // loop entry (see above — never after the re-persist). getAndSet
-    // still handles a CONCURRENT run racing this one: its retained frame
-    // must not leak for the session — but only unpersist it when its
-    // plan genuinely differs, because a same-semantics frame SHARES this
-    // run's cache entry and unpersisting it would evict the result we
-    // are about to return (the warm-JVM bug the entry-eviction fixed).
-    val stale = lastLabels.getAndSet(labels)
-    if (stale != null && !stale.eq(labels) &&
-        !(try stale.sameSemantics(labels) catch { case _: Exception => true }))
-      try stale.unpersist() catch { case _: Exception => () }
-    labels
-  }
-  private val lastLabels =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
 
   /** Exact triangle count by degree-ordered orientation (the standard
     * distributed algorithm, Cohen's MapReduce formulation / Suri-Vassilvitskii):
@@ -324,8 +225,7 @@ object Graph {
       .persist()
     val nE = canon.count() // materialize; oriented is 1:1 with canon
     val s = edges.sparkSession
-    val maxBcast = s.conf
-      .get(RankBroadcastMaxNodesKey, RankBroadcastMaxNodesDefault.toString).toLong
+    val maxBcast = broadcastGate(s)
     def gated(df: DataFrame): DataFrame =
       if (nE <= maxBcast) broadcast(df) else df
     val deg = canon.select(col("u").as("x"))
@@ -378,7 +278,6 @@ object Graph {
   private[graft] def superstep(withDeg: DataFrame, ranks: DataFrame, n: Long,
                                damping: Double, teleport: Double,
                                maxBcastNodes: Long): DataFrame = {
-    def q12(c: Column): Column = floor(c * lit(1e12) + lit(0.5)) / lit(1e12)
     val rankSide = if (n <= maxBcastNodes) broadcast(ranks) else ranks
     withDeg
       .join(rankSide, withDeg("src") === ranks("node"))

@@ -449,7 +449,7 @@ object TextDedup {
     // exchange reuse). Materialize the capped posting list once per run
     // via BoundedCache.perRun (r18: cluster-safe persist with lineage,
     // previous run's frame evicted so nothing is retained across runs —
-    // replaces the r17 localCheckpoint(false), whose unreplicated
+    // replaces the r17 `localCheckpoint`, whose unreplicated
     // lineage-free blocks would make an executor loss unrecoverable at
     // cluster scale). At 100 TB this is the classic "tokenize once, join
     // many" trade: one corpus-sized materialization against three
@@ -535,7 +535,7 @@ object TextDedup {
     * vertex's current label to its neighbors and keeps the minimum; the
     * loop ends when no label changes. Each superstep is one equi-join +
     * one aggregation, both hash-partitioned on vertex id — no driver-side
-    * graph state, and `localCheckpoint` truncates the growing lineage so
+    * graph state, and every superstep is cached ([[Fixpoint]]) so
     * superstep N does not replay supersteps 1..N-1. Converges in
     * O(cluster diameter) supersteps; near-dup graphs are shallow (dup
     * groups are quasi-cliques), so 2-3 supersteps is typical. For
@@ -545,63 +545,53 @@ object TextDedup {
     * @return (id, label) — label is the min vertex id reachable from id,
     *         i.e. the cluster id; a vertex with no edges keeps its own id.
     */
-  def connectedComponents(vertices: DataFrame, edges: DataFrame): DataFrame = {
-    // graph hygiene, matching [[connectedComponentsStar]] exactly: a
-    // NULL-endpoint edge is unaddressable and drops (ccStar's canonical
-    // u =!= v filter discards it as UNKNOWN); endpoints NOT in `vertices`
-    // may relay connectivity during propagation but never surface —
-    // without the final restriction the superstep groupBy MINTS output
-    // rows for undeclared endpoints, and a NULL-id vertex absorbed its
-    // NULL-edge neighbor's label (min() skips NULLs)
-    // symmetrize by EXPLODING each pair into both directions instead of
-    // union-of-two-selects: the union form evaluates the (expensive —
-    // SimHash/LSH banding) pair pipeline twice before the persist; the
-    // explode form scans it exactly once for the same rows (r17
-    // optimization round, guide §2.4 "don't compute things twice")
-    val sym = edges.filter(col("d1").isNotNull && col("d2").isNotNull)
-      .select(explode(array(
-        struct(col("d1").as("src"), col("d2").as("dst")),
-        struct(col("d2").as("src"), col("d1").as("dst")))).as("_e"))
-      .select(col("_e.src").as("src"), col("_e.dst").as("dst"))
-      .persist()
-    // `_declared` rides the superstep aggregate so undeclared edge
-    // endpoints (which the propagation legitimately MINTS as relay
-    // rows, exactly like ccStar's edge-walk) can be filtered from the
-    // output without a final join against `vertices` — one boolean per
-    // row instead of two extra shuffle exchanges
-    var lab = vertices
-      .select(col("id"), col("id").as("label"), lit(true).as("_declared"))
-      .localCheckpoint()
-    // labels only ever decrease, so sum(label) strictly decreases until the
-    // fixpoint — one scalar aggregate replaces a compare-to-previous join
-    // as the convergence check
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("label").cast(org.apache.spark.sql.types.DecimalType(38, 0))))
-        .head().getDecimal(0) // decimal: no overflow ambiguity at any id scale
-    def propagate(l: DataFrame): DataFrame = {
-      val viaNeighbor = sym.join(l, sym("src") === l("id"))
-        .select(col("dst").as("id"), col("label"), lit(false).as("_declared"))
-      l.union(viaNeighbor).groupBy(col("id"))
-        .agg(min(col("label")).as("label"), max(col("_declared")).as("_declared"))
+  def connectedComponents(vertices: DataFrame, edges: DataFrame): DataFrame =
+    Fixpoint.run("TextDedup.connectedComponents", vertices.sparkSession) { loop =>
+      // graph hygiene, matching [[connectedComponentsStar]] exactly: a
+      // NULL-endpoint edge is unaddressable and drops (ccStar's canonical
+      // u =!= v filter discards it as UNKNOWN); endpoints NOT in `vertices`
+      // may relay connectivity during propagation but never surface —
+      // without the final restriction the superstep groupBy MINTS output
+      // rows for undeclared endpoints, and a NULL-id vertex absorbed its
+      // NULL-edge neighbor's label (min() skips NULLs)
+      // symmetrize by EXPLODING each pair into both directions instead of
+      // union-of-two-selects: the union form evaluates the (expensive —
+      // SimHash/LSH banding) pair pipeline twice before the persist; the
+      // explode form scans it exactly once for the same rows (r17
+      // optimization round, guide §2.4 "don't compute things twice")
+      val sym = loop.keep(loop.bind(edges).filter(col("d1").isNotNull && col("d2").isNotNull)
+        .select(explode(array(
+          struct(col("d1").as("src"), col("d2").as("dst")),
+          struct(col("d2").as("src"), col("d1").as("dst")))).as("_e"))
+        .select(col("_e.src").as("src"), col("_e.dst").as("dst")))
+      // `_declared` rides the superstep aggregate so undeclared edge
+      // endpoints (which the propagation legitimately MINTS as relay
+      // rows, exactly like ccStar's edge-walk) can be filtered from the
+      // output without a final join against `vertices` — one boolean per
+      // row instead of two extra shuffle exchanges
+      val init = loop.bind(vertices)
+        .select(col("id"), col("id").as("label"), lit(true).as("_declared"))
+      // labels only ever decrease, so sum(label) strictly decreases until
+      // the fixpoint — one scalar aggregate replaces a compare-to-previous
+      // join as the convergence check. Exactly one superstep per cached
+      // frame: the propagated frame feeds the NEXT plan through both the
+      // union and the join branch, so an unmaterialized intermediate
+      // superstep would be evaluated twice (measured 40% slower when
+      // batching two supersteps per materialization)
+      def labelSum(df: DataFrame): java.math.BigDecimal =
+        df.agg(sum(col("label").cast(org.apache.spark.sql.types.DecimalType(38, 0))))
+          .head().getDecimal(0) // decimal: no overflow ambiguity at any id scale
+      loop.converge(init, labelSum) { l =>
+        val viaNeighbor = sym.join(l, sym("src") === l("id"))
+          .select(col("dst").as("id"), col("label"), lit(false).as("_declared"))
+        l.union(viaNeighbor).groupBy(col("id"))
+          .agg(min(col("label")).as("label"), max(col("_declared")).as("_declared"))
+      }((prev, s, _, _) => s == prev)
     }
-    var prevSum = labelSum(lab)
-    var converged = false
-    while (!converged) {
-      // exactly one superstep per checkpoint: the propagated frame feeds
-      // the NEXT plan through both the union and the join branch, so an
-      // unmaterialized intermediate superstep would be evaluated twice
-      // (measured 40% slower when batching two supersteps per checkpoint)
-      lab = propagate(lab).localCheckpoint()
-      val s = labelSum(lab)
-      converged = s == prevSum
-      prevSum = s
-    }
-    sym.unpersist()
     // only declared vertices surface (relay rows drop); a NULL-id vertex
     // keeps its own NULL label — min() over its self row only, since the
     // NULL-edge filter above means it never receives a neighbor label
-    lab.filter(col("_declared")).select(col("id"), col("label"))
-  }
+    .filter(col("_declared")).select(col("id"), col("label"))
 
   /** Connected components by large-star/small-star alternation (Kiveris
     * et al., "Connected Components in MapReduce and Beyond") — same
@@ -631,7 +621,7 @@ object TextDedup {
     // explode-symmetrize (r17 optimization round): the union forms read
     // their input once per branch; the explode forms emit the same rows
     // from a single scan — per ROUND of the fixpoint loop that halves
-    // the checkpoint-block reads (largeStar) and removes a duplicated
+    // the cached-block reads (largeStar) and removes a duplicated
     // join+aggregation (smallStar's withMin fed two union branches).
     def largeStar(e: DataFrame): DataFrame = {
       val sym = e.select(explode(array(
@@ -664,22 +654,17 @@ object TextDedup {
           lit(java.math.BigDecimal.ZERO).cast(DecimalType(38, 0)))).head()
       (r.getLong(0), r.getDecimal(1))
     }
-    var e = canon(edges.select(col("d1").as("u"), col("d2").as("v"))).localCheckpoint()
-    var prev = sums(e)
-    var prevE = e
-    var converged = e.isEmpty
-    while (!converged) {
-      e = smallStar(largeStar(e)).localCheckpoint()
-      val s = sums(e)
-      // the cheap scalar pair (count, endpoint sum) screens every round;
-      // an exact set compare CONFIRMS the fixpoint (runs once, on the
-      // final star forest) so a scalar collision can never stop us early
-      converged = s == prev && e.exceptAll(prevE).isEmpty
-      prev = s
-      prevE = e
+    // the cheap scalar pair (count, endpoint sum) screens every round; an
+    // exact set compare CONFIRMS the fixpoint (runs once, on the final
+    // star forest) so a scalar collision can never stop us early
+    val forest = Fixpoint.run("TextDedup.connectedComponentsStar", edges.sparkSession) { loop =>
+      loop.converge(canon(loop.bind(edges).select(col("d1").as("u"), col("d2").as("v"))), sums)(
+        e => smallStar(largeStar(e))) { (prev, s, parent, e) =>
+        s == prev && e.exceptAll(parent).isEmpty
+      }
     }
     vertices.select(col("id"))
-      .join(e.select(col("u").as("id"), col("v").as("label")), Seq("id"), "left")
+      .join(forest.select(col("u").as("id"), col("v").as("label")), Seq("id"), "left")
       .select(col("id"), coalesce(col("label"), col("id")).as("label"))
   }
 

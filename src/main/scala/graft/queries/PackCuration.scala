@@ -659,9 +659,7 @@ object PackCuration {
       // size-gated flip Graph.pageRank uses for its rank side).
       val ctrRows = deg.filter(col("d") <= 512)
         .agg(coalesce(sum(col("d")), lit(0L))).head().getLong(0)
-      val gateMax = s.conf.get(graft.ext.Graph.RankBroadcastMaxNodesKey,
-        "4000000").toLong
-      val ctrB = if (ctrRows <= gateMax) broadcast(ctr.alias("b")) else ctr.alias("b")
+      val ctrB = if (ctrRows <= graft.ext.Graph.broadcastGate(s)) broadcast(ctr.alias("b")) else ctr.alias("b")
       val w = ctr.alias("a").join(ctrB,
           col("a.x") === col("b.x") && col("a.y") < col("b.y"))
         .groupBy(col("a.y").as("u"), col("b.y").as("v"))

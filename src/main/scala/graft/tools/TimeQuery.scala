@@ -14,7 +14,9 @@ import graft.queries.Pack
 /** The engine's measurement harness:
   * `runMain graft.tools.TimeQuery <sfDir> [name...]` times each named
   * query (no names: every declared query) three times and prints one JSON
-  * line per (query, run). The bench's min-of-N hides warmup effects; this
+  * line per (query, run), each as soon as it is measured — a full-pack
+  * run shows its progress, and a query that throws leaves the lines
+  * measured before it. The bench's min-of-N hides warmup effects; this
   * prints every run.
   *
   * The first line is the box-speed probe the bench records carry,
@@ -51,13 +53,14 @@ object TimeQuery {
   def main(args: Array[String]): Unit = {
     val names = if (args.length > 1) args.tail.toSeq else Pack.all.map(_.name)
     val spark = graft.Session.local(graft.Session.cpus, graft.Session.shuffle)
-    record(spark, args.head, names, 3).foreach(println)
+    record(spark, args.head, names, 3, println)
     spark.stop()
   }
 
-  /** The calib line, then one record line per (query, run). An unknown
-    * name fails before anything runs. */
-  def record(spark: SparkSession, sfDir: String, names: Seq[String], runs: Int): Seq[String] = {
+  /** Hand `emit` the calib line, then one record line per (query, run), each
+    * once it is measured. An unknown name fails before anything runs. */
+  def record(spark: SparkSession, sfDir: String, names: Seq[String], runs: Int,
+             emit: String => Unit): Unit = {
     val unknown = names.filterNot(Pack.byName.contains)
     require(unknown.isEmpty, s"unknown query: ${unknown.mkString(", ")}")
     val probe = spark.range(1L << 30).selectExpr("sum(xxhash64(id) % 1000)")
@@ -82,13 +85,14 @@ object TimeQuery {
         rec.phase = null
         (a, p)
       }
-      s"""{"calib_s":${num(calib)}}""" +: (for (name <- names; run <- 1 to runs) yield {
+      emit(s"""{"calib_s":${num(calib)}}""")
+      for (name <- names; run <- 1 to runs) {
         val (df, construct) = phase(Pack.byName(name).fn(spark, sfDir))
         val (_, count) = phase(df.count())
         val (_, noop) = phase(df.write.format("noop").mode("overwrite").save())
-        s"""{"query":"$name","run":$run,"construct":${construct.json},""" +
-          s""""count":${count.json},"noop":${noop.json}}"""
-      })
+        emit(s"""{"query":"$name","run":$run,"construct":${construct.json},""" +
+          s""""count":${count.json},"noop":${noop.json}}""")
+      }
     } finally {
       spark.streams.removeListener(rec.streams)
       spark.listenerManager.unregister(rec)

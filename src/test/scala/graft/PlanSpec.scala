@@ -473,8 +473,8 @@ class PlanSpec extends AnyFunSuite {
 
   // Warm-JVM rerun of the retained-result loops: a second run of the same
   // query canonicalizes to the SAME logical plan, so the retention
-  // eviction (lastRanks/lastLabels) must happen BEFORE the new run
-  // persists — evicting afterwards removes the shared cache entry out
+  // eviction (Fixpoint's, through BoundedCache) must happen BEFORE the new
+  // run persists — evicting afterwards removes the shared cache entry out
   // from under the frame just returned and the caller's first action
   // recomputes the whole loop lineage (label propagation regressed
   // 3 → 10 shuffles exactly this way when a prior suite had already run

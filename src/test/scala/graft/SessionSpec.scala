@@ -125,6 +125,15 @@ class SessionSpec extends AnyFunSuite {
     assert(installs == 3, "install is called from QDef.tuned, Ops.bandJoin and Ops.topKPerKey")
   }
 
+  test("src/main checkpoints nothing, and graft/ext writes conf only on Fixpoint's own session") {
+    assert(text.collect { case (p, t) if t.contains("localCheckpoint(") => p }.isEmpty)
+    val writes = text.toSeq.filter(_._1.startsWith("graft/ext/"))
+      .flatMap { case (p, t) => "conf\\.(set|unset)\\(".r.findAllIn(t).map(p -> _) }
+    assert(writes == Seq("graft/ext/Fixpoint.scala" -> "conf.set("))
+    assert(text("graft/ext/Fixpoint.scala").contains(
+      "val session = GraftBridge.cloneSession(caller)\n        session.conf.set("))
+  }
+
   test("src/main reads exactly the five SPARK_GRAFT_* dials") {
     val dial = "\"SPARK_GRAFT_([A-Z0-9_]+)\"".r
     val read = text.values.flatMap(t => dial.findAllMatchIn(t).map(_.group(1))).toSet

@@ -36,7 +36,9 @@ class TimeQuerySpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(lag)
     try {
       val before = ListenerCensus.of(spark)
-      val lines = TimeQuery.record(spark, TestSpark.sf0001, names, 1)
+      val out = Seq.newBuilder[String]
+      TimeQuery.record(spark, TestSpark.sf0001, names, 1, out += _)
+      val lines = out.result()
       (before, lines, ListenerCensus.of(spark))
     } finally spark.sparkContext.removeSparkListener(lag)
   }
@@ -92,6 +94,29 @@ class TimeQuerySpec extends AnyFunSuite {
     assert(added.forall(_.startsWith("org.apache.spark.sql.")), added)
   }
 
+  test("record: every line reaches emit as it is measured, calib first, in (query, run) order") {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    val emitted = Seq.newBuilder[(JsonNode, Int)]
+    GraftBridge.waitListenerBusEmpty(spark)
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      // each phase drains the bus, so at emit time the counter holds every
+      // job started so far
+      TimeQuery.record(spark, TestSpark.sf0001, Seq("q1_agg", "agg_count"), 2,
+        l => emitted += (new ObjectMapper().readTree(l) -> jobs.get))
+    } finally spark.sparkContext.removeSparkListener(counter)
+    val (lines, seen) = emitted.result().unzip
+    assert(lines.head.has("calib_s"))
+    assert(lines.tail.map(j => (j.get("query").asText, j.get("run").asInt)) ==
+      Seq(("q1_agg", 1), ("q1_agg", 2), ("agg_count", 1), ("agg_count", 2)))
+    // every query run starts jobs, so a line handed over after its own run
+    // and before the next one sees a strictly larger count than the last
+    assert(seen.zip(seen.tail).forall { case (a, b) => a < b }, seen)
+  }
+
   test("record: an unknown query name fails naming it, before any query runs") {
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val counter = new SparkListener {
@@ -101,7 +126,7 @@ class TimeQuerySpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(counter)
     try {
       val e = intercept[IllegalArgumentException](
-        TimeQuery.record(spark, TestSpark.sf0001, Seq("q1_agg", "no_such_query"), 1))
+        TimeQuery.record(spark, TestSpark.sf0001, Seq("q1_agg", "no_such_query"), 1, _ => ()))
       assert(e.getMessage.contains("no_such_query"))
       GraftBridge.waitListenerBusEmpty(spark)
       assert(jobs.get == 0)
