@@ -52,20 +52,4 @@ object GraftBridge {
     * plan-inspection tests flush before asserting. */
   def waitListenerBusEmpty(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
-
-  /** Count the shuffle exchanges a physical plan would actually run:
-    * descends through AQE wrappers and query stages, counts a reused
-    * exchange or a cache read as zero (the work happened once, elsewhere).
-    * String-counting a plan overstates this badly — InMemoryRelation
-    * reprints its stored plan, so iterative pipelines look quadratic. */
-  def countShuffleExchanges(plan: execution.SparkPlan): Int = plan match {
-    case a: execution.adaptive.AdaptiveSparkPlanExec =>
-      countShuffleExchanges(a.executedPlan)
-    case s: execution.exchange.ShuffleExchangeLike =>
-      1 + s.children.map(countShuffleExchanges).sum
-    case q: execution.adaptive.QueryStageExec => countShuffleExchanges(q.plan)
-    case _: execution.exchange.ReusedExchangeExec => 0
-    case _: execution.columnar.InMemoryTableScanExec => 0
-    case other => other.children.map(countShuffleExchanges).sum
-  }
 }

@@ -80,7 +80,7 @@ class FixtureCanarySpec extends AnyFunSuite {
   }
 
   // The committed plan-audit artifact must stay alive: the r14 end-of-round
-  // regen ran PlanStats against a flag-as-path and committed a table where
+  // regen ran the plan-stats tool against a flag-as-path and committed a table where
   // 303/305 rows read `ERR [PATH_NOT_FOUND]` — dead for a whole round
   // before a judge noticed (VERDICT r14 wrong-#1). Same canary discipline
   // as the fixtures: the failure mode is silent, so a test owns it.
@@ -95,7 +95,8 @@ class FixtureCanarySpec extends AnyFunSuite {
     assert(errRows.isEmpty,
       s"PLANSTATS.md carries ${errRows.size} ERR rows (first: " +
         s"${errRows.headOption.getOrElse("")}) — regenerate against a real " +
-        "fixture dir: sbt \"runMain graft.tools.PlanStats /root/testdata/sf0.01\"")
+        "fixture dir: a full-pack `runMain graft.tools.TimeQuery /root/testdata/sf0.01` " +
+        "record, then `python3 tools/planstatsdiff.py render <record> PLANSTATS.md`")
     val declared = graft.queries.Pack.all.size
     // small slack so adding a query mid-session doesn't redden every test
     // run before the (expensive) regen; gross staleness still fails

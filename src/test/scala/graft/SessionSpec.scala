@@ -134,9 +134,9 @@ class SessionSpec extends AnyFunSuite {
       "val session = GraftBridge.cloneSession(caller)\n        session.conf.set("))
   }
 
-  test("src/main reads exactly the five SPARK_GRAFT_* dials") {
+  test("src/main reads exactly the three SPARK_GRAFT_* dials") {
     val dial = "\"SPARK_GRAFT_([A-Z0-9_]+)\"".r
     val read = text.values.flatMap(t => dial.findAllMatchIn(t).map(_.group(1))).toSet
-    assert(read == Set("CPUS", "SHUFFLE", "SF_DIR", "PLAN_DIR", "PLAN_TAG"))
+    assert(read == Set("CPUS", "SHUFFLE", "SF_DIR"))
   }
 }

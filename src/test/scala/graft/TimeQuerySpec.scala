@@ -117,6 +117,49 @@ class TimeQuerySpec extends AnyFunSuite {
     assert(seen.zip(seen.tail).forall { case (a, b) => a < b }, seen)
   }
 
+  /** Two runs of a broadcast-join top-k query and of the token-budget
+    * export, whose global running total (`Ops.tokenShards` over one
+    * constant group) is a window with no partition spec. */
+  private lazy val planned: Seq[JsonNode] = {
+    val out = Seq.newBuilder[String]
+    TimeQuery.record(spark, TestSpark.sf0001, Seq("agg_group_topk", "k16_sink_training_shards"), 2,
+      out += _)
+    out.result().map(new ObjectMapper().readTree(_))
+  }
+  private val planKeys = Seq("scans", "xchg_hash", "xchg_range", "bcast", "smj", "bhj",
+    "sort_agg", "obj_agg", "cached", "topk", "rows")
+
+  test("record: the calib line names the queries; every line has the plan keys, run 1 the plan text") {
+    assert(planned.head.get("queries").elements.asScala.map(_.asText).toSeq ==
+      Seq("agg_group_topk", "k16_sink_training_shards"))
+    for (j <- planned.tail) {
+      val plan = j.get("plan")
+      assert(plan.fieldNames.asScala.toSeq == planKeys, j.get("query"))
+      planKeys.foreach(k => assert(plan.get(k).isIntegralNumber && plan.get(k).asLong >= 0, k))
+      assert(j.has("plan_text") == (j.get("run").asInt == 1), j.get("query"))
+    }
+    val text = planned(1).get("plan_text").asText
+    assert(text.contains("== Physical Plan ==") && text.contains("BroadcastHashJoin"), text)
+  }
+
+  test("record: agg_group_topk's plan broadcasts its join and ends in one top-k, the same every run") {
+    val runs = planned.tail.filter(_.get("query").asText == "agg_group_topk").map(_.get("plan"))
+    assert(runs.size == 2 && runs.distinct.size == 1, runs)
+    val plan = runs.head
+    assert(plan.get("bcast").asInt >= 1 && plan.get("bhj").asInt >= 1, plan)
+    assert(plan.get("topk").asInt == 1, plan)
+    assert(plan.get("rows").asLong >= 1, plan)
+  }
+
+  test("record: a global running total counts as a single-partition window") {
+    for (j <- planned.tail.filter(_.get("query").asText == "k16_sink_training_shards")) {
+      // the export's eager write runs the window inside construct
+      assert(j.get("construct").get("windows_1p").asInt >= 1, j.get("construct"))
+    }
+    for (j <- planned.tail.filter(_.get("query").asText == "agg_group_topk"); ph <- phases)
+      assert(j.get(ph).get("windows_1p").asInt == 0, s"$ph ${j.get(ph)}")
+  }
+
   test("record: an unknown query name fails naming it, before any query runs") {
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val counter = new SparkListener {

@@ -3,8 +3,12 @@
 
 Usage: benchdiff.py OLD.json NEW.json [threshold]
 
-Each record is a Bench JSON line (or a driver BENCH_r*.json whose `tail`
-holds the line). Per-query times divide by their record's `calib` before
+Each record is a Bench JSON line, a driver BENCH_r*.json whose `tail`
+holds the line, or a `graft.tools.TimeQuery` record (JSON lines, `calib_s`
+first). A TimeQuery record's time for a query is the minimum over runs 2..
+(JIT-warm, cache-cold) of `construct.wall_s + count.wall_s`, the bench's
+measure; two records over two fixture dirs or two SPARK_GRAFT_SHUFFLE
+settings make a scale or shape comparison (SCALE.md). Per-query times divide by their record's `calib` before
 comparison, so box-speed drift between runs cancels out — r14's "1.6-1.9x
 regressions" were pure box drift that this normalization makes visible.
 Queries whose normalized ratio exceeds the threshold (default 1.2) are
@@ -17,8 +21,30 @@ import re
 import sys
 
 
+def load_record(lines):
+    """A TimeQuery record as {calib, queries}: per query, the minimum over
+    runs >= 2 of construct + count wall seconds."""
+    calib, best = None, {}
+    for line in lines:
+        if not line.strip():
+            continue
+        d = json.loads(line)
+        if "calib_s" in d:
+            calib = d["calib_s"]
+        elif d.get("run", 1) >= 2:
+            t = d["construct"]["wall_s"] + d["count"]["wall_s"]
+            best[d["query"]] = min(t, best.get(d["query"], t))
+    return {"calib": calib, "queries": best}
+
+
 def load(path):
     text = open(path).read()
+    try:
+        first = json.loads(text.lstrip().split("\n", 1)[0])
+    except json.JSONDecodeError:
+        first = None
+    if isinstance(first, dict) and "calib_s" in first:
+        return load_record(text.splitlines())
     try:
         d = json.loads(text)
     except json.JSONDecodeError:

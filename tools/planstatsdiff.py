@@ -1,5 +1,13 @@
 #!/usr/bin/env python3
-"""Diff two PLANSTATS.md files and flag PHYSICAL-PLAN regressions.
+"""Render PLANSTATS.md from a TimeQuery record, and diff two PLANSTATS.md
+files to flag PHYSICAL-PLAN regressions.
+
+    python3 tools/planstatsdiff.py render RECORD.jsonl PLANSTATS.md
+
+writes the table from each query's run-1 `plan` object. It refuses (exit 1,
+the output file left as it was) unless the record has a plan for every
+query its calib line names, so a short or failed run never replaces the
+committed table.
 
 The bench number hides scale-killers at sf0.1: a new shuffle exchange or
 a broadcast-join flip costs milliseconds on 60k rows and hours on 100 TB.
@@ -22,7 +30,68 @@ Improvements and added/removed queries print informationally. Exit 1 on
 any regression not named by --allow (an EXPLAINED regression belongs in
 the round's NOTES.md entry next to its --allow).
 """
+import json
+import os
 import sys
+
+# (PLANSTATS.md column, record `plan` key), in table order
+COLUMNS = [
+    ("scans", "scans"), ("xchg-hash", "xchg_hash"), ("xchg-range", "xchg_range"),
+    ("bcast", "bcast"), ("SMJ", "smj"), ("BHJ", "bhj"), ("sortAgg", "sort_agg"),
+    ("objAgg", "obj_agg"), ("cached", "cached"), ("topk", "topk"),
+]
+
+HEADER = """# PLANSTATS — physical-plan features per declared query
+
+Rendered by `tools/planstatsdiff.py render` from a `graft.tools.TimeQuery`
+record at {sf_dir}: each query's run-1 `plan`, cache-cold, tree-walked,
+persisted lineage cut at InMemoryTableScan. The plan is the frame's own
+AdaptiveSparkPlanExec as it stands before execution (the count runs a plan
+of its own, so it is never final): a join that AQE converts to a broadcast
+at runtime does not show here.
+`xchg-hash` = shuffle exchanges; `xchg-range` = presentation sorts;
+`bcast` = broadcast exchanges; SMJ/BHJ join flavors; sortAgg/objAgg =
+non-hash aggregate fallbacks; `topk` = TakeOrderedAndProject.
+
+"""
+
+
+def render(lines):
+    """PLANSTATS.md text from a record's JSON lines; raises ValueError
+    unless every query the calib line names has a plan."""
+    head, plans = None, {}
+    for line in lines:
+        if not line.strip():
+            continue
+        d = json.loads(line)
+        if "calib_s" in d:
+            head = d
+        elif d.get("run") == 1:
+            plans[d["query"]] = d["plan"]
+    if head is None or not head.get("queries"):
+        raise ValueError("no calib line naming the record's queries")
+    missing = [q for q in head["queries"] if q not in plans]
+    if missing:
+        raise ValueError(f"{len(missing)}/{len(head['queries'])} queries have no plan "
+                         f"(first: {', '.join(missing[:5])})")
+    names = ["query"] + [c for c, _ in COLUMNS]
+    rows = [names, ["---"] * len(names)]
+    rows += [[q] + [str(plans[q][k]) for _, k in COLUMNS] for q in head["queries"]]
+    return HEADER.format(sf_dir=head["sf_dir"]) + "".join(
+        "| " + " | ".join(r) + " |\n" for r in rows)
+
+
+def render_file(record, out):
+    try:
+        with open(record) as f:
+            text = render(f)
+    except (OSError, ValueError) as e:
+        raise SystemExit(f"{record}: {e} — {out} left as it was")
+    tmp = out + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, out)
+    print(f"wrote {out}")
 
 
 def parse(path):
@@ -62,6 +131,10 @@ CHECKS = [
 
 
 def main():
+    if sys.argv[1:2] == ["render"]:
+        if len(sys.argv) != 4:
+            raise SystemExit("usage: planstatsdiff.py render RECORD.jsonl OUT.md")
+        return render_file(sys.argv[2], sys.argv[3])
     # one pass: --allow consumes its value (so the value is never taken
     # as a positional file path); a trailing bare --allow errors cleanly
     args, allow = [], set()
