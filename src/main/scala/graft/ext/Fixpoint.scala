@@ -1,10 +1,8 @@
 package graft.ext
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.storage.StorageLevel
+import graft.Session
 
 /** The one driver of the engine's iterative DataFrame loops
   * ([[Graph.pageRank]], [[Graph.labelPropagation]],
@@ -12,16 +10,11 @@ import org.apache.spark.storage.StorageLevel
   * A loop brings its step function and its convergence test; the driver
   * owns the loop policy:
   *
-  *  - Session. The loop runs in a clone of the caller's session (same
-  *    extensions, listeners and conf) with AQE off: a loop's value is its
-  *    iteration-stable partitioning (the cached, pre-partitioned edge
-  *    frame feeds every step), and AQE's per-stage re-planning and
-  *    partition coalescing fight that reuse and pay re-optimization per
-  *    micro-job (measured 4.4 → 3.9 s for 5 pageRank supersteps at
-  *    sf0.1). Skew is handled structurally (size-gated broadcasts), so the
-  *    loops need no skew join either. Inputs enter through [[Loop.bind]];
-  *    the result is rebound to the caller's session, whose conf is never
-  *    written — another thread on it keeps its own AQE setting.
+  *  - Session. The loop runs in the caller's derived session for
+  *    [[Session.Loop]] (AQE off; the reason is there). Inputs enter
+  *    through [[Loop.bind]]; the result is rebound to the caller's
+  *    session, whose conf is never written — another thread on it keeps
+  *    its own AQE setting.
   *  - Cadence. Every frame of the loop is persisted (MEMORY_AND_DISK).
   *    Every `every`-th step, and the last of a fixed-round loop, is
   *    materialized with one action — the loop's own convergence measure,
@@ -43,36 +36,16 @@ private[graft] object Fixpoint {
   /** Run `body` in a loop session; `body` returns the loop's final frame. */
   def run(site: String, caller: SparkSession)(body: Loop => DataFrame): DataFrame = {
     BoundedCache.evict(site)
-    val loop = new Loop(loopSession(caller))
+    val loop = new Loop(Session.derived(caller, Session.Loop))
     val last = try body(loop) finally loop.free()
-    GraftBridge.ofRows(caller, BoundedCache.retain(site, last).queryExecution.analyzed)
+    Session.bind(BoundedCache.retain(site, last), caller)
   }
-
-  /** The caller's loop session, made once per caller conf and listener set:
-    * whole-stage code is compiled per session, so a fresh clone per run
-    * recompiled every generated class the loop runs (measured at sf0.01:
-    * about 39 classes and +1.5 s of task CPU per warm graph_pagerank run).
-    * A changed conf or listener set on the caller makes a new clone, so
-    * the loop sees the caller's settings and reports to its listeners. */
-  private def loopSession(caller: SparkSession): SparkSession = sessions.synchronized {
-    val state = (caller.conf.getAll, GraftBridge.queryListeners(caller))
-    sessions.get(caller) match {
-      case Some((`state`, session)) => session
-      case _ =>
-        val session = GraftBridge.cloneSession(caller)
-        session.conf.set(SQLConf.ADAPTIVE_EXECUTION_ENABLED.key, "false")
-        sessions(caller) = (state, session)
-        session
-    }
-  }
-  private val sessions =
-    mutable.WeakHashMap.empty[SparkSession, ((Map[String, String], Seq[AnyRef]), SparkSession)]
 
   final class Loop private[Fixpoint] (session: SparkSession) {
     private var setup = List.empty[DataFrame]
 
     /** `df` rebound to the loop's session. */
-    def bind(df: DataFrame): DataFrame = GraftBridge.ofRows(session, df.queryExecution.analyzed)
+    def bind(df: DataFrame): DataFrame = Session.bind(df, session)
 
     /** `df` persisted until the loop exits. Lazy: its blocks build inside
       * the first job that reads it. */

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.Session
 import graft.schemas.{Schemas, Tables}
 import graft.ops.Ops
 import graft.functions.Exprs
@@ -307,17 +308,15 @@ object PackCore {
         StructField("user_id", LongType), StructField("event_type", StringType),
         StructField("value", DoubleType), StructField("props", StringType)))
       val name = s"st4_live_run_${streamRun.incrementAndGet()}"
-      withStreamPartitions(s, 4) {
-        val q = eventsStream(s, d, sch)
-          .withColumn("ts", graft.schemas.Tables.eventsStreamTs(rawTs))
-          .groupBy(window($"ts", "1 hour"), $"event_type").count()
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.table(name)
+      val ss = Session.derived(s, Session.Stream)
+      eventsStream(ss, d, sch)
+        .withColumn("ts", graft.schemas.Tables.eventsStreamTs(rawTs))
+        .groupBy(window($"ts", "1 hour"), $"event_type").count()
+        .writeStream.format("memory").queryName(name)
+        .outputMode("complete")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
+      Session.bind(ss.table(name), s)
         .select($"window.start".as("window_start"), $"event_type", $"count".as("n"))
         .orderBy($"window_start", $"event_type")
     },
@@ -341,13 +340,13 @@ object PackCore {
       val sch = StructType(Seq(StructField("event_id", LongType),
         StructField("user_id", LongType), StructField("event_type", StringType)))
       graft.streaming.StreamingOps.runToWarehouse(
-        graft.streaming.StreamingOps.fileSource(s, in, sch), wh, err, ckpt)
-        .awaitTermination()
+        graft.streaming.StreamingOps.fileSource(Session.derived(s, Session.Stream), in, sch),
+        wh, err, ckpt).awaitTermination()
       // second arrival: the shared checkpoint makes this run incremental
       stageArrival(in, base.filter($"event_id" % 2 =!= 0), "b2")
       graft.streaming.StreamingOps.runToWarehouse(
-        graft.streaming.StreamingOps.fileSource(s, in, sch), wh, err, ckpt)
-        .awaitTermination()
+        graft.streaming.StreamingOps.fileSource(Session.derived(s, Session.Stream), in, sch),
+        wh, err, ckpt).awaitTermination()
       Tables.siteRead(s, "PackCore:352", wh).groupBy($"user_id")
         .agg(count(lit(1)).as("n")).orderBy($"user_id")
     },
@@ -376,7 +375,7 @@ object PackCore {
         StructField("user_id", LongType), StructField("event_type", StringType)))
       // /proc is unwritable → foreachBatch catch routes the batch to err
       graft.streaming.StreamingOps.runToWarehouse(
-        graft.streaming.StreamingOps.fileSource(s, in, sch),
+        graft.streaming.StreamingOps.fileSource(Session.derived(s, Session.Stream), in, sch),
         "/proc/graft_forbidden_wh", err, ckpt)
         .awaitTermination()
       Tables.siteRead(s, "PackCore:383", err)
@@ -404,8 +403,9 @@ object PackCore {
         .select($"event_id", $"user_id", $"value")
       val sch = StructType(Seq(StructField("event_id", LongType),
         StructField("user_id", LongType), StructField("value", DoubleType)))
+      val ss = Session.derived(s, Session.StatefulStream)
       def drain(): Unit = {
-        val ds = graft.streaming.StreamingOps.fileSource(s, in, sch)
+        val ds = graft.streaming.StreamingOps.fileSource(ss, in, sch)
           .as(org.apache.spark.sql.Encoders.product[graft.streaming.StreamingOps.EventRow])
         graft.streaming.StreamingOps.runningTotals(ds)
           .writeStream.outputMode("update")
@@ -417,14 +417,10 @@ object PackCore {
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start().awaitTermination()
       }
-      withRocksDb(s) {
-        withStreamPartitions(s, 4) {
-          stageArrival(in, base.filter($"event_id" % 2 === 0), "b1")
-          drain()
-          stageArrival(in, base.filter($"event_id" % 2 =!= 0), "b2")
-          drain() // resumes the ValueState from the checkpoint
-        }
-      }
+      stageArrival(in, base.filter($"event_id" % 2 === 0), "b1")
+      drain()
+      stageArrival(in, base.filter($"event_id" % 2 =!= 0), "b2")
+      drain() // resumes the ValueState from the checkpoint
       // n is monotone per user, so the latest update is max(n)
       Tables.siteRead(s, "PackCore:430", out).groupBy($"user_id")
         .agg(max($"n").as("n")).orderBy($"user_id")
@@ -474,17 +470,16 @@ object PackCore {
       // form is an invariant of the stored index — see pruneBands)
       val idx = graft.ext.BoundedCache.perRun("PackCore:st8.prunedIdx",
         graft.ext.TextDedup.pruneBands(PackExt.persistedBandIndex(s, d)))
+      val ss = Session.derived(s, Session.Stream)
       def drain(): Unit = graft.streaming.StreamingOps.runGatedToWarehouse(
-        graft.streaming.StreamingOps.fileSource(s, in, sch), idx,
+        graft.streaming.StreamingOps.fileSource(ss, in, sch), idx,
         "doc_id", "text", wh, ckpt).awaitTermination()
-      withStreamPartitions(s, 4) {
-        stageArrival(in, newDocs.filter($"doc_id" % 20 === 0), "b1")
-        drain()
-        // second arrival: the shared checkpoint processes ONLY the new
-        // files, and the batch probes the same stored index
-        stageArrival(in, newDocs.filter($"doc_id" % 20 =!= 0), "b2")
-        drain()
-      }
+      stageArrival(in, newDocs.filter($"doc_id" % 20 === 0), "b1")
+      drain()
+      // second arrival: the shared checkpoint processes ONLY the new
+      // files, and the batch probes the same stored index
+      stageArrival(in, newDocs.filter($"doc_id" % 20 =!= 0), "b2")
+      drain()
       Tables.siteRead(s, "PackCore:484", wh).select($"doc_id").orderBy($"doc_id")
     },
 
@@ -550,15 +545,14 @@ object PackCore {
         .select($"doc_id", $"text")
       val sch = StructType(Seq(StructField("doc_id", LongType),
         StructField("text", StringType)))
+      val ss = Session.derived(s, Session.Stream)
       def drain(): Unit = graft.streaming.StreamingOps.runGatedToWarehouseGrowing(
-        graft.streaming.StreamingOps.fileSource(s, in, sch), idxDir,
+        graft.streaming.StreamingOps.fileSource(ss, in, sch), idxDir,
         "doc_id", "text", wh, ckpt).awaitTermination()
-      withStreamPartitions(s, 4) {
-        stageArrival(in, newDocs.filter($"doc_id" % 20 === 0), "b1")
-        drain()
-        stageArrival(in, newDocs.filter($"doc_id" % 20 =!= 0), "b2")
-        drain()
-      }
+      stageArrival(in, newDocs.filter($"doc_id" % 20 === 0), "b1")
+      drain()
+      stageArrival(in, newDocs.filter($"doc_id" % 20 =!= 0), "b2")
+      drain()
       Tables.siteRead(s, "PackCore:558", wh).select($"doc_id").orderBy($"doc_id")
     },
 
@@ -584,8 +578,9 @@ object PackCore {
         StructField("event_id", LongType), StructField("ts", rawTs),
         StructField("user_id", LongType), StructField("event_type", StringType),
         StructField("value", DoubleType), StructField("props", StringType)))
+      val ss = Session.derived(s, Session.Stream)
       def sideStream(tpe: String, userN: String, idN: String, tsN: String) =
-        eventsStream(s, d, sch)
+        eventsStream(ss, d, sch)
           .withColumn("tsn", graft.schemas.Tables.eventsStreamTs(rawTs))
           .filter($"event_type" === tpe)
           .select($"user_id".as(userN), $"event_id".as(idN), $"tsn".as(tsN))
@@ -593,19 +588,16 @@ object PackCore {
       val views = sideStream("view", "user_id", "view_id", "vts")
       val clicks = sideStream("click", "cuser", "click_id", "cts")
       val name = s"st10_live_run_${streamRun.incrementAndGet()}"
-      withStreamPartitions(s, 4) {
-        val q = views.join(clicks,
-            $"user_id" === $"cuser" &&
-              $"cts" >= $"vts" &&
-              $"cts" <= $"vts" + expr("INTERVAL 10 MINUTES"))
-          .select($"user_id", $"view_id", $"click_id")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.table(name).orderBy($"user_id", $"view_id", $"click_id")
+      views.join(clicks,
+          $"user_id" === $"cuser" &&
+            $"cts" >= $"vts" &&
+            $"cts" <= $"vts" + expr("INTERVAL 10 MINUTES"))
+        .select($"user_id", $"view_id", $"click_id")
+        .writeStream.format("memory").queryName(name)
+        .outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
+      Session.bind(ss.table(name), s).orderBy($"user_id", $"view_id", $"click_id")
     },
 
     // K4 (live) — DDL bootstrap + catalog roundtrip: CREATE TABLE ...
@@ -1043,7 +1035,8 @@ object PackCore {
         |  FROM range(0, 900) t(id))
         |ORDER BY id""".stripMargin) { (s, d) =>
       val name = s"s7_stream_run_${streamRun.incrementAndGet()}"
-      val q = s.readStream.format("graft-ledger")
+      val ss = Session.derived(s, Session.Stream)
+      val q = ss.readStream.format("graft-ledger")
         .option("rows", 900).option("slices", 3).option("rowsPerBatch", 250).load()
         .writeStream.format("memory").queryName(name)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -1051,7 +1044,7 @@ object PackCore {
           java.nio.file.Files.createTempDirectory("graft_s7_ck").toString)
         .start()
       q.awaitTermination()
-      s.table(name).select($"id", $"bucket", $"amount").orderBy($"id")
+      Session.bind(ss.table(name), s).select($"id", $"bucket", $"amount").orderBy($"id")
     },
 
     // K9 — the transactional V2 sink as a declared roundtrip: an
@@ -1158,77 +1151,6 @@ object PackCore {
   // memory-sink table names must be unique per execution (bench re-runs
   // each query in one session)
   private[queries] val streamRun = new java.util.concurrent.atomic.AtomicInteger()
-
-  /** Run `body` with the session's shuffle-partition count temporarily
-    * right-sized for a live fixture-scale STATEFUL streaming execution.
-    * Stateful streaming cost scales with STATE PARTITIONS, not data:
-    * every micro-batch commits every store instance (a stream-stream
-    * join keeps 4 stores per partition; transformWithState opens one
-    * RocksDB per partition), so at fixture scale the session's CPU-width
-    * 32 partitions are ~all empty yet each pays snapshot/commit I/O per
-    * batch. Production discipline is the same — size a streaming job's
-    * shuffle partitions to its throughput, not the cluster width (state
-    * repartitioning requires a new checkpoint, so jobs pin this at
-    * deploy). The stream-stream join measured 5.6 s at 32 partitions vs
-    * 2.2 s at 8 on identical data; the batch-equivalent join is 0.45 s
-    * (NOTES.md, "Measurement harness"). Restores the previous value on
-    * exit; results are partition-count invariant (pinned by
-    * PartitionInvarianceSpec). */
-  /** Scoped shuffle-partition override for the streaming drains. The
-    * fixture dial is 4 (was 8 through r16): a partition sweep measured
-    * the stateful drain floor as per-state-partition RocksDB machinery
-    * (2.04 s at 8 → 1.58 s at 4 for an identical 100-row drain), and
-    * the declared results are partition-count-invariant by hash check.
-    * At deployment scale this same dial goes to thousands — SCALE.md
-    * §4l/§4m are the measurements behind both directions. */
-  private[queries] def withStreamPartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
-
-  /** transformWithState requires the RocksDB state store provider; scope
-    * it to the body and restore (or unset) the previous value — one
-    * helper instead of the save/set/try/finally block per query.
-    *
-    * Changelog checkpointing rides along (r17 optimization round):
-    * per-batch commits upload the batch's CHANGELOG instead of a full
-    * RocksDB snapshot — the production discipline for RocksDB state at
-    * scale (snapshot cost grows with STATE size, changelog with BATCH
-    * size), and measured locally it shaves ~11% off the per-drain floor
-    * (0.84 → 0.75 s at 4 state partitions; NOTES.md, "Measurement
-    * harness").
-    * The state data source (st11/st21) reconstructs versions from
-    * snapshot + changelogs, so the reader surface is unchanged. */
-  private[queries] def withRocksDb[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val clKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prev = scala.util.Try(s.conf.get(key)).toOption
-    val prevCl = scala.util.Try(s.conf.get(clKey)).toOption
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // The r17 SPARK_GRAFT_CHANGELOG A/B dial is GONE (r18): the deferred
-    // two-drain A/B ran on a calib-stable window (0.43-0.51 across four
-    // interleaved TimeQuery sessions, min-of-min over both pass orders —
-    // plans/r18/ab_changelog.txt) and changelog checkpointing WON: off
-    // read 1.07-1.15x slower on st19/st20/st21/st22 and at parity
-    // (0.94-0.97) on st11/st18. Together with the production rationale
-    // (snapshot cost grows with STATE size, changelog with BATCH size)
-    // the setting is now unconditional.
-    s.conf.set(clKey, "true")
-    try body finally {
-      prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None    => s.conf.unset(key)
-      }
-      prevCl match {
-        case Some(v) => s.conf.set(clKey, v)
-        case None    => s.conf.unset(clKey)
-      }
-    }
-  }
 
   /** Streaming reader for the events table that works on BOTH fixture
     * layouts: the driver testdata ships `events.parquet` as a single

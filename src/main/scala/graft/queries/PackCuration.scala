@@ -876,7 +876,8 @@ object PackCuration {
         .coalesce(1).write.parquet(in + "/b1")
       val sch = StructType(Seq(StructField("event_id", LongType),
         StructField("event_type", StringType)))
-      val q = s.readStream.schema(sch).parquet(in + "/*")
+      val q = graft.Session.derived(s, graft.Session.Stream)
+        .readStream.schema(sch).parquet(in + "/*")
         .groupBy(col("event_type")).count()
         .writeStream.format("noop").outputMode("update")
         .option("checkpointLocation", ckpt)

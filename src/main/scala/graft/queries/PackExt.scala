@@ -2309,7 +2309,8 @@ object PackExt {
       val docSchema = StructType(Seq(StructField("doc_id", LongType),
         StructField("text", StringType)))
       def drain(): Unit = {
-        val q = s.readStream.schema(docSchema).parquet(in)
+        val q = graft.Session.derived(s, graft.Session.Stream)
+          .readStream.schema(docSchema).parquet(in)
           .writeStream.foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
             // the artifact resolves AT BATCH TIME: current manifest +
             // current version number, then the bounded encode — the

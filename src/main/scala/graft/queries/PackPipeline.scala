@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.GraftBridge.{column, expression}
+import graft.Session
 import graft.ext.{BoundedCache, Similarity, TextDedup}
 import graft.schemas.Tables
 
@@ -39,20 +40,19 @@ object PackPipeline {
     org.apache.spark.sql.types.StructField("ms",
       org.apache.spark.sql.types.LongType)))
 
-  /** Shared RocksDB two-drain scaffold for the live TWS queries: stage
-    * `b1`, drain, stage `b2`, drain — two query RESTARTS over one
-    * checkpoint, under the RocksDB provider and 8 stream partitions. */
+  /** Shared two-drain scaffold for the live TWS queries: stage `b1`,
+    * drain, stage `b2`, drain — two query RESTARTS over one checkpoint.
+    * `drain` starts its stream from the [[Session.StatefulStream]]
+    * session it is given. */
   private def stagedTwoDrains(s: SparkSession, in: String,
                               b1: org.apache.spark.sql.DataFrame,
-                              b2: org.apache.spark.sql.DataFrame)(drain: () => Unit): Unit =
-    PackCore.withRocksDb(s) {
-      PackCore.withStreamPartitions(s, 4) {
-        PackCore.stageArrival(in, b1, "b1")
-        drain()
-        PackCore.stageArrival(in, b2, "b2")
-        drain()
-      }
-    }
+                              b2: org.apache.spark.sql.DataFrame)(drain: SparkSession => Unit): Unit = {
+    val ss = Session.derived(s, Session.StatefulStream)
+    PackCore.stageArrival(in, b1, "b1")
+    drain(ss)
+    PackCore.stageArrival(in, b2, "b2")
+    drain(ss)
+  }
 
   /** st18/st21 shared streaming drive: stage `base` (event_id, user_id,
     * event_type, cents) as two arrivals split by event_id parity and
@@ -63,8 +63,8 @@ object PackPipeline {
                                in: String, out: String, ckpt: String): Unit = {
     import s.implicits._
     import graft.streaming.{TwsEvent, UserProfileProcessor}
-    def drain(): Unit = {
-      val q = s.readStream.schema(twsSchema).parquet(in)
+    def drain(ss: SparkSession): Unit = {
+      val q = ss.readStream.schema(twsSchema).parquet(in)
         .as[TwsEvent]
         .groupByKey(_.user_id)
         .transformWithState(new UserProfileProcessor,
@@ -80,7 +80,7 @@ object PackPipeline {
     }
     stagedTwoDrains(s, in,
       base.filter(col("event_id") % 2 === 0).drop("event_id"),
-      base.filter(col("event_id") % 2 =!= 0).drop("event_id"))(drain _)
+      base.filter(col("event_id") % 2 =!= 0).drop("event_id"))(drain)
   }
 
   /** DuckDB-side sequential-double dot/cos matching Similarity.dot. */
@@ -398,8 +398,9 @@ object PackPipeline {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("ts",
           org.apache.spark.sql.types.TimestampType)))
+      val ss = Session.derived(s, Session.Stream)
       def drain(): Unit = {
-        val q = s.readStream.schema(sch).parquet(in)
+        val q = ss.readStream.schema(sch).parquet(in)
           .withWatermark("ts", "1 hour")
           .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
           .agg(count(lit(1)).as("n"))
@@ -411,12 +412,10 @@ object PackPipeline {
           .start()
         q.awaitTermination()
       }
-      PackCore.withStreamPartitions(s, 4) {
-        PackCore.stageArrival(in, base, "b1")
-        drain()
-        PackCore.stageArrival(in, sentinel, "b2")
-        drain() // sentinel pushes the watermark past every real session
-      }
+      PackCore.stageArrival(in, base, "b1")
+      drain()
+      PackCore.stageArrival(in, sentinel, "b2")
+      drain() // sentinel pushes the watermark past every real session
       Tables.siteRead(s, "PackPipeline:419", out).filter(col("user_id") >= 0)
         .orderBy(col("user_id"), col("session_start"))
     },
@@ -450,18 +449,16 @@ object PackPipeline {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("user_id",
           org.apache.spark.sql.types.LongType)))
-      PackCore.withStreamPartitions(s, 4) {
-        val q = s.readStream.schema(sch).parquet(in)
-          .withColumn("ck", col("user_id") % nCust)
-          .join(broadcast(cust), col("ck") === col("c_custkey"))
-          .select(col("event_id"), col("user_id"), col("c_mktsegment"))
-          .writeStream.format("parquet")
-          .option("path", out).option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val ss = Session.derived(s, Session.Stream)
+      ss.readStream.schema(sch).parquet(in)
+        .withColumn("ck", col("user_id") % nCust)
+        .join(broadcast(Session.bind(cust, ss)), col("ck") === col("c_custkey"))
+        .select(col("event_id"), col("user_id"), col("c_mktsegment"))
+        .writeStream.format("parquet")
+        .option("path", out).option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
       Tables.siteRead(s, "PackPipeline:464", out).orderBy(col("event_id"))
     },
 
@@ -707,9 +704,10 @@ object PackPipeline {
         org.apache.spark.sql.types.StructField("cuser", lt),
         org.apache.spark.sql.types.StructField("click_id", lt),
         org.apache.spark.sql.types.StructField("cts", tt)))
+      val ss = Session.derived(s, Session.Stream)
       def drain(): Unit = {
-        val vs = s.readStream.schema(vsch).parquet(vin).withWatermark("vts", "1 hour")
-        val cs = s.readStream.schema(csch).parquet(cin).withWatermark("cts", "1 hour")
+        val vs = ss.readStream.schema(vsch).parquet(vin).withWatermark("vts", "1 hour")
+        val cs = ss.readStream.schema(csch).parquet(cin).withWatermark("cts", "1 hour")
         val q = vs.join(cs,
             col("user_id") === col("cuser") &&
               col("cts") >= col("vts") &&
@@ -723,21 +721,17 @@ object PackPipeline {
           .start()
         q.awaitTermination()
       }
-      // outer joins keep FOUR state stores per partition per side —
-      // partition-count is the per-batch commit bill, so size it to the
-      // fixture's state volume (NOTES.md, "Measurement harness"; at
-      // deployment scale this is thousands, sized the same way): 8→4
-      // cuts ~0.5 s/run here
-      PackCore.withStreamPartitions(s, 4) {
-        PackCore.stageArrival(vin, views, "b1")
-        PackCore.stageArrival(cin, clicks, "b1")
-        drain()
-        PackCore.stageArrival(vin, far.select(lit(-1L).as("user_id"),
-          lit(-1L).as("view_id"), col("far").as("vts")), "b2")
-        PackCore.stageArrival(cin, far.select(lit(-2L).as("cuser"),
-          lit(-1L).as("click_id"), col("far").as("cts")), "b2")
-        drain() // watermark passes every real view's window → nulls flush
-      }
+      // outer joins keep FOUR state stores per partition per side, so
+      // the stream session's partition count is the per-batch commit bill
+      // (8 → 4 cut about 0.5 s/run here; NOTES.md, "Measurement harness")
+      PackCore.stageArrival(vin, views, "b1")
+      PackCore.stageArrival(cin, clicks, "b1")
+      drain()
+      PackCore.stageArrival(vin, far.select(lit(-1L).as("user_id"),
+        lit(-1L).as("view_id"), col("far").as("vts")), "b2")
+      PackCore.stageArrival(cin, far.select(lit(-2L).as("cuser"),
+        lit(-1L).as("click_id"), col("far").as("cts")), "b2")
+      drain() // watermark passes every real view's window → nulls flush
       Tables.siteRead(s, "PackPipeline:739", out).filter(col("user_id") >= 0)
         .orderBy(col("user_id"), col("view_id"), col("click_id"))
     },
@@ -923,18 +917,16 @@ object PackPipeline {
         org.apache.spark.sql.types.StructField("ts",
           org.apache.spark.sql.types.TimestampType)))
       val name = s"st15_live_run_$run"
-      PackCore.withStreamPartitions(s, 4) {
-        val q = s.readStream.schema(sch).parquet(in)
-          .withWatermark("ts", "90 days")
-          .dropDuplicatesWithinWatermark("user_id", "event_type")
-          .select(col("user_id"), col("event_type"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.table(name).orderBy(col("user_id"), col("event_type"))
+      val ss = Session.derived(s, Session.Stream)
+      ss.readStream.schema(sch).parquet(in)
+        .withWatermark("ts", "90 days")
+        .dropDuplicatesWithinWatermark("user_id", "event_type")
+        .select(col("user_id"), col("event_type"))
+        .writeStream.format("memory").queryName(name)
+        .outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
+      Session.bind(ss.table(name), s).orderBy(col("user_id"), col("event_type"))
     },
 
     // Mergeable-sketch ROLLUP (Apache DataSketches HLL, the Spark 3.5+
@@ -1082,7 +1074,7 @@ object PackPipeline {
           org.apache.spark.sql.types.DoubleType)))
       def drain(): Unit = {
         val ckpt = java.nio.file.Files.createTempDirectory(s"graft_st16_ck$run").toString
-        val q = s.readStream.schema(sch).parquet(in)
+        val q = Session.derived(s, Session.Stream).readStream.schema(sch).parquet(in)
           .writeStream
           .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
             // heavy half distributed; the per-user rollup is small
@@ -1139,10 +1131,8 @@ object PackPipeline {
           .start()
         q.awaitTermination()
       }
-      PackCore.withStreamPartitions(s, 4) {
-        drain()
-        drain() // fresh checkpoint ⇒ batch 0 REDELIVERED ⇒ must be skipped
-      }
+      drain()
+      drain() // fresh checkpoint ⇒ batch 0 REDELIVERED ⇒ must be skipped
       s.read.format("jdbc").option("url", url).option("driver", driver)
         .option("dbtable", "USER_TOTALS").load()
         .select(col("USER_ID").as("user_id"), col("N").as("n"),
@@ -1331,18 +1321,17 @@ object PackPipeline {
           org.apache.spark.sql.types.DoubleType)))
       def drain(): Unit = {
         val q = graft.streaming.StreamingOps.runMergeToWarehouse(
-          s.readStream.schema(sch).parquet(in), wh, Seq("event_id"), ckpt)
+          Session.derived(s, Session.Stream).readStream.schema(sch).parquet(in),
+          wh, Seq("event_id"), ckpt)
         q.awaitTermination()
       }
-      PackCore.withStreamPartitions(s, 4) {
-        PackCore.stageArrival(in, base, "b1")
-        drain()
-        PackCore.stageArrival(in,
-          base.filter(col("event_id") % 21 === 0)
-            .select(col("event_id"), col("user_id"),
-              (col("value") + 1000).as("value")), "b2")
-        drain() // corrections must overwrite, not duplicate
-      }
+      PackCore.stageArrival(in, base, "b1")
+      drain()
+      PackCore.stageArrival(in,
+        base.filter(col("event_id") % 21 === 0)
+          .select(col("event_id"), col("user_id"),
+            (col("value") + 1000).as("value")), "b2")
+      drain() // corrections must overwrite, not duplicate
       Tables.siteRead(s, "PackPipeline:1344", wh)
         .select(col("event_id"), col("user_id"), col("value"))
         .orderBy(col("event_id"))
@@ -2126,32 +2115,28 @@ object PackPipeline {
       val base = Tables.events(s, d).filter(col("event_id") % 10 === 0)
         .select(col("event_id"), col("user_id"), col("event_type"),
           round(coalesce(col("value"), lit(0.0)) * 100).cast("long").as("cents"))
+      val ss = Session.derived(s, Session.StatefulStream)
       // the "historical" aggregate table the stream warm-starts from
-      val snapshot = base.filter(col("event_id") % 3 === 0)
+      val snapshot = Session.bind(base, ss).filter(col("event_id") % 3 === 0)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"))
         .as[(Long, Long, Long)]
         .groupByKey(_._1).mapValues(t => TwsAgg(t._2, t._3))
-      PackCore.withRocksDb(s) {
-        PackCore.withStreamPartitions(s, 4) {
-          PackCore.stageArrival(in,
-            base.filter(col("event_id") % 3 =!= 0).drop("event_id"), "b1")
-          val q = s.readStream.schema(twsSchema).parquet(in)
-            .as[TwsEvent]
-            .groupByKey(_.user_id)
-            .transformWithState(new WarmStartProcessor,
-              org.apache.spark.sql.streaming.TimeMode.None(),
-              org.apache.spark.sql.streaming.OutputMode.Append(),
-              snapshot)
-            .toDF()
-            .writeStream.format("parquet")
-            .option("path", out).option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-      }
+      PackCore.stageArrival(in,
+        base.filter(col("event_id") % 3 =!= 0).drop("event_id"), "b1")
+      ss.readStream.schema(twsSchema).parquet(in)
+        .as[TwsEvent]
+        .groupByKey(_.user_id)
+        .transformWithState(new WarmStartProcessor,
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          org.apache.spark.sql.streaming.OutputMode.Append(),
+          snapshot)
+        .toDF()
+        .writeStream.format("parquet")
+        .option("path", out).option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
       Tables.siteRead(s, "PackPipeline:2153", out).orderBy(col("user_id"))
     },
 
@@ -2203,8 +2188,8 @@ object PackPipeline {
             .select(lit(-1L).as("user_id"),
               (lit(mxTs) + expr("INTERVAL 240 HOURS")).as("ts"))
             .select(col("user_id"), col("ts"), unix_millis(col("ts")).as("ms"))
-          def drain(): Unit = {
-            val q = s.readStream.schema(tsSchema).parquet(in)
+          def drain(ss: SparkSession): Unit = {
+            val q = ss.readStream.schema(tsSchema).parquet(in)
               .withWatermark("ts", "1 hour")
               .as[TsEvent]
               .groupByKey(_.user_id)
@@ -2220,7 +2205,7 @@ object PackPipeline {
             q.awaitTermination()
           }
           // b2 sentinel: its watermark advance fires every real key's timer
-          stagedTwoDrains(s, in, base, sentinel)(drain _)
+          stagedTwoDrains(s, in, base, sentinel)(drain)
           Tables.siteRead(s, "PackPipeline:2222", out).filter(col("user_id") >= 0)
             .orderBy(col("user_id"), col("start_ms"))
       }
@@ -2373,8 +2358,8 @@ object PackPipeline {
           val flush = base.select(col("user_id")).distinct()
             .select(col("user_id"), timestamp_millis(lit(flushAtMs)).as("ts"),
               lit(flushAtMs).as("ms"))
-          def drain(): Unit = {
-            val q = s.readStream.schema(tsSchema).parquet(in)
+          def drain(ss: SparkSession): Unit = {
+            val q = ss.readStream.schema(tsSchema).parquet(in)
               .withWatermark("ts", s"$delaySec seconds")
               .as[TsEvent]
               .groupByKey(_.user_id)
@@ -2394,7 +2379,7 @@ object PackPipeline {
           }
           // b2 flush closes every tail and clears the flushed keys'
           // state; the downstream windows then close
-          stagedTwoDrains(s, in, base, flush)(drain _)
+          stagedTwoDrains(s, in, base, flush)(drain)
           Tables.siteRead(s, "PackPipeline:2396", out).orderBy(col("w"))
         case (None, None) => // empty slice: nothing to sessionize
           Seq.empty[(java.sql.Timestamp, Long, Long)]

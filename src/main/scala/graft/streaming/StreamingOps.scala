@@ -93,16 +93,18 @@ object StreamingOps {
     * that aggregation is a full index pass per arriving batch —
     * production prunes once per index VERSION). The growing-index form
     * below cannot hoist this: its guard is declared over the CURRENT
-    * index, which a batch's own survivors mutate. */
+    * index, which a batch's own survivors mutate. The index is rebound to
+    * the stream's session, like every static side joined into a stream. */
   def runGatedToWarehouse(stream: DataFrame, prunedBands: DataFrame,
                           id: String, text: String, warehouseDir: String,
-                          checkpointDir: String): StreamingQuery =
+                          checkpointDir: String): StreamingQuery = {
+    val bands = graft.Session.bind(prunedBands, stream.sparkSession)
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         val clean = graft.ext.TextDedup
-          .lshProbePruned(prunedBands, batch.toDF(), id, text)
+          .lshProbePruned(bands, batch.toDF(), id, text)
           .filter(col("n_cand") === 0)
           .select(col("new_id").as(id))
         batch.toDF().join(clean, Seq(id), "left_semi")
@@ -110,6 +112,7 @@ object StreamingOps {
         ()
       }
       .start()
+  }
 
   /** Growing-index form of [[runGatedToWarehouse]] — the full analog of
     * the reference's ACCUMULATING loaded-id set: after a batch's clean

@@ -1,14 +1,17 @@
 package graft.tools
 
+import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
 import scala.util.Try
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.QueryPlanningTracker
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
 import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode, QueryExecution, SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -57,14 +60,16 @@ import graft.queries.Pack
   * `durationMs` summed per streaming phase (`stream_ms`) and
   * `state_commit_ms`; `windows_1p`, the `Window` operators with no
   * partition spec (one task holds their whole input) in every execution
-  * the phase ran, so `construct` counts the eager sub-jobs' windows. Events
-  * count toward the phase running when they are delivered, and the
-  * listener bus is drained after each phase, so a phase's counters are
-  * complete before the next one starts. The listeners live on `spark`
-  * only for the duration of [[record]]. A streaming query runs on a clone
-  * of the session, which copies its query-execution listeners: the
-  * clone's executions count toward the running phase, and the copy stays
-  * on the clone, dropping every event, until the clone is collected.
+  * the phase ran, so `construct` counts the eager sub-jobs' windows; and
+  * the JVM-wide compile layer: `codegen_compiles` (`CodegenMetrics`'
+  * compile count), `codegen_ms` (`CodeGenerator.compileTime`, the exact
+  * sum the histogram only samples), `classes_loaded` and `jit_ms` (JIT
+  * compiler threads' time, not wall). Events count toward the phase
+  * running when they are delivered, and the listener bus is drained after
+  * each phase, so a phase's counters are complete before the next one
+  * starts. The listeners live on `spark` only for the duration of
+  * [[record]]; streams and fixpoint loops reach them through the
+  * forwarders of their [[graft.Session.derived]] session.
   *
   * Every line also carries `plan`: the [[planFacts]] node counts of the
   * frame's own `df.queryExecution.executedPlan`, walked by [[nodes]]
@@ -113,10 +118,12 @@ object TimeQuery {
       def phase[A](body: => A): (A, Phase) = {
         val p = new Phase
         rec.phase = p
+        val layer0 = compileLayer()
         val t0 = System.nanoTime()
         val a = body
         p.add("wall_s", (System.nanoTime() - t0) / 1e9)
         GraftBridge.waitListenerBusEmpty(spark)
+        compileLayer().zip(layer0).foreach { case ((k, x1), (_, x0)) => p.add(k, x1 - x0) }
         rec.phase = null
         (a, p)
       }
@@ -182,7 +189,15 @@ object TimeQuery {
   private val counters = Seq("wall_s", "analysis_ms", "optimization_ms", "planning_ms",
     "jobs", "stages", "tasks", "task_cpu_s", "gc_s", "shuffle_read_bytes",
     "shuffle_write_bytes", "spill_bytes", "stream_queries", "stream_batches", "state_commit_ms",
-    "windows_1p")
+    "windows_1p", "codegen_compiles", "codegen_ms", "classes_loaded", "jit_ms")
+
+  /** The JVM-wide compile-layer counters, as running totals. */
+  private def compileLayer(): Seq[(String, Double)] = Seq(
+    "codegen_compiles" -> CodegenMetrics.METRIC_COMPILATION_TIME.getCount.toDouble,
+    "codegen_ms" -> CodeGenerator.compileTime / 1e6,
+    "classes_loaded" -> ManagementFactory.getClassLoadingMXBean.getTotalLoadedClassCount.toDouble,
+    "jit_ms" -> Option(ManagementFactory.getCompilationMXBean).filter(_.isCompilationTimeMonitoringSupported)
+      .fold(0.0)(_.getTotalCompilationTime.toDouble))
 
   private val tracked = Seq(QueryPlanningTracker.ANALYSIS, QueryPlanningTracker.OPTIMIZATION,
     QueryPlanningTracker.PLANNING)

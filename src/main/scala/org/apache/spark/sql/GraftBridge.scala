@@ -21,8 +21,38 @@ object GraftBridge {
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[classic.SparkSession].cloneSession()
 
-  /** The query-execution listeners registered on `spark`. */
-  def queryListeners(spark: SparkSession): Seq[AnyRef] = spark.listenerManager.listListeners().toSeq
+  /** Make `derived` report to `caller`'s listeners: drop the
+    * query-execution and streaming listeners `derived` holds and register
+    * one forwarder of each kind, which holds `caller` weakly and hands
+    * each event to the listeners `caller` holds when it arrives. Clones
+    * of `derived` (a stream runs on one) copy the forwarder, never a
+    * caller listener. A listener that throws does not stop delivery to
+    * the others; the first failure is rethrown for Spark's bus to log. */
+  def forwardListeners(derived: SparkSession, caller: SparkSession): Unit = {
+    val ref = new java.lang.ref.WeakReference(caller)
+    def each[L](listeners: SparkSession => Seq[L])(f: L => Unit): Unit =
+      Option(ref.get).foreach { c =>
+        val failures = listeners(c).flatMap(l => scala.util.Try(f(l)).failed.toOption)
+        failures.headOption.foreach(throw _)
+      }
+    val queries = each(_.listenerManager.listListeners().toSeq) _
+    val streams = each(_.streams.listListeners().toSeq) _
+    derived.listenerManager.clear()
+    derived.streams.listListeners().foreach(derived.streams.removeListener)
+    derived.listenerManager.register(new util.QueryExecutionListener {
+      def onSuccess(f: String, qe: execution.QueryExecution, ns: Long): Unit =
+        queries(_.onSuccess(f, qe, ns))
+      def onFailure(f: String, qe: execution.QueryExecution, e: Exception): Unit =
+        queries(_.onFailure(f, qe, e))
+    })
+    derived.streams.addListener(new streaming.StreamingQueryListener {
+      import streaming.StreamingQueryListener._
+      def onQueryStarted(e: QueryStartedEvent): Unit = streams(_.onQueryStarted(e))
+      def onQueryProgress(e: QueryProgressEvent): Unit = streams(_.onQueryProgress(e))
+      override def onQueryIdle(e: QueryIdleEvent): Unit = streams(_.onQueryIdle(e))
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit = streams(_.onQueryTerminated(e))
+    })
+  }
 
   /** `df` as a one-node plan over the RDD its physical plan executes to
     * (planned now; its broadcasts run now). The RDD keeps the whole

@@ -125,13 +125,23 @@ class SessionSpec extends AnyFunSuite {
     assert(installs == 3, "install is called from QDef.tuned, Ops.bandJoin and Ops.topKPerKey")
   }
 
-  test("src/main checkpoints nothing, and graft/ext writes conf only on Fixpoint's own session") {
+  /** Query code writes no session conf: streams and loops get their
+    * settings from a derived session, which only `graft.Session` makes.
+    * The one exception is Schemas' `nanosAsLong`, set on the session that
+    * reads `events`, because the flag is read again when the caller's
+    * frame executes its scan. Tools may configure the sessions they build. */
+  test("src/main checkpoints nothing, and writes conf only in Session and nanosAsLong") {
     assert(text.collect { case (p, t) if t.contains("localCheckpoint(") => p }.isEmpty)
-    val writes = text.toSeq.filter(_._1.startsWith("graft/ext/"))
-      .flatMap { case (p, t) => "conf\\.(set|unset)\\(".r.findAllIn(t).map(p -> _) }
-    assert(writes == Seq("graft/ext/Fixpoint.scala" -> "conf.set("))
-    assert(text("graft/ext/Fixpoint.scala").contains(
-      "val session = GraftBridge.cloneSession(caller)\n        session.conf.set("))
+    val writes = for {
+      (p, t) <- text.toSeq.sortBy(_._1) if !p.startsWith("graft/tools/")
+      line <- t.linesIterator if "conf\\.(set|unset)\\(".r.findFirstIn(line).nonEmpty
+    } yield p -> line.trim
+    val (session, others) = writes.partition(_._1 == "graft/Session.scala")
+    assert(session.nonEmpty)
+    assert(others == Seq.fill(2)("graft/schemas/Schemas.scala" ->
+      "s.conf.set(\"spark.sql.legacy.parquet.nanosAsLong\", \"true\")"), others)
+    for (gone <- Seq("withStreamPartitions", "withRocksDb", "applyPolicy", "loopSession"))
+      assert(!text.values.exists(_.contains(gone)), gone)
   }
 
   test("src/main reads exactly the three SPARK_GRAFT_* dials") {

@@ -160,6 +160,20 @@ class TimeQuerySpec extends AnyFunSuite {
       assert(j.get(ph).get("windows_1p").asInt == 0, s"$ph ${j.get(ph)}")
   }
 
+  test("record: every phase carries the four compile-layer counters, all >= 0") {
+    val layer = Seq("codegen_compiles", "codegen_ms", "classes_loaded", "jit_ms")
+    val all = for (j <- json.tail ++ planned.tail; ph <- phases) yield {
+      val p = j.get(ph)
+      val at = s"${j.get("query").asText} run ${j.get("run")} $ph"
+      layer.foreach(k => assert(p.has(k) && p.get(k).asDouble >= 0, s"$at $k"))
+      // compile time comes only with compiles
+      if (p.get("codegen_ms").asDouble > 0) assert(p.get("codegen_compiles").asDouble > 0, s"$at $p")
+      p
+    }
+    // the JIT compiles throughout a run, so its counter moves
+    assert(all.map(_.get("jit_ms").asDouble).sum > 0)
+  }
+
   test("record: an unknown query name fails naming it, before any query runs") {
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val counter = new SparkListener {
