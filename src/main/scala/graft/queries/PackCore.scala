@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Session
+import graft.io.Runs
 import graft.schemas.{Schemas, Tables}
 import graft.ops.Ops
 import graft.functions.Exprs
@@ -307,7 +308,7 @@ object PackCore {
         StructField("event_id", LongType), StructField("ts", rawTs),
         StructField("user_id", LongType), StructField("event_type", StringType),
         StructField("value", DoubleType), StructField("props", StringType)))
-      val name = s"st4_live_run_${streamRun.incrementAndGet()}"
+      val name = s"st4_live_run_${Runs.start(s, "st4_stream_tumbling_live").id}"
       val ss = Session.derived(s, Session.Stream)
       eventsStream(ss, d, sch)
         .withColumn("ts", graft.schemas.Tables.eventsStreamTs(rawTs))
@@ -316,7 +317,7 @@ object PackCore {
         .outputMode("complete")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start().awaitTermination()
-      Session.bind(ss.table(name), s)
+      memorySink(ss, name, s)
         .select($"window.start".as("window_start"), $"event_type", $"count".as("n"))
         .orderBy($"window_start", $"event_type")
     },
@@ -329,25 +330,22 @@ object PackCore {
     QDef("st5_trigger_file_arrival",
       """SELECT user_id, count(*) AS n FROM events
         |WHERE event_id % 97 = 0 GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, d) =>
-      val run = streamRun.incrementAndGet()
-      val in = java.nio.file.Files.createTempDirectory(s"graft_st5_in$run").toString
-      val wh = java.nio.file.Files.createTempDirectory(s"graft_st5_wh$run").toString + "/t"
-      val err = java.nio.file.Files.createTempDirectory(s"graft_st5_err$run").toString + "/e"
-      val ckpt = java.nio.file.Files.createTempDirectory(s"graft_st5_ck$run").toString
+      val run = Runs.start(s, "st5_trigger_file_arrival")
+      val err = run.sink("err")
       val base = Tables.events(s, d).filter($"event_id" % 97 === 0)
         .select($"event_id", $"user_id", $"event_type")
-      stageArrival(in, base.filter($"event_id" % 2 === 0), "b1")
+      stageArrival(run.in, base.filter($"event_id" % 2 === 0), "b1")
       val sch = StructType(Seq(StructField("event_id", LongType),
         StructField("user_id", LongType), StructField("event_type", StringType)))
       graft.streaming.StreamingOps.runToWarehouse(
-        graft.streaming.StreamingOps.fileSource(Session.derived(s, Session.Stream), in, sch),
-        wh, err, ckpt).awaitTermination()
+        graft.streaming.StreamingOps.fileSource(Session.derived(s, Session.Stream), run.in, sch),
+        run.out, err, run.ckpt).awaitTermination()
       // second arrival: the shared checkpoint makes this run incremental
-      stageArrival(in, base.filter($"event_id" % 2 =!= 0), "b2")
+      stageArrival(run.in, base.filter($"event_id" % 2 =!= 0), "b2")
       graft.streaming.StreamingOps.runToWarehouse(
-        graft.streaming.StreamingOps.fileSource(Session.derived(s, Session.Stream), in, sch),
-        wh, err, ckpt).awaitTermination()
-      Tables.siteRead(s, "PackCore:352", wh).groupBy($"user_id")
+        graft.streaming.StreamingOps.fileSource(Session.derived(s, Session.Stream), run.in, sch),
+        run.out, err, run.ckpt).awaitTermination()
+      Tables.siteRead(s, "PackCore:352", run.out).groupBy($"user_id")
         .agg(count(lit(1)).as("n")).orderBy($"user_id")
     },
 
@@ -365,18 +363,16 @@ object PackCore {
       """SELECT CAST(0 AS BIGINT) AS batch_id,
         |       TRUE AS has_error_class,
         |       CAST(1 AS BIGINT) AS n""".stripMargin) { (s, d) =>
-      val run = streamRun.incrementAndGet()
-      val in = java.nio.file.Files.createTempDirectory(s"graft_st6_in$run").toString
-      val err = java.nio.file.Files.createTempDirectory(s"graft_st6_err$run").toString + "/e"
-      val ckpt = java.nio.file.Files.createTempDirectory(s"graft_st6_ck$run").toString
-      stageArrival(in, Tables.events(s, d).filter($"event_id" % 997 === 0)
+      val run = Runs.start(s, "st6_compensation_error_table")
+      val err = run.sink("err")
+      stageArrival(run.in, Tables.events(s, d).filter($"event_id" % 997 === 0)
         .select($"event_id", $"user_id", $"event_type"), "b1")
       val sch = StructType(Seq(StructField("event_id", LongType),
         StructField("user_id", LongType), StructField("event_type", StringType)))
       // /proc is unwritable → foreachBatch catch routes the batch to err
       graft.streaming.StreamingOps.runToWarehouse(
-        graft.streaming.StreamingOps.fileSource(Session.derived(s, Session.Stream), in, sch),
-        "/proc/graft_forbidden_wh", err, ckpt)
+        graft.streaming.StreamingOps.fileSource(Session.derived(s, Session.Stream), run.in, sch),
+        "/proc/graft_forbidden_wh", err, run.ckpt)
         .awaitTermination()
       Tables.siteRead(s, "PackCore:383", err)
         .groupBy($"batch_id",
@@ -395,34 +391,31 @@ object PackCore {
     QDef("st7_stream_running_totals",
       """SELECT user_id, CAST(count(*) AS BIGINT) AS n FROM events
         |WHERE event_id % 53 = 0 GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, d) =>
-      val run = streamRun.incrementAndGet()
-      val in = java.nio.file.Files.createTempDirectory(s"graft_st7_in$run").toString
-      val out = java.nio.file.Files.createTempDirectory(s"graft_st7_out$run").toString + "/t"
-      val ckpt = java.nio.file.Files.createTempDirectory(s"graft_st7_ck$run").toString
+      val run = Runs.start(s, "st7_stream_running_totals")
       val base = Tables.events(s, d).filter($"event_id" % 53 === 0)
         .select($"event_id", $"user_id", $"value")
       val sch = StructType(Seq(StructField("event_id", LongType),
         StructField("user_id", LongType), StructField("value", DoubleType)))
       val ss = Session.derived(s, Session.StatefulStream)
       def drain(): Unit = {
-        val ds = graft.streaming.StreamingOps.fileSource(ss, in, sch)
+        val ds = graft.streaming.StreamingOps.fileSource(ss, run.in, sch)
           .as(org.apache.spark.sql.Encoders.product[graft.streaming.StreamingOps.EventRow])
         graft.streaming.StreamingOps.runningTotals(ds)
           .writeStream.outputMode("update")
-          .option("checkpointLocation", ckpt)
+          .option("checkpointLocation", run.ckpt)
           .foreachBatch {
             (b: org.apache.spark.sql.Dataset[graft.streaming.StreamingOps.UserTotal],
-             _: Long) => b.write.mode("append").parquet(out); ()
+             _: Long) => b.write.mode("append").parquet(run.out); ()
           }
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start().awaitTermination()
       }
-      stageArrival(in, base.filter($"event_id" % 2 === 0), "b1")
+      stageArrival(run.in, base.filter($"event_id" % 2 === 0), "b1")
       drain()
-      stageArrival(in, base.filter($"event_id" % 2 =!= 0), "b2")
+      stageArrival(run.in, base.filter($"event_id" % 2 =!= 0), "b2")
       drain() // resumes the ValueState from the checkpoint
       // n is monotone per user, so the latest update is max(n)
-      Tables.siteRead(s, "PackCore:430", out).groupBy($"user_id")
+      Tables.siteRead(s, "PackCore:430", run.out).groupBy($"user_id")
         .agg(max($"n").as("n")).orderBy($"user_id")
     },
 
@@ -456,10 +449,7 @@ object PackCore {
         |SELECT doc_id FROM documents
         |WHERE doc_id % 10 = 0 AND doc_id NOT IN (SELECT doc_id FROM dirty)
         |ORDER BY doc_id""").stripMargin) { (s, d) =>
-      val run = streamRun.incrementAndGet()
-      val in = java.nio.file.Files.createTempDirectory(s"graft_st8_in$run").toString
-      val wh = java.nio.file.Files.createTempDirectory(s"graft_st8_wh$run").toString + "/t"
-      val ckpt = java.nio.file.Files.createTempDirectory(s"graft_st8_ck$run").toString
+      val run = Runs.start(s, "st8_stream_neardup_gate")
       val newDocs = Tables.documents(s, d).filter($"doc_id" % 10 === 0)
         .select($"doc_id", $"text")
       val sch = StructType(Seq(StructField("doc_id", LongType),
@@ -472,15 +462,15 @@ object PackCore {
         graft.ext.TextDedup.pruneBands(PackExt.persistedBandIndex(s, d)))
       val ss = Session.derived(s, Session.Stream)
       def drain(): Unit = graft.streaming.StreamingOps.runGatedToWarehouse(
-        graft.streaming.StreamingOps.fileSource(ss, in, sch), idx,
-        "doc_id", "text", wh, ckpt).awaitTermination()
-      stageArrival(in, newDocs.filter($"doc_id" % 20 === 0), "b1")
+        graft.streaming.StreamingOps.fileSource(ss, run.in, sch), idx,
+        "doc_id", "text", run.out, run.ckpt).awaitTermination()
+      stageArrival(run.in, newDocs.filter($"doc_id" % 20 === 0), "b1")
       drain()
       // second arrival: the shared checkpoint processes ONLY the new
       // files, and the batch probes the same stored index
-      stageArrival(in, newDocs.filter($"doc_id" % 20 =!= 0), "b2")
+      stageArrival(run.in, newDocs.filter($"doc_id" % 20 =!= 0), "b2")
       drain()
-      Tables.siteRead(s, "PackCore:484", wh).select($"doc_id").orderBy($"doc_id")
+      Tables.siteRead(s, "PackCore:484", run.out).select($"doc_id").orderBy($"doc_id")
     },
 
     // ST8's GROWING-index form — the full analog of the reference's
@@ -523,37 +513,29 @@ object PackCore {
         |          AND doc_id NOT IN (SELECT doc_id FROM dirty2))
         |SELECT doc_id FROM surv1 UNION ALL SELECT doc_id FROM surv2
         |ORDER BY doc_id""").stripMargin) { (s, d) =>
-      val run = streamRun.incrementAndGet()
-      val in = java.nio.file.Files.createTempDirectory(s"graft_st9_in$run").toString
-      val wh = java.nio.file.Files.createTempDirectory(s"graft_st9_wh$run").toString + "/t"
-      val idxDir = java.nio.file.Files.createTempDirectory(s"graft_st9_ix$run").toString + "/i"
-      val ckpt = java.nio.file.Files.createTempDirectory(s"graft_st9_ck$run").toString
+      val run = Runs.start(s, "st9_stream_neardup_gate_growing")
       // seed the stored index with the ingested corpus' band table (the
       // same train-once content the static-gate queries serve from). The
       // growing index MUTATES, so it needs a private copy — taken as a
       // byte-level file copy, not a Spark re-encode job (the st9 cost
       // split measured the write job at ~1.8 s of the timed query; the
       // file copy is ~0.1 s and byte-identical)
-      val seedSrc = new java.io.File(PackExt.persistedBandIndexPath(s, d))
-      val seedDst = new java.io.File(idxDir)
-      seedDst.mkdirs()
-      seedSrc.listFiles().foreach { f =>
-        java.nio.file.Files.copy(f.toPath,
-          new java.io.File(seedDst, f.getName).toPath): Unit
-      }
+      val idxDir = run.dir("index")
+      org.apache.commons.io.FileUtils.copyDirectory(
+        new java.io.File(PackExt.persistedBandIndexPath(s, d)), new java.io.File(idxDir))
       val newDocs = Tables.documents(s, d).filter($"doc_id" % 10 === 0)
         .select($"doc_id", $"text")
       val sch = StructType(Seq(StructField("doc_id", LongType),
         StructField("text", StringType)))
       val ss = Session.derived(s, Session.Stream)
       def drain(): Unit = graft.streaming.StreamingOps.runGatedToWarehouseGrowing(
-        graft.streaming.StreamingOps.fileSource(ss, in, sch), idxDir,
-        "doc_id", "text", wh, ckpt).awaitTermination()
-      stageArrival(in, newDocs.filter($"doc_id" % 20 === 0), "b1")
+        graft.streaming.StreamingOps.fileSource(ss, run.in, sch), idxDir,
+        "doc_id", "text", run.out, run.ckpt).awaitTermination()
+      stageArrival(run.in, newDocs.filter($"doc_id" % 20 === 0), "b1")
       drain()
-      stageArrival(in, newDocs.filter($"doc_id" % 20 =!= 0), "b2")
+      stageArrival(run.in, newDocs.filter($"doc_id" % 20 =!= 0), "b2")
       drain()
-      Tables.siteRead(s, "PackCore:558", wh).select($"doc_id").orderBy($"doc_id")
+      Tables.siteRead(s, "PackCore:558", run.out).select($"doc_id").orderBy($"doc_id")
     },
 
     // ST10 (live) — watermarked STREAM-STREAM interval join: view events
@@ -587,7 +569,7 @@ object PackCore {
           .withWatermark(tsN, "1 hour")
       val views = sideStream("view", "user_id", "view_id", "vts")
       val clicks = sideStream("click", "cuser", "click_id", "cts")
-      val name = s"st10_live_run_${streamRun.incrementAndGet()}"
+      val name = s"st10_live_run_${Runs.start(s, "st10_stream_stream_join").id}"
       views.join(clicks,
           $"user_id" === $"cuser" &&
             $"cts" >= $"vts" &&
@@ -597,7 +579,7 @@ object PackCore {
         .outputMode("append")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start().awaitTermination()
-      Session.bind(ss.table(name), s).orderBy($"user_id", $"view_id", $"click_id")
+      memorySink(ss, name, s).orderBy($"user_id", $"view_id", $"click_id")
     },
 
     // K4 (live) — DDL bootstrap + catalog roundtrip: CREATE TABLE ...
@@ -607,9 +589,9 @@ object PackCore {
     QDef("k4_sink_ddl_create",
       """SELECT n_nationkey, n_name, n_regionkey FROM nation
         |ORDER BY n_nationkey""".stripMargin) { (s, d) =>
-      val run = streamRun.incrementAndGet()
-      val tbl = s"k4_ddl_run_$run"
-      val loc = java.nio.file.Files.createTempDirectory(s"graft_k4_$run").toString + "/t"
+      val run = Runs.start(s, "k4_sink_ddl_create")
+      val tbl = s"k4_ddl_run_${run.id}"
+      val loc = run.dir("table")
       val ddl = s"""CREATE TABLE IF NOT EXISTS $tbl
                    |  (n_nationkey BIGINT, n_name STRING, n_regionkey BIGINT)
                    |USING parquet LOCATION '$loc'""".stripMargin
@@ -618,7 +600,12 @@ object PackCore {
       Tables.nation(s, d).select($"n_nationkey", $"n_name", $"n_regionkey")
         .createOrReplaceTempView(s"${tbl}_src")
       s.sql(s"INSERT INTO $tbl SELECT * FROM ${tbl}_src")
-      s.table(tbl).orderBy($"n_nationkey")
+      // the frame holds the resolved relation over the run's files, so
+      // the catalog entries can go: dropping an external table keeps them
+      val df = s.table(tbl).orderBy($"n_nationkey")
+      s.sql(s"DROP TABLE $tbl")
+      s.catalog.dropTempView(s"${tbl}_src")
+      df
     },
 
     // K6 (live) — processed-file lifecycle: the archiving file source
@@ -635,12 +622,9 @@ object PackCore {
         |       CAST(1 AS BIGINT) AS n_archived,
         |       CAST(1 AS BIGINT) AS n_remaining
         |FROM events WHERE event_id % 997 = 0""".stripMargin) { (s, d) =>
-      val run = streamRun.incrementAndGet()
-      val in = java.nio.file.Files.createTempDirectory(s"graft_k6_in$run").toString
-      val arch = java.nio.file.Files.createTempDirectory(s"graft_k6_ar$run").toString
-      val ckpt = java.nio.file.Files.createTempDirectory(s"graft_k6_ck$run").toString
-      val wh = java.nio.file.Files.createTempDirectory(s"graft_k6_wh$run").toString + "/t"
-      val err = java.nio.file.Files.createTempDirectory(s"graft_k6_er$run").toString + "/e"
+      val run = Runs.start(s, "k6_sink_archive_move")
+      val arch = run.dir("archive")
+      val err = run.sink("err")
       val base = Tables.events(s, d).filter($"event_id" % 997 === 0)
         .select($"event_id", $"user_id", $"event_type")
       val sch = StructType(Seq(StructField("event_id", LongType),
@@ -648,11 +632,11 @@ object PackCore {
       // parquet foreachBatch sink: the memory sink cannot recover from a
       // checkpoint, and the second (recovering) run is what archives
       def drain(): Unit = graft.streaming.StreamingOps.runToWarehouse(
-        graft.streaming.StreamingOps.fileSourceArchiving(s, in, sch, arch),
-        wh, err, ckpt).awaitTermination()
-      stageArrival(in, base.filter($"event_id" % 2 === 0), "b1")
+        graft.streaming.StreamingOps.fileSourceArchiving(s, run.in, sch, arch),
+        run.out, err, run.ckpt).awaitTermination()
+      stageArrival(run.in, base.filter($"event_id" % 2 === 0), "b1")
       drain()
-      stageArrival(in, base.filter($"event_id" % 2 =!= 0), "b2")
+      stageArrival(run.in, base.filter($"event_id" % 2 =!= 0), "b2")
       drain() // commits batch 0 → archives the b1 files
       def parquetCount(dir: String): Int = {
         def walk(f: java.io.File): Int =
@@ -664,9 +648,9 @@ object PackCore {
       val deadline = System.currentTimeMillis() + 30000
       while (parquetCount(arch) < 1 && System.currentTimeMillis() < deadline)
         Thread.sleep(200)
-      Tables.siteRead(s, "PackCore:671", wh).agg(count(lit(1)).as("n_rows"),
+      Tables.siteRead(s, "PackCore:671", run.out).agg(count(lit(1)).as("n_rows"),
         lit(parquetCount(arch)).cast("long").as("n_archived"),
-        lit(parquetCount(in)).cast("long").as("n_remaining"))
+        lit(parquetCount(run.in)).cast("long").as("n_remaining"))
     },
 
     // ---------------------------------------------------------------- scans
@@ -736,17 +720,7 @@ object PackCore {
       """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
         |WHERE o_orderkey % 10 = 0 AND o_custkey > 0
         |ORDER BY o_orderkey""".stripMargin) { (s, d) =>
-      val run = streamRun.incrementAndGet()
-      val dbRoot = java.nio.file.Files.createTempDirectory(s"graft_s8_db$run").toString
-      // keep Derby's engine log out of the process cwd (first boot wins);
-      // derby.stream.error.file wins over system-home defaulting, so pin
-      // both — without it a boot racing the property set drops ./derby.log
-      if (System.getProperty("derby.system.home") == null)
-        System.setProperty("derby.system.home", dbRoot)
-      if (System.getProperty("derby.stream.error.file") == null)
-        System.setProperty("derby.stream.error.file", s"$dbRoot/derby.log")
-      val db = dbRoot + "/derby"
-      val url = s"jdbc:derby:$db;create=true"
+      val url = derbyUrl(d, "s8_db")
       val driver = "org.apache.derby.jdbc.EmbeddedDriver"
       val src = Tables.orders(s, d).filter($"o_orderkey" % 10 === 0)
         .select($"o_orderkey", $"o_custkey", $"o_totalprice")
@@ -1034,17 +1008,17 @@ object PackCore {
         |         CAST((id * 2654435761) % 100000 AS DOUBLE) / 100.0 AS amount
         |  FROM range(0, 900) t(id))
         |ORDER BY id""".stripMargin) { (s, d) =>
-      val name = s"s7_stream_run_${streamRun.incrementAndGet()}"
+      val run = Runs.start(s, "s7_stream_custom_source")
+      val name = s"s7_stream_run_${run.id}"
       val ss = Session.derived(s, Session.Stream)
       val q = ss.readStream.format("graft-ledger")
         .option("rows", 900).option("slices", 3).option("rowsPerBatch", 250).load()
         .writeStream.format("memory").queryName(name)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft_s7_ck").toString)
+        .option("checkpointLocation", run.ckpt)
         .start()
       q.awaitTermination()
-      Session.bind(ss.table(name), s).select($"id", $"bucket", $"amount").orderBy($"id")
+      memorySink(ss, name, s).select($"id", $"bucket", $"amount").orderBy($"id")
     },
 
     // K9 — the transactional V2 sink as a declared roundtrip: an
@@ -1057,11 +1031,7 @@ object PackCore {
       """SELECT o_orderkey, o_orderpriority FROM orders
         |WHERE o_orderkey % 4 < 2 ORDER BY o_orderkey""".stripMargin) { (s, d) =>
       val loc = tmpBase(d) + "/atomic_orders"
-      def rmA(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmA))
-        f.delete(); ()
-      }
-      rmA(new java.io.File(loc))
+      graft.io.Warehouse.deleteRecursively(s, loc)
       val o = Tables.orders(s, d).select($"o_orderkey", $"o_orderpriority")
       o.filter($"o_orderkey" % 4 === 0).write.format("graft-atomic")
         .option("path", loc).mode("overwrite").save()
@@ -1090,12 +1060,8 @@ object PackCore {
       // external-path tables: dropping metadata leaves data files — clear
       // the locations too so a re-run (bench executes queries repeatedly)
       // cannot accrete duplicate rows
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(new java.io.File(tmpBase(d) + "/smb_orders"))
-      rm(new java.io.File(tmpBase(d) + "/smb_lineitem"))
+      graft.io.Warehouse.deleteRecursively(s, tmpBase(d) + "/smb_orders")
+      graft.io.Warehouse.deleteRecursively(s, tmpBase(d) + "/smb_lineitem")
       graft.io.Warehouse.appendBucketed(
         Tables.orders(s, d).select($"o_orderkey", $"o_orderpriority"),
         to, "o_orderkey", 8, Some(tmpBase(d) + s"/smb_orders"))
@@ -1148,9 +1114,28 @@ object PackCore {
     }
   )
 
-  // memory-sink table names must be unique per execution (bench re-runs
-  // each query in one session)
-  private[queries] val streamRun = new java.util.concurrent.atomic.AtomicInteger()
+  /** Memory sink `name` of `ss` bound to `caller`, its view dropped: the
+    * bound plan holds the sink's rows, so a run leaves no catalog entry. */
+  private[queries] def memorySink(ss: SparkSession, name: String, caller: SparkSession): DataFrame = {
+    val df = Session.bind(ss.table(name), caller)
+    ss.catalog.dropTempView(name)
+    df
+  }
+
+  /** Embedded Derby database `name` in fixture `sfDir`'s fixed tree: one
+    * per JVM and fixture, since Derby keeps a booted database's page
+    * cache and threads for the JVM's life; callers replace their tables. */
+  private[queries] def derbyUrl(sfDir: String, name: String): String = {
+    val root = s"${tmpBase(sfDir)}/$name"
+    new java.io.File(root).mkdirs()
+    // pin both, first boot wins: the log file property beats system-home
+    // defaulting, and without it a racing boot drops ./derby.log in the cwd
+    if (System.getProperty("derby.system.home") == null)
+      System.setProperty("derby.system.home", root)
+    if (System.getProperty("derby.stream.error.file") == null)
+      System.setProperty("derby.stream.error.file", s"$root/derby.log")
+    s"jdbc:derby:$root/derby;create=true"
+  }
 
   /** Streaming reader for the events table that works on BOTH fixture
     * layouts: the driver testdata ships `events.parquet` as a single
@@ -1178,25 +1163,6 @@ object PackCore {
   private val stagedCache =
     new scala.collection.mutable.ArrayBuffer[(DataFrame, String)]()
 
-  // the cached staging dirs hold real parquet copies (unlike the old
-  // move-out-of-staging flow, which left only metadata): reclaim them
-  // when their session dies and at JVM exit, so long-lived boxes never
-  // accumulate one corpus copy per staged plan per session
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      stagedCache.synchronized {
-        stagedCache.foreach { case (_, dir) => deleteStagingDir(dir) }
-      }))
-  }
-
-  private def deleteStagingDir(dir: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(); ()
-    }
-    rm(new java.io.File(dir))
-  }
-
   /** Write `df` as parquet files directly inside `dir` — one arrival
     * batch per call (the streaming file source lists only the top level,
     * so nested write directories would be invisible). The FIRST staging
@@ -1212,13 +1178,9 @@ object PackCore {
       // evict dead-session entries while here: they can never match again
       // and would otherwise pin their logical plans (and cost a
       // canonicalized compare per lookup) for the JVM's life — the
-      // BoundedCache eviction discipline; their staging dirs are deleted
-      // with them (real parquet copies, not the OS tempdir's problem)
-      stagedCache.filterInPlace { case (p, d) =>
-        val live = !p.sparkSession.sparkContext.isStopped
-        if (!live) deleteStagingDir(d)
-        live
-      }
+      // BoundedCache eviction discipline; their staging dirs went with
+      // their context's run root
+      stagedCache.filterInPlace { case (p, _) => !p.sparkSession.sparkContext.isStopped }
       stagedCache.find { case (p, _) =>
         p.sparkSession.eq(df.sparkSession) &&
           (try p.sameSemantics(df)
@@ -1228,13 +1190,12 @@ object PackCore {
     def encode(): String = {
       // encode OUTSIDE the lock — a Spark job under a global mutex would
       // serialize concurrent suites' staging; a racing duplicate encode
-      // loses the re-lookup and its tempdir (a full parquet copy no
-      // eviction or shutdown hook would ever see) is reclaimed here
-      val staging = java.nio.file.Files.createTempDirectory("graft_stage").toString
+      // loses the re-lookup and its encode is reclaimed here
+      val staging = Runs.scratch(df.sparkSession, "stage")
       df.coalesce(1).write.mode("overwrite").parquet(staging)
       stagedCache.synchronized {
         lookup() match {
-          case Some(winner) => deleteStagingDir(staging); winner
+          case Some(winner) => Runs.delete(staging); winner
           case None => stagedCache += ((df, staging)); staging
         }
       }
@@ -1266,7 +1227,7 @@ object PackCore {
         stagedCache.filterInPlace { case (_, d) =>
           val alive = Option(new java.io.File(d).listFiles())
             .exists(_.exists(_.getName.endsWith(".parquet")))
-          if (!alive) deleteStagingDir(d)
+          if (!alive) Runs.delete(d)
           alive
         }
       }

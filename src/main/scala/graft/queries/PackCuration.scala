@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.ext.{BoundedCache, Similarity, TextDedup}
 import graft.functions.Exprs
+import graft.io.Runs
 import graft.schemas.Tables
 
 /** Curation & evaluation operators — the round-9 continuation batch: the
@@ -868,22 +869,20 @@ object PackCuration {
         |FROM events WHERE event_id % 31 = 0
         |GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, d) =>
       import org.apache.spark.sql.types._
-      val run = st11Run.incrementAndGet()
-      val in = java.nio.file.Files.createTempDirectory(s"graft_st11_in$run").toString
-      val ckpt = java.nio.file.Files.createTempDirectory(s"graft_st11_ck$run").toString
+      val run = Runs.start(s, "st11_state_reader")
       Tables.events(s, d).filter(col("event_id") % 31 === 0)
         .select(col("event_id"), col("event_type"))
-        .coalesce(1).write.parquet(in + "/b1")
+        .coalesce(1).write.parquet(run.in + "/b1")
       val sch = StructType(Seq(StructField("event_id", LongType),
         StructField("event_type", StringType)))
       val q = graft.Session.derived(s, graft.Session.Stream)
-        .readStream.schema(sch).parquet(in + "/*")
+        .readStream.schema(sch).parquet(run.in + "/*")
         .groupBy(col("event_type")).count()
         .writeStream.format("noop").outputMode("update")
-        .option("checkpointLocation", ckpt)
+        .option("checkpointLocation", run.ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
       q.awaitTermination()
-      s.read.format("statestore").option("path", ckpt).load()
+      s.read.format("statestore").option("path", run.ckpt).load()
         .select(col("key.event_type").as("event_type"), col("value.count").as("n"))
         .orderBy(col("event_type"))
     },
@@ -989,8 +988,6 @@ object PackCuration {
         .orderBy(col("pair"))
     }
   )
-
-  private val st11Run = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Second query group of the continuation batches (kept in a second
     * Seq only to keep the first one readable). */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.schemas.Tables
+import graft.io.Runs
 import graft.ext.{Multimodal, Similarity, TextAnalysis, TextDedup}
 
 /** Extension query pack — the training-data-pipeline operators
@@ -304,15 +305,10 @@ object PackExt {
         build.write.mode("overwrite").parquet(tmp.getPath)
         // lost the rename race → another process published the same
         // (content-identical, fingerprint-keyed) table; drop our copy
-        if (!tmp.renameTo(path)) deleteRecursively(tmp)
+        if (!tmp.renameTo(path)) org.apache.commons.io.FileUtils.deleteQuietly(tmp): Unit
       }
       path.getPath
     }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
-  }
 
   /** SimHash signature CTE (shared by the two simhash queries). */
   private[queries] def simhashCte(pred: String): String =
@@ -2288,13 +2284,10 @@ object PackExt {
     }) { (s, d) =>
       import s.implicits._
       import org.apache.spark.sql.types._
-      val run = PackCore.streamRun.incrementAndGet()
+      val run = Runs.start(s, "st23_stream_vocab_version_pickup")
       val base = s"${sys.props("java.io.tmpdir")}/graft_${new java.io.File(d).getName}"
       val vocLoc = s"$base/bpe_stream_vocab"
       graft.io.Warehouse.deleteRecursively(s, vocLoc)
-      val in = java.nio.file.Files.createTempDirectory(s"graft_st23_in$run").toString
-      val out = java.nio.file.Files.createTempDirectory(s"graft_st23_out$run").toString + "/t"
-      val ckpt = java.nio.file.Files.createTempDirectory(s"graft_st23_ck$run").toString
       val docs = Tables.documents(s, d)
       def trained(df: org.apache.spark.sql.DataFrame) =
         TextAnalysis.bpeTrain(df, "text", rounds = 256).zipWithIndex
@@ -2310,7 +2303,7 @@ object PackExt {
         StructField("text", StringType)))
       def drain(): Unit = {
         val q = graft.Session.derived(s, graft.Session.Stream)
-          .readStream.schema(docSchema).parquet(in)
+          .readStream.schema(docSchema).parquet(run.in)
           .writeStream.foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
             // the artifact resolves AT BATCH TIME: current manifest +
             // current version number, then the bounded encode — the
@@ -2327,23 +2320,23 @@ object PackExt {
                 when(length(col("enc")) === 0, lit(0L))
                   .otherwise(size(array_distinct(split(col("enc"), " +"))).cast("long")).as("n_unique"),
                 md5(col("enc")).as("enc_md5"))
-              .write.mode("append").parquet(out)
+              .write.mode("append").parquet(run.out)
           }
-          .option("checkpointLocation", ckpt)
+          .option("checkpointLocation", run.ckpt)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         q.awaitTermination()
       }
       commit(trained(docs.filter(col("doc_id") % 10 =!= 0)))      // v1 serves
-      PackCore.stageArrival(in,
+      PackCore.stageArrival(run.in,
         docs.filter(col("doc_id") % 20 === 0).select(col("doc_id"), col("text")), "b1")
       drain()                                                     // batch 1 under v1
       commit(trained(docs))                                       // the SWAP → v2
-      PackCore.stageArrival(in,
+      PackCore.stageArrival(run.in,
         docs.filter(col("doc_id") % 10 === 0 && col("doc_id") % 20 =!= 0)
           .select(col("doc_id"), col("text")), "b2")
       drain()                                                     // batch 2 under v2
-      Tables.siteRead(s, "PackExt:2349", out).orderBy(col("vocab_version"), col("doc_id"))
+      Tables.siteRead(s, "PackExt:2349", run.out).orderBy(col("vocab_version"), col("doc_id"))
     },
 
     // Co-occurrence PMI (phrase mining / word-embedding pretraining):

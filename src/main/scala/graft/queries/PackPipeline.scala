@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.GraftBridge.{column, expression}
 import graft.Session
+import graft.io.Runs
 import graft.ext.{BoundedCache, Similarity, TextDedup}
 import graft.schemas.Tables
 
@@ -384,10 +385,7 @@ object PackPipeline {
         |SELECT user_id, min(ts) AS session_start, CAST(count(*) AS BIGINT) AS n
         |FROM s GROUP BY user_id, sid
         |ORDER BY user_id, session_start""".stripMargin) { (s, d) =>
-      val run = PackCore.streamRun.incrementAndGet()
-      val in = java.nio.file.Files.createTempDirectory(s"graft_st12_in$run").toString
-      val out = java.nio.file.Files.createTempDirectory(s"graft_st12_out$run").toString + "/t"
-      val ckpt = java.nio.file.Files.createTempDirectory(s"graft_st12_ck$run").toString
+      val run = Runs.start(s, "st12_stream_session_window")
       val base = Tables.events(s, d).filter(col("event_id") % 13 === 0)
         .select(col("user_id"), col("ts"))
       val sentinel = base.agg(max(col("ts")).as("mx"))
@@ -400,23 +398,23 @@ object PackPipeline {
           org.apache.spark.sql.types.TimestampType)))
       val ss = Session.derived(s, Session.Stream)
       def drain(): Unit = {
-        val q = ss.readStream.schema(sch).parquet(in)
+        val q = ss.readStream.schema(sch).parquet(run.in)
           .withWatermark("ts", "1 hour")
           .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
           .agg(count(lit(1)).as("n"))
           .select(col("user_id"), col("session_window.start").as("session_start"), col("n"))
           .writeStream.format("parquet")
-          .option("path", out).option("checkpointLocation", ckpt)
+          .option("path", run.out).option("checkpointLocation", run.ckpt)
           .outputMode("append")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         q.awaitTermination()
       }
-      PackCore.stageArrival(in, base, "b1")
+      PackCore.stageArrival(run.in, base, "b1")
       drain()
-      PackCore.stageArrival(in, sentinel, "b2")
+      PackCore.stageArrival(run.in, sentinel, "b2")
       drain() // sentinel pushes the watermark past every real session
-      Tables.siteRead(s, "PackPipeline:419", out).filter(col("user_id") >= 0)
+      Tables.siteRead(s, "PackPipeline:419", run.out).filter(col("user_id") >= 0)
         .orderBy(col("user_id"), col("session_start"))
     },
 
@@ -435,13 +433,10 @@ object PackPipeline {
         |  ON c.c_custkey = e.user_id % (SELECT count(*) FROM customer)
         |WHERE e.event_id % 101 = 0
         |ORDER BY e.event_id""".stripMargin) { (s, d) =>
-      val run = PackCore.streamRun.incrementAndGet()
-      val in = java.nio.file.Files.createTempDirectory(s"graft_st13_in$run").toString
-      val out = java.nio.file.Files.createTempDirectory(s"graft_st13_out$run").toString + "/t"
-      val ckpt = java.nio.file.Files.createTempDirectory(s"graft_st13_ck$run").toString
+      val run = Runs.start(s, "st13_stream_static_enrich")
       val cust = Tables.customer(s, d).select(col("c_custkey"), col("c_mktsegment"))
       val nCust = cust.count()
-      PackCore.stageArrival(in,
+      PackCore.stageArrival(run.in,
         Tables.events(s, d).filter(col("event_id") % 101 === 0)
           .select(col("event_id"), col("user_id")), "b1")
       val sch = org.apache.spark.sql.types.StructType(Seq(
@@ -450,16 +445,16 @@ object PackPipeline {
         org.apache.spark.sql.types.StructField("user_id",
           org.apache.spark.sql.types.LongType)))
       val ss = Session.derived(s, Session.Stream)
-      ss.readStream.schema(sch).parquet(in)
+      ss.readStream.schema(sch).parquet(run.in)
         .withColumn("ck", col("user_id") % nCust)
         .join(broadcast(Session.bind(cust, ss)), col("ck") === col("c_custkey"))
         .select(col("event_id"), col("user_id"), col("c_mktsegment"))
         .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
+        .option("path", run.out).option("checkpointLocation", run.ckpt)
         .outputMode("append")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start().awaitTermination()
-      Tables.siteRead(s, "PackPipeline:464", out).orderBy(col("event_id"))
+      Tables.siteRead(s, "PackPipeline:464", run.out).orderBy(col("event_id"))
     },
 
     // K12/S11 (live) — Avro container ROUNDTRIP on avro-core alone (the
@@ -681,11 +676,9 @@ object PackPipeline {
         | AND c.ts >= v.ts AND c.ts <= v.ts + INTERVAL 10 MINUTE
         |WHERE v.event_type = 'view'
         |ORDER BY v.user_id, view_id, click_id""".stripMargin) { (s, d) =>
-      val run = PackCore.streamRun.incrementAndGet()
-      val vin = java.nio.file.Files.createTempDirectory(s"graft_st14_v$run").toString
-      val cin = java.nio.file.Files.createTempDirectory(s"graft_st14_c$run").toString
-      val out = java.nio.file.Files.createTempDirectory(s"graft_st14_o$run").toString + "/t"
-      val ckpt = java.nio.file.Files.createTempDirectory(s"graft_st14_k$run").toString
+      val run = Runs.start(s, "st14_stream_stream_left_outer")
+      val vin = run.dir("views")
+      val cin = run.dir("clicks")
       val ev = Tables.events(s, d)
       val views = ev.filter(col("event_type") === "view")
         .select(col("user_id"), col("event_id").as("view_id"), col("ts").as("vts"))
@@ -715,7 +708,7 @@ object PackPipeline {
             "leftOuter")
           .select(col("user_id"), col("view_id"), col("click_id"))
           .writeStream.format("parquet")
-          .option("path", out).option("checkpointLocation", ckpt)
+          .option("path", run.out).option("checkpointLocation", run.ckpt)
           .outputMode("append")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
@@ -732,7 +725,7 @@ object PackPipeline {
       PackCore.stageArrival(cin, far.select(lit(-2L).as("cuser"),
         lit(-1L).as("click_id"), col("far").as("cts")), "b2")
       drain() // watermark passes every real view's window → nulls flush
-      Tables.siteRead(s, "PackPipeline:739", out).filter(col("user_id") >= 0)
+      Tables.siteRead(s, "PackPipeline:739", run.out).filter(col("user_id") >= 0)
         .orderBy(col("user_id"), col("view_id"), col("click_id"))
     },
 
@@ -905,9 +898,8 @@ object PackPipeline {
     QDef("st15_stream_dedup_within_watermark",
       """SELECT DISTINCT user_id, event_type FROM events
         |ORDER BY user_id, event_type""".stripMargin) { (s, d) =>
-      val run = PackCore.streamRun.incrementAndGet()
-      val in = java.nio.file.Files.createTempDirectory(s"graft_st15_in$run").toString
-      PackCore.stageArrival(in,
+      val run = Runs.start(s, "st15_stream_dedup_within_watermark")
+      PackCore.stageArrival(run.in,
         Tables.events(s, d).select(col("user_id"), col("event_type"), col("ts")), "b1")
       val sch = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("user_id",
@@ -916,9 +908,9 @@ object PackPipeline {
           org.apache.spark.sql.types.StringType),
         org.apache.spark.sql.types.StructField("ts",
           org.apache.spark.sql.types.TimestampType)))
-      val name = s"st15_live_run_$run"
+      val name = s"st15_live_run_${run.id}"
       val ss = Session.derived(s, Session.Stream)
-      ss.readStream.schema(sch).parquet(in)
+      ss.readStream.schema(sch).parquet(run.in)
         .withWatermark("ts", "90 days")
         .dropDuplicatesWithinWatermark("user_id", "event_type")
         .select(col("user_id"), col("event_type"))
@@ -926,7 +918,7 @@ object PackPipeline {
         .outputMode("append")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start().awaitTermination()
-      Session.bind(ss.table(name), s).orderBy(col("user_id"), col("event_type"))
+      PackCore.memorySink(ss, name, s).orderBy(col("user_id"), col("event_type"))
     },
 
     // Mergeable-sketch ROLLUP (Apache DataSketches HLL, the Spark 3.5+
@@ -1037,21 +1029,9 @@ object PackPipeline {
         |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS total_cents
         |FROM events WHERE event_id % 3 = 0
         |GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, d) =>
-      val run = PackCore.streamRun.incrementAndGet()
-      val in = java.nio.file.Files.createTempDirectory(s"graft_st16_in$run").toString
-      // ONE database per (JVM, fixture), tables recreated per run: embedded
-      // Derby keeps every booted database's page cache and threads alive
-      // for the JVM lifetime, so a fresh dbRoot per run would leak one
-      // live database per bench/verify iteration
-      val dbRoot = s"${sys.props("java.io.tmpdir")}/graft_${new java.io.File(d).getName}/st16_db"
-      new java.io.File(dbRoot).mkdirs()
-      if (System.getProperty("derby.system.home") == null)
-        System.setProperty("derby.system.home", dbRoot)
-      // derby.log goes wherever THIS property points regardless of system
-      // home precedence — pin it away from the process cwd explicitly
-      if (System.getProperty("derby.stream.error.file") == null)
-        System.setProperty("derby.stream.error.file", s"$dbRoot/derby.log")
-      val url = s"jdbc:derby:$dbRoot/derby;create=true"
+      val run = Runs.start(s, "st16_stream_jdbc_upsert")
+      // ONE database per (JVM, fixture), tables recreated per run
+      val url = PackCore.derbyUrl(d, "st16_db")
       val driver = "org.apache.derby.jdbc.EmbeddedDriver"
       Class.forName(driver)
       val boot = java.sql.DriverManager.getConnection(url)
@@ -1064,7 +1044,7 @@ object PackPipeline {
           "CREATE TABLE USER_TOTALS (USER_ID BIGINT PRIMARY KEY, N BIGINT, CENTS BIGINT)")
         st.executeUpdate("CREATE TABLE BATCH_LOG (BATCH_ID BIGINT PRIMARY KEY)")
       } finally boot.close()
-      PackCore.stageArrival(in,
+      PackCore.stageArrival(run.in,
         Tables.events(s, d).filter(col("event_id") % 3 === 0)
           .select(col("user_id"), col("value")), "b1")
       val sch = org.apache.spark.sql.types.StructType(Seq(
@@ -1072,9 +1052,8 @@ object PackPipeline {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("value",
           org.apache.spark.sql.types.DoubleType)))
-      def drain(): Unit = {
-        val ckpt = java.nio.file.Files.createTempDirectory(s"graft_st16_ck$run").toString
-        val q = Session.derived(s, Session.Stream).readStream.schema(sch).parquet(in)
+      def drain(ckpt: String): Unit = {
+        val q = Session.derived(s, Session.Stream).readStream.schema(sch).parquet(run.in)
           .writeStream
           .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
             // heavy half distributed; the per-user rollup is small
@@ -1131,8 +1110,8 @@ object PackPipeline {
           .start()
         q.awaitTermination()
       }
-      drain()
-      drain() // fresh checkpoint ⇒ batch 0 REDELIVERED ⇒ must be skipped
+      drain(run.dir("ckpt1"))
+      drain(run.dir("ckpt2")) // fresh checkpoint ⇒ batch 0 REDELIVERED ⇒ must be skipped
       s.read.format("jdbc").option("url", url).option("driver", driver)
         .option("dbtable", "USER_TOTALS").load()
         .select(col("USER_ID").as("user_id"), col("N").as("n"),
@@ -1306,10 +1285,7 @@ object PackPipeline {
         |  CASE WHEN event_id % 21 = 0 THEN value + 1000 ELSE value END AS value
         |FROM events WHERE event_id % 7 = 0
         |ORDER BY event_id""".stripMargin) { (s, d) =>
-      val run = PackCore.streamRun.incrementAndGet()
-      val in = java.nio.file.Files.createTempDirectory(s"graft_st17_in$run").toString
-      val wh = java.nio.file.Files.createTempDirectory(s"graft_st17_wh$run").toString + "/t"
-      val ckpt = java.nio.file.Files.createTempDirectory(s"graft_st17_ck$run").toString
+      val run = Runs.start(s, "st17_stream_merge_upsert")
       val base = Tables.events(s, d).filter(col("event_id") % 7 === 0)
         .select(col("event_id"), col("user_id"), col("value"))
       val sch = org.apache.spark.sql.types.StructType(Seq(
@@ -1321,18 +1297,18 @@ object PackPipeline {
           org.apache.spark.sql.types.DoubleType)))
       def drain(): Unit = {
         val q = graft.streaming.StreamingOps.runMergeToWarehouse(
-          Session.derived(s, Session.Stream).readStream.schema(sch).parquet(in),
-          wh, Seq("event_id"), ckpt)
+          Session.derived(s, Session.Stream).readStream.schema(sch).parquet(run.in),
+          run.out, Seq("event_id"), run.ckpt)
         q.awaitTermination()
       }
-      PackCore.stageArrival(in, base, "b1")
+      PackCore.stageArrival(run.in, base, "b1")
       drain()
-      PackCore.stageArrival(in,
+      PackCore.stageArrival(run.in,
         base.filter(col("event_id") % 21 === 0)
           .select(col("event_id"), col("user_id"),
             (col("value") + 1000).as("value")), "b2")
       drain() // corrections must overwrite, not duplicate
-      Tables.siteRead(s, "PackPipeline:1344", wh)
+      Tables.siteRead(s, "PackPipeline:1344", run.out)
         .select(col("event_id"), col("user_id"), col("value"))
         .orderBy(col("event_id"))
     },
@@ -1506,11 +1482,10 @@ object PackPipeline {
          |ORDER BY nro_ticket, prod, p_total, categ""".stripMargin) { (s, d) =>
       import s.implicits._
       import graft.functions.Exprs
-      val run = PackCore.streamRun.incrementAndGet()
-      val raw = java.nio.file.Files.createTempDirectory(s"graft_pdfe2e_raw$run").toString
-      val proc = java.nio.file.Files.createTempDirectory(s"graft_pdfe2e_pr$run").toString
-      val wh = java.nio.file.Files.createTempDirectory(s"graft_pdfe2e_wh$run").toString +
-        "/carrefour_data"
+      val run = Runs.start(s, "pipeline_pdf_e2e")
+      val raw = run.dir("raw")
+      val proc = run.dir("processed")
+      val wh = run.sink("carrefour_data")
       val slice = col("l_orderkey") % 97 === 0
       // fixup space: dd/MM/yy → dd/MM/20yy (the reference's '20'||yy rule,
       // extract_data_pdf:60-64 — 1990s fixtures land in 209x on BOTH
@@ -1538,8 +1513,7 @@ object PackPipeline {
       // `after:` — the date cuts are Column predicates pushed to the
       // mailbox scan, and the PDF staging writes happen on EXECUTORS
       // (foreachPartition), so no corpus-scale rows ever cross the driver
-      val mailboxDir = java.nio.file.Files
-        .createTempDirectory(s"graft_pdfe2e_mb$run").toString + "/mailbox"
+      val mailboxDir = run.sink("mailbox")
       PackParsers.ticketTextsFiltered(s, d, slice)
         .select(regexp_extract(col("text"), "Nro T\\. (\\d+)", 1)
           .cast("long").as("nro"),
@@ -1642,11 +1616,10 @@ object PackPipeline {
         |FROM events WHERE event_id % 131 = 0
         |ORDER BY report_id, source_id""".stripMargin) { (s, d) =>
       import graft.functions.Exprs
-      val run = PackCore.streamRun.incrementAndGet()
-      val raw = java.nio.file.Files.createTempDirectory(s"graft_mpe2e_raw$run").toString
-      val procD = java.nio.file.Files.createTempDirectory(s"graft_mpe2e_pr$run").toString
-      val wh = java.nio.file.Files.createTempDirectory(s"graft_mpe2e_wh$run").toString +
-        "/mp_data"
+      val run = Runs.start(s, "pipeline_mp_e2e")
+      val raw = run.dir("raw")
+      val procD = run.dir("processed")
+      val wh = run.sink("mp_data")
       // Spanish headers single-sourced from the F5 dialect table
       // (Schemas.mpDialectEsToEn, the reference's verbatim fallback
       // strings), projected onto this report's 6 columns
@@ -1692,8 +1665,7 @@ object PackPipeline {
       // corpus-scale rows ever cross the driver. The inbox dir is a shared
       // filesystem path by nature (local FS here; a cluster would point it
       // at the mounted inbox volume, the same contract as any file sink).
-      val corpusDir = java.nio.file.Files
-        .createTempDirectory(s"graft_mpe2e_corpus$run").toString + "/corpus"
+      val corpusDir = run.sink("corpus")
       def webhookDelivery(rids: Seq[Long]): Unit = {
         // -- extract: staging gate by parsed report id over the bucket
         // listing (extract_data_mp:115-138), then stage CSV or XLSX
@@ -1794,22 +1766,13 @@ object PackPipeline {
         }
         if (inboxHas(".csv") || inboxHas(".xlsx")) transformAndLoad()
       }
-      // the staged corpus is the largest per-run /tmp artifact and
-      // nothing downstream reads it (the returned frame reads the
-      // warehouse) — drop it in a finally so a failed delivery can't
-      // leak it across runs
-      try {
-        // the corpus WRITE sits inside the try too: a disk-full abort
-        // mid-write is exactly the condition under which a leaked
-        // partial corpus hurts most
-        txns.write.parquet(corpusDir)
-        // delivery manifest: 23 report ids — metadata-grain collect (the
-        // webhook names reports, it doesn't carry rows)
-        val allRids = Tables.siteRead(s, "PackPipeline:1817", corpusDir).select(col("rid")).distinct()
-          .collect().map(_.getLong(0)).toSeq.sorted
-        webhookDelivery(allRids.filter(_ < 12)) // first delivery window
-        webhookDelivery(allRids) // full re-delivery — gates must dedup
-      } finally graft.io.Warehouse.deleteRecursively(s, corpusDir)
+      txns.write.parquet(corpusDir)
+      // delivery manifest: 23 report ids — metadata-grain collect (the
+      // webhook names reports, it doesn't carry rows)
+      val allRids = Tables.siteRead(s, "PackPipeline:1817", corpusDir).select(col("rid")).distinct()
+        .collect().map(_.getLong(0)).toSeq.sorted
+      webhookDelivery(allRids.filter(_ < 12)) // first delivery window
+      webhookDelivery(allRids) // full re-delivery — gates must dedup
       Tables.siteRead(s, "PackPipeline:1822", wh)
         .select(col("report_id"), col("report_date"), col("source_id"),
           col("settlement_date").cast("date").as("settlement_date"),
@@ -1854,10 +1817,9 @@ object PackPipeline {
         |FROM events WHERE event_type <> 'error' AND event_id % 89 = 0
         |ORDER BY message_id""".stripMargin) { (s, d) =>
       import s.implicits._
-      val run = PackCore.streamRun.incrementAndGet()
-      val raw = java.nio.file.Files.createTempDirectory(s"graft_bke2e_raw$run").toString
-      val wh = java.nio.file.Files.createTempDirectory(s"graft_bke2e_wh$run").toString +
-        "/bank_payments"
+      val run = Runs.start(s, "pipeline_bank_e2e")
+      val raw = run.dir("raw")
+      val wh = run.sink("bank_payments")
       val slicePred = col("event_id") % 89 === 0
       def whNonEmpty(): Boolean = {
         val f = new java.io.File(wh)
@@ -2072,15 +2034,12 @@ object PackPipeline {
         |       GROUP BY user_id)
         |SELECT * FROM a1 UNION ALL SELECT * FROM a2
         |ORDER BY user_id, cum_n""".stripMargin) { (s, d) =>
-      val run = PackCore.streamRun.incrementAndGet()
-      val in = java.nio.file.Files.createTempDirectory(s"graft_st18_in$run").toString
-      val out = java.nio.file.Files.createTempDirectory(s"graft_st18_out$run").toString + "/t"
-      val ckpt = java.nio.file.Files.createTempDirectory(s"graft_st18_ck$run").toString
+      val run = Runs.start(s, "st18_transform_with_state")
       val base = Tables.events(s, d).filter(col("event_id") % 9 === 0)
         .select(col("event_id"), col("user_id"), col("event_type"),
           round(coalesce(col("value"), lit(0.0)) * 100).cast("long").as("cents"))
-      userProfileDrive(s, base, in, out, ckpt)
-      Tables.siteRead(s, "PackPipeline:2092", out).orderBy(col("user_id"), col("cum_n"))
+      userProfileDrive(s, base, run.in, run.out, run.ckpt)
+      Tables.siteRead(s, "PackPipeline:2092", run.out).orderBy(col("user_id"), col("cum_n"))
     },
 
     // ST19 (live) — the v2 API's batch WARM-START surface
@@ -2108,10 +2067,7 @@ object PackPipeline {
         |ORDER BY user_id""".stripMargin) { (s, d) =>
       import s.implicits._
       import graft.streaming.{TwsAgg, TwsEvent, WarmStartProcessor}
-      val run = PackCore.streamRun.incrementAndGet()
-      val in = java.nio.file.Files.createTempDirectory(s"graft_st19_in$run").toString
-      val out = java.nio.file.Files.createTempDirectory(s"graft_st19_out$run").toString + "/t"
-      val ckpt = java.nio.file.Files.createTempDirectory(s"graft_st19_ck$run").toString
+      val run = Runs.start(s, "st19_tws_initial_state")
       val base = Tables.events(s, d).filter(col("event_id") % 10 === 0)
         .select(col("event_id"), col("user_id"), col("event_type"),
           round(coalesce(col("value"), lit(0.0)) * 100).cast("long").as("cents"))
@@ -2122,9 +2078,9 @@ object PackPipeline {
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"))
         .as[(Long, Long, Long)]
         .groupByKey(_._1).mapValues(t => TwsAgg(t._2, t._3))
-      PackCore.stageArrival(in,
+      PackCore.stageArrival(run.in,
         base.filter(col("event_id") % 3 =!= 0).drop("event_id"), "b1")
-      ss.readStream.schema(twsSchema).parquet(in)
+      ss.readStream.schema(twsSchema).parquet(run.in)
         .as[TwsEvent]
         .groupByKey(_.user_id)
         .transformWithState(new WarmStartProcessor,
@@ -2133,11 +2089,11 @@ object PackPipeline {
           snapshot)
         .toDF()
         .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
+        .option("path", run.out).option("checkpointLocation", run.ckpt)
         .outputMode("append")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start().awaitTermination()
-      Tables.siteRead(s, "PackPipeline:2153", out).orderBy(col("user_id"))
+      Tables.siteRead(s, "PackPipeline:2153", run.out).orderBy(col("user_id"))
     },
 
     // ST20 (live) — EVENT-TIME TIMERS on the v2 API
@@ -2170,10 +2126,7 @@ object PackPipeline {
         |ORDER BY user_id, start_ms""".stripMargin) { (s, d) =>
       import s.implicits._
       import graft.streaming.{SessionTimerProcessor, TsEvent}
-      val run = PackCore.streamRun.incrementAndGet()
-      val in = java.nio.file.Files.createTempDirectory(s"graft_st20_in$run").toString
-      val out = java.nio.file.Files.createTempDirectory(s"graft_st20_out$run").toString + "/t"
-      val ckpt = java.nio.file.Files.createTempDirectory(s"graft_st20_ck$run").toString
+      val run = Runs.start(s, "st20_tws_event_time_timers")
       val base = Tables.events(s, d).filter(col("event_id") % 17 === 0)
         .select(col("user_id"), col("ts"), unix_millis(col("ts")).as("ms"))
       // empty-slice guard, END-TO-END like st22's: on an empty base the
@@ -2189,7 +2142,7 @@ object PackPipeline {
               (lit(mxTs) + expr("INTERVAL 240 HOURS")).as("ts"))
             .select(col("user_id"), col("ts"), unix_millis(col("ts")).as("ms"))
           def drain(ss: SparkSession): Unit = {
-            val q = ss.readStream.schema(tsSchema).parquet(in)
+            val q = ss.readStream.schema(tsSchema).parquet(run.in)
               .withWatermark("ts", "1 hour")
               .as[TsEvent]
               .groupByKey(_.user_id)
@@ -2198,15 +2151,15 @@ object PackPipeline {
                 org.apache.spark.sql.streaming.OutputMode.Append())
               .toDF()
               .writeStream.format("parquet")
-              .option("path", out).option("checkpointLocation", ckpt)
+              .option("path", run.out).option("checkpointLocation", run.ckpt)
               .outputMode("append")
               .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
               .start()
             q.awaitTermination()
           }
           // b2 sentinel: its watermark advance fires every real key's timer
-          stagedTwoDrains(s, in, base, sentinel)(drain)
-          Tables.siteRead(s, "PackPipeline:2222", out).filter(col("user_id") >= 0)
+          stagedTwoDrains(s, run.in, base, sentinel)(drain)
+          Tables.siteRead(s, "PackPipeline:2222", run.out).filter(col("user_id") >= 0)
             .orderBy(col("user_id"), col("start_ms"))
       }
     },
@@ -2232,19 +2185,16 @@ object PackPipeline {
         |  CAST(count(*) AS BIGINT) AS n_from_map
         |FROM events WHERE event_id % 23 = 0
         |GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, d) =>
-      val run = PackCore.streamRun.incrementAndGet()
-      val in = java.nio.file.Files.createTempDirectory(s"graft_st21_in$run").toString
-      val out = java.nio.file.Files.createTempDirectory(s"graft_st21_out$run").toString + "/t"
-      val ckpt = java.nio.file.Files.createTempDirectory(s"graft_st21_ck$run").toString
+      val run = Runs.start(s, "st21_state_reader_tws")
       val base = Tables.events(s, d).filter(col("event_id") % 23 === 0)
         .select(col("event_id"), col("user_id"), col("event_type"),
           round(coalesce(col("value"), lit(0.0)) * 100).cast("long").as("cents"))
-      userProfileDrive(s, base, in, out, ckpt)
-      val agg = s.read.format("statestore").option("path", ckpt)
+      userProfileDrive(s, base, run.in, run.out, run.ckpt)
+      val agg = s.read.format("statestore").option("path", run.ckpt)
         .option("stateVarName", "agg").load()
         .select(col("key.value").as("user_id"), col("value.n").as("n"),
           col("value.cents").as("sum_cents"))
-      val types = s.read.format("statestore").option("path", ckpt)
+      val types = s.read.format("statestore").option("path", run.ckpt)
         .option("stateVarName", "types").load()
         .groupBy(col("key.value").as("user_id"))
         .agg(count(lit(1)).as("n_types"),
@@ -2338,10 +2288,7 @@ object PackPipeline {
         |FROM sess GROUP BY 1 ORDER BY w""".stripMargin) { (s, d) =>
       import s.implicits._
       import graft.streaming.{SessionizerWithTs, TsEvent}
-      val run = PackCore.streamRun.incrementAndGet()
-      val in = java.nio.file.Files.createTempDirectory(s"graft_st22_in$run").toString
-      val out = java.nio.file.Files.createTempDirectory(s"graft_st22_out$run").toString + "/t"
-      val ckpt = java.nio.file.Files.createTempDirectory(s"graft_st22_ck$run").toString
+      val run = Runs.start(s, "st22_tws_chained_rollup")
       import s.implicits._
       val base = Tables.events(s, d).filter(col("event_id") % 29 === 0)
         .select(col("user_id"), col("ts"), unix_millis(col("ts")).as("ms"))
@@ -2359,7 +2306,7 @@ object PackPipeline {
             .select(col("user_id"), timestamp_millis(lit(flushAtMs)).as("ts"),
               lit(flushAtMs).as("ms"))
           def drain(ss: SparkSession): Unit = {
-            val q = ss.readStream.schema(tsSchema).parquet(in)
+            val q = ss.readStream.schema(tsSchema).parquet(run.in)
               .withWatermark("ts", s"$delaySec seconds")
               .as[TsEvent]
               .groupByKey(_.user_id)
@@ -2371,7 +2318,7 @@ object PackPipeline {
               .agg(count(lit(1)).as("n_sessions"), sum(col("n")).as("n_events"))
               .select(col("window.start").as("w"), col("n_sessions"), col("n_events"))
               .writeStream.format("parquet")
-              .option("path", out).option("checkpointLocation", ckpt)
+              .option("path", run.out).option("checkpointLocation", run.ckpt)
               .outputMode("append")
               .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
               .start()
@@ -2379,8 +2326,8 @@ object PackPipeline {
           }
           // b2 flush closes every tail and clears the flushed keys'
           // state; the downstream windows then close
-          stagedTwoDrains(s, in, base, flush)(drain)
-          Tables.siteRead(s, "PackPipeline:2396", out).orderBy(col("w"))
+          stagedTwoDrains(s, run.in, base, flush)(drain)
+          Tables.siteRead(s, "PackPipeline:2396", run.out).orderBy(col("w"))
         case (None, None) => // empty slice: nothing to sessionize
           Seq.empty[(java.sql.Timestamp, Long, Long)]
             .toDF("w", "n_sessions", "n_events")

@@ -144,6 +144,15 @@ class SessionSpec extends AnyFunSuite {
       assert(!text.values.exists(_.contains(gone)), gone)
   }
 
+  /** Per-run state has one owner, `graft.io.Runs`: query code makes no
+    * temp directory and keeps no run counter of its own. */
+  test("graft/queries makes no temp directory and keeps no run counter") {
+    val queries = text.filter(_._1.startsWith("graft/queries/"))
+    assert(queries.nonEmpty)
+    for (needle <- Seq("createTempDirectory", "streamRun", "st11Run"))
+      assert(queries.collect { case (p, t) if t.contains(needle) => p }.isEmpty, needle)
+  }
+
   test("src/main reads exactly the three SPARK_GRAFT_* dials") {
     val dial = "\"SPARK_GRAFT_([A-Z0-9_]+)\"".r
     val read = text.values.flatMap(t => dial.findAllMatchIn(t).map(_.group(1))).toSet

@@ -49,14 +49,14 @@ class StageCacheSpec extends AnyFunSuite {
     val d2 = java.nio.file.Files.createTempDirectory("graft_scs5").toString
     def frame() = s.range(50).select(col("id"), (col("id") * 3).as("v"))
     PackCore.stageArrival(d1, frame(), "b1")
-    // simulate an OS /tmp reaper removing every live graft_stage dir the
-    // cache could be serving (the cache is private; sweeping the tmpdir
-    // hits the one holding this plan's encode without reaching into it)
-    Option(new java.io.File(sys.props("java.io.tmpdir")).listFiles())
-      .getOrElse(Array()).filter(_.getName.startsWith("graft_stage"))
-      .foreach { d =>
-        Option(d.listFiles()).foreach(_.foreach(_.delete())); d.delete()
-      }
+    // simulate an OS /tmp reaper removing every live staging dir the
+    // cache could be serving (the cache is private; sweeping the staging
+    // root hits the one holding this plan's encode without reaching into it)
+    val swept = Option(graft.io.Runs.siteRoot(s, "stage").listFiles()).getOrElse(Array())
+    swept.foreach { d =>
+      Option(d.listFiles()).foreach(_.foreach(_.delete())); d.delete()
+    }
+    assert(swept.nonEmpty, "the sweep must remove the staging dir it simulates reaping")
     // pre-fix this NPE'd on listFiles()=null; now it must re-encode
     PackCore.stageArrival(d2, frame(), "b1")
     val back = s.read.parquet(d2).as[(Long, Long)].collect().toSet
