@@ -1,6 +1,9 @@
 package graft.ext
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 import graft.Session
 
@@ -29,8 +32,14 @@ import graft.Session
   *  - Retention. The final frame stays cached for the caller, held in
   *    [[BoundedCache]] under the loop's site key. The previous run's frame
   *    is evicted before the loop persists anything, so an eviction can
-  *    never drop a cache entry the new result shares. Setup frames
-  *    ([[Loop.keep]]) are freed at exit. */
+  *    never drop a cache entry the new result shares. Setup frames and
+  *    RDDs ([[Loop.keep]]) are freed at exit.
+  *
+  * A loop whose state fits on the driver may step outside Catalyst
+  * (pageRank under its broadcast gate: one RDD job per step over kept
+  * RDDs). It then uses the session, [[Loop.keep]] and retention through
+  * [[Loop.result]]; cadence and step frames are not needed, since no
+  * step is a frame. */
 private[graft] object Fixpoint {
 
   /** Run `body` in a loop session; `body` returns the loop's final frame. */
@@ -42,7 +51,7 @@ private[graft] object Fixpoint {
   }
 
   final class Loop private[Fixpoint] (session: SparkSession) {
-    private var setup = List.empty[DataFrame]
+    private var setup = List.empty[() => Unit]
 
     /** `df` rebound to the loop's session. */
     def bind(df: DataFrame): DataFrame = Session.bind(df, session)
@@ -50,8 +59,25 @@ private[graft] object Fixpoint {
     /** `df` persisted until the loop exits. Lazy: its blocks build inside
       * the first job that reads it. */
     def keep(df: DataFrame): DataFrame = {
-      setup ::= df.persist(StorageLevel.MEMORY_AND_DISK)
-      setup.head
+      val kept = df.persist(StorageLevel.MEMORY_AND_DISK)
+      setup ::= (() => kept.unpersist(): Unit)
+      kept
+    }
+
+    /** `rdd` persisted until the loop exits, as [[keep]] a frame. */
+    def keep[T](rdd: RDD[T]): RDD[T] = {
+      rdd.persist(StorageLevel.MEMORY_AND_DISK)
+      setup ::= (() => rdd.unpersist(): Unit)
+      rdd
+    }
+
+    /** `rows` of `schema` as the loop's final frame: cached, as a one-node
+      * plan, and materialized with `count` while the kept frames and RDDs
+      * it reads are still cached. */
+    def result(schema: StructType, rows: RDD[InternalRow]): DataFrame = {
+      val last = GraftBridge.ofInternalRows(session, schema, rows).persist(StorageLevel.MEMORY_AND_DISK)
+      last.count()
+      last
     }
 
     /** `n` steps from `init`, materialized with `count` every `every`-th
@@ -83,7 +109,7 @@ private[graft] object Fixpoint {
       cur
     }
 
-    private[Fixpoint] def free(): Unit = setup.foreach(_.unpersist())
+    private[Fixpoint] def free(): Unit = setup.foreach(_())
   }
 
   /** A loop frame: cached, as a one-node plan. */

@@ -1,26 +1,42 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import scala.collection.mutable
+import scala.reflect.ClassTag
 
-/** Iterative graph algorithms as DataFrame programs (the engine side of
-  * the dedup-clustering / influence-scoring stories; the CC min-label
+import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.serializer.KryoSerializer
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DecimalType, DoubleType, StructField, StructType}
+
+/** Iterative graph algorithms (the engine side of the
+  * dedup-clustering / influence-scoring stories; the CC min-label
   * propagation lives in [[TextDedup.connectedComponents]]).
   *
   * Scale design: every superstep is one edge-keyed equi-join + one
   * dst-keyed aggregation — the Pregel contribution-exchange pattern that
   * partitions by vertex id at any scale. The loops run through
-  * [[Fixpoint]], which caches and materializes their steps, so the
-  * lineage (and recomputation) never grows with iteration count.
+  * [[Fixpoint]], so the lineage (and recomputation) never grows with
+  * iteration count. pageRank has two superstep paths, chosen by the node
+  * count against [[broadcastGate]]: while its rank vector fits on the
+  * driver, the edges are partitioned by dst once and each superstep is
+  * one RDD job over them, with no per-round plan; past the gate each
+  * superstep is a DataFrame join and aggregation, cached and
+  * materialized by [[Fixpoint]]'s cadence.
   */
 object Graph {
 
-  /** Node count above which the per-superstep rank table is joined with a
-    * shuffle instead of a broadcast (conf `graft.graph.rankBroadcastMaxNodes`).
-    * A rank row is ~24 serialized bytes, so the 4M default caps the
-    * broadcast near 100 MB — the same code path is then the plan at any
-    * scale, degrading to a shuffled join instead of OOMing the driver. */
+  /** Node count up to which pageRank keeps its rank vector on the driver
+    * and runs each superstep as one RDD job (conf
+    * `graft.graph.rankBroadcastMaxNodes`); past it every superstep is a
+    * shuffled DataFrame join. A rank is 8 bytes, so at the 4M default a
+    * superstep's broadcast is 32 MB and the driver holds two vectors (the
+    * old and the new). The same gate picks the broadcast of
+    * labelPropagation's label rows and triangleCount's sides, ~24
+    * serialized bytes a row: near 100 MB at 4M. */
   val RankBroadcastMaxNodesKey = "graft.graph.rankBroadcastMaxNodes"
 
   /** The broadcast gate: [[RankBroadcastMaxNodesKey]] read from `spark`'s
@@ -47,6 +63,18 @@ object Graph {
     * there is no dangling-mass redistribution step — the variant that
     * needs a global scalar broadcast per superstep. `edges` (src, dst)
     * pairs are symmetrized and de-duplicated here.
+    *
+    * Two superstep paths, chosen by the node count against
+    * [[broadcastGate]]. Under it the ranks are dense `Array[Double]`s on
+    * the driver, 8 bytes a node, and a superstep is one RDD job over
+    * dst-partitioned edge arrays ([[dstBlocks]]): no per-round plan, cache
+    * or count, which is where the DataFrame loop spent its time at small
+    * and mid scale (each round analysed, optimized, planned and generated
+    * code for a new frame, and every second round ran a count).
+    * The Scala arithmetic is Catalyst's, operation for operation, so both
+    * paths return the same doubles. Past the gate the ranks do not fit on
+    * the driver, and each superstep is a shuffled DataFrame join
+    * ([[superstep]]) run by [[Fixpoint]]'s cadence.
     */
   def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85,
                teleport: Double = 0.15): DataFrame =
@@ -61,56 +89,162 @@ object Graph {
       // optimization round): the old union-of-two-selects read the input
       // twice, which forced a persist of the raw edge frame just to keep
       // an expensive upstream derivation (a fact-table join) from running
-      // twice — the explode form scans it exactly once, so that persist,
-      // its materializing count(), and its unpersist all go away.
-      // Then fold the out-degree into the edge row with ONE window pass
-      // (outdeg never changes, so joining it per superstep — or deriving
-      // it with a groupBy+join, which recomputes the edge set — is wasted
-      // work); the cached frame keeps the window's hash(src) partitioning.
-      val withDeg = loop.keep(loop.bind(edges)
+      // twice — the explode form scans it exactly once. Kept: the node
+      // count reads it, then the index pass under the gate or the
+      // out-degree window past it.
+      val sym = loop.keep(loop.bind(edges)
         .filter(col("src").isNotNull && col("dst").isNotNull)
         .select(explode(array(
           struct(col("src"), col("dst")),
           struct(col("dst").as("src"), col("src").as("dst")))).as("_e"))
         .select(col("_e.src").as("src"), col("_e.dst").as("dst"))
-        .distinct()
-        .withColumn("outdeg", count(lit(1)).over(
+        .distinct())
+      // n decides the path, so it is counted before any index is built:
+      // one spillable distinct of the srcs, node-sized after its map-side
+      // combine. Its partitions are the index's, so under the gate the
+      // per-partition counts also size the rank vectors.
+      val t = sym.schema("src").dataType
+      val pairs = nodePairs(sym)
+      val partitioner = new HashPartitioner(sym.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
+      val counts = GraftBridge.execute(sym, "Graph.pageRank")(
+        pairs.map(e => (e._1, ())).reduceByKey(partitioner, (a, _) => a)
+          .mapPartitions(it => Iterator(it.size)).collect())
+      val n = counts.map(_.toLong).sum
+      if (n == 0 || n <= broadcastGate(edges.sparkSession)) {
+        val bySrc = sorted(pairs, partitioner)
+        // built inside the first superstep's job
+        val blocks = loop.keep(dstBlocks(bySrc, partitioner))
+        val ranks = (1 to iters).foldLeft(counts.map(Array.fill(_)(q12(1.0 / n))))(
+          (r, _) => vectorStep(blocks, r, n, damping, teleport))
+        // partition p's j-th src run is the node of rank(p)(j)
+        loop.result(
+          StructType(Seq(StructField("node", t, nullable = false), StructField("rank", DoubleType, nullable = false))),
+          bySrc.zipPartitions(bySrc.sparkContext.parallelize(ranks.toSeq, ranks.length)) { (it, r) =>
+            runs(it).zip(r.next().iterator).map { case ((k, _), x) => InternalRow(k.get(0, t), x) }
+          })
+      } else {
+        // fold the out-degree into the edge row with ONE window pass
+        // (outdeg never changes, so joining it per superstep — or deriving
+        // it with a groupBy+join, which recomputes the edge set — is wasted
+        // work); the cached frame keeps the window's hash(src) partitioning,
+        // which carries every superstep's src-keyed rank join
+        val withDeg = loop.keep(sym.withColumn("outdeg", count(lit(1)).over(
           org.apache.spark.sql.expressions.Window.partitionBy(col("src")))))
-      val nodes = withDeg.select(col("src").as("node")).distinct()
-      val n = nodes.count() // scalar graph size, not a data collect
-      // empty graph: no nodes, no ranks (avoid 1/0 literals)
-      if (n == 0) nodes.select(col("node"), lit(0.0).as("rank"))
-      else {
-        val maxBcastNodes = broadcastGate(edges.sparkSession)
-        // Under the broadcast gate the superstep's ONLY exchange is the
-        // dst-keyed contribution aggregation (the rank join broadcasts, the
-        // edge side streams) — pre-partition the cached edge frame by dst
-        // ONCE so hash(dst) satisfies every superstep agg's distribution and
-        // the whole loop runs exchange-free (guide §2.4: operations keyed
-        // the same way share one exchange; r18 optimization round). One
-        // edge-set shuffle at setup replaces `iters` edge-set shuffles. Past
-        // the gate the rank join itself is src-keyed and shuffled, so dst
-        // partitioning would buy nothing there — the window's hash(src)
-        // frame stays. withDeg stays cached until exit: the initial rank
-        // frame derives from it and is first evaluated inside the first
-        // superstep's job.
-        val edgeFrame =
-          if (n <= maxBcastNodes) loop.keep(withDeg.repartition(col("dst")))
-          else withDeg
+        val nodes = withDeg.select(col("src").as("node")).distinct()
         // Materialize every SECOND superstep: ranks feed exactly one
         // consumer (the next contribution join), so chaining two supersteps
         // into one job evaluates each exactly once — half the actions for
-        // the same lineage bound. The win is fewer scheduler round-trips
-        // per run under driver contention, where the iterative queries
-        // showed a >2x driver-vs-local spread. (Contrast CC, where the
-        // propagated frame feeds BOTH a union and a join branch.)
+        // the same lineage bound.
         loop.rounds(nodes.select(col("node"), q12(lit(1.0) / n).as("rank")), iters, every = 2)(
-          superstep(edgeFrame, _, n, damping, teleport, maxBcastNodes))
+          superstep(withDeg, _, n, damping, teleport))
       }
     }
 
   // exact-IEEE 12-decimal quantizer (see pageRank's doc)
   private def q12(c: Column): Column = floor(c * lit(1e12) + lit(0.5)) / lit(1e12)
+
+  /** [[q12]] on a double, as Catalyst evaluates it: `floor` of a double
+    * is a long. */
+  private def q12(x: Double): Double = math.floor(x * 1e12 + 0.5).toLong / 1e12
+
+  /** One superstep under the gate: the ranks, one slice per partition,
+    * broadcast once; one job whose task per partition returns its slice
+    * of the new ranks. */
+  private def vectorStep(blocks: RDD[DstBlock], ranks: Array[Array[Double]], n: Long,
+                         damping: Double, teleport: Double): Array[Array[Double]] = {
+    val bc = blocks.sparkContext.broadcast(ranks)
+    try blocks.map(_.step(bc.value, n, damping, teleport)).collect()
+    finally bc.destroy()
+  }
+
+  /** The edges into one partition's nodes, in compressed-row form: the
+    * edges into its k-th node are `off(k)` until `off(k + 1)`, and edge i
+    * runs from the `src(i)`-th node of partition `part(i)`, whose
+    * out-degree is `deg(i)`. 16 bytes an edge. */
+  private final case class DstBlock(off: Array[Int], part: Array[Int], src: Array[Int], deg: Array[Int]) {
+
+    /** The block's new ranks: Catalyst's superstep arithmetic — each
+      * contribution `q12(rank / outdeg)` cast to DECIMAL(28,12) the way
+      * `Decimal(double)` does (the decimal of `Double.toString`, HALF_UP),
+      * summed exactly, the sum cast back with `doubleValue`. The unscaled
+      * sum is a long: it overflows, and fails, only past ranks of 9.2e6. */
+    def step(rank: Array[Array[Double]], n: Long, damping: Double, teleport: Double): Array[Double] =
+      Array.tabulate(off.length - 1) { k =>
+        var sum = 0L
+        var i = off(k)
+        while (i < off(k + 1)) {
+          val c = new java.math.BigDecimal(java.lang.Double.toString(q12(rank(part(i))(src(i)) / deg(i))))
+            .setScale(12, java.math.RoundingMode.HALF_UP).unscaledValue.longValueExact
+          sum = Math.addExact(sum, c)
+          i += 1
+        }
+        q12(teleport / n + damping * java.math.BigDecimal.valueOf(sum, 12).doubleValue)
+      }
+  }
+
+  /** `sym`'s (src, dst) rows as pairs of node keys: a node is the
+    * one-column UnsafeRow of its value, and equal values have equal bytes,
+    * since `sym` is a distinct (which also normalizes float keys). */
+  private def nodePairs(sym: DataFrame): RDD[(UnsafeRow, UnsafeRow)] = {
+    val t = sym.schema("src").dataType
+    sym.queryExecution.toRdd.mapPartitions { it =>
+      val src = UnsafeProjection.create(Seq(BoundReference(0, t, nullable = true)))
+      val dst = UnsafeProjection.create(Seq(BoundReference(1, t, nullable = true)))
+      it.map(r => (src(r).copy(), dst(r).copy()))
+    }
+  }
+
+  /** Node keys in byte order: a total order on distinct node values. */
+  private object ByteOrder extends Ordering[UnsafeRow] {
+    def compare(a: UnsafeRow, b: UnsafeRow): Int = java.util.Arrays.compare(a.getBytes, b.getBytes)
+  }
+
+  /** `pairs` shuffled to their key's partition, each partition sorted by
+    * [[ByteOrder]]: Spark's sort-based shuffle, which spills. */
+  private def sorted[V: ClassTag](pairs: RDD[(UnsafeRow, V)], partitioner: Partitioner): RDD[(UnsafeRow, V)] =
+    new ShuffledRDD[UnsafeRow, V, V](pairs, partitioner)
+      .setSerializer(new KryoSerializer(pairs.sparkContext.getConf))
+      .setKeyOrdering(ByteOrder)
+
+  /** A sorted partition as runs of one key: each key once, with its
+    * values. One run is held at a time. */
+  private def runs[V](sorted: Iterator[(UnsafeRow, V)]): Iterator[(UnsafeRow, mutable.ArrayBuffer[V])] = {
+    val it = sorted.buffered
+    Iterator.continually(it).takeWhile(_.hasNext).map { it =>
+      val k = it.head._1
+      val vs = mutable.ArrayBuffer.empty[V]
+      while (it.hasNext && it.head._1 == k) vs += it.next()._2
+      (k, vs)
+    }
+  }
+
+  /** The symmetric edge set as one [[DstBlock]] per partition, for the
+    * supersteps under the gate, from `bySrc`: the edges in their src's
+    * partition, sorted. Node v lives in partition hash(v) mod P and is
+    * numbered there by its run in byte order, so a recomputed block
+    * numbers its nodes the same way, and no node value reaches the
+    * driver. Each src sends (partition, number, out-degree) to its dsts'
+    * partition, whose runs of dsts number them as that partition's runs
+    * of srcs did, the edge set being symmetric. */
+  private def dstBlocks(bySrc: RDD[(UnsafeRow, UnsafeRow)], partitioner: Partitioner): RDD[DstBlock] = {
+    val toDst = bySrc.mapPartitionsWithIndex { (p, it) =>
+      runs(it).zipWithIndex.flatMap { case ((_, dsts), j) =>
+        dsts.iterator.map(d => (d, (p.toLong << 32 | j, dsts.size)))
+      }
+    }
+    sorted(toDst, partitioner).mapPartitions { it =>
+      val (off, part, src, deg) =
+        (Array.newBuilder[Int], Array.newBuilder[Int], Array.newBuilder[Int], Array.newBuilder[Int])
+      var edges = 0
+      off += 0
+      for ((_, in) <- runs(it)) {
+        for ((pj, d) <- in) { part += (pj >>> 32).toInt; src += pj.toInt; deg += d }
+        edges += in.size
+        off += edges
+      }
+      Iterator(DstBlock(off.result(), part.result(), src.result(), deg.result()))
+    }
+  }
 
   /** Semi-supervised label propagation: spread seed labels over an
     * undirected graph for a FIXED number of synchronous rounds. Each
@@ -265,22 +399,16 @@ object Graph {
     Seq((nV, nE, nW, nT)).toDF("n_vertices", "n_edges", "n_wedges", "n_triangles")
   }
 
-  /** One Pregel superstep: contribution join + dst-keyed aggregation.
-    *
-    * Ranks are node-level (orders of magnitude under the edge count) —
-    * broadcast them so the edge side stays map-only and the superstep's
-    * single exchange is the dst-keyed contribution aggregation, the
-    * irreducible Pregel shuffle. The choice is SIZE-GATED on the node
-    * count: past [[RankBroadcastMaxNodesKey]] the hint is dropped and the
-    * cached hash(src) partitioning carries a shuffled join with one
-    * small-side exchange — same code, 100×-scale plan. Package-private so
-    * the plan regression suite can pin the flip. */
+  /** One Pregel superstep past the gate: contribution join + dst-keyed
+    * aggregation. The ranks do not fit on the driver there, so the join is
+    * shuffled: the cached hash(src) partitioning of `withDeg` carries it
+    * with one rank-side exchange, and the dst-keyed contribution
+    * aggregation is the irreducible Pregel shuffle. Package-private so
+    * the plan regression suite can pin its shape. */
   private[graft] def superstep(withDeg: DataFrame, ranks: DataFrame, n: Long,
-                               damping: Double, teleport: Double,
-                               maxBcastNodes: Long): DataFrame = {
-    val rankSide = if (n <= maxBcastNodes) broadcast(ranks) else ranks
+                               damping: Double, teleport: Double): DataFrame =
     withDeg
-      .join(rankSide, withDeg("src") === ranks("node"))
+      .join(ranks, withDeg("src") === ranks("node"))
       .select(col("dst"),
         q12(col("rank") / col("outdeg")).cast(DecimalType(28, 12)).as("c"))
       .groupBy(col("dst"))
@@ -288,5 +416,4 @@ object Graph {
       .select(col("dst").as("node"),
         q12(lit(teleport) / n + lit(damping) * col("s").cast("double"))
           .as("rank"))
-  }
 }

@@ -1,7 +1,10 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.types.StructType
 
 /** Minimal private[sql] bridge: build a DataFrame from a custom logical
   * plan node (graft.plans.TopKPerKey), and a Column from a custom
@@ -68,6 +71,17 @@ object GraftBridge {
     classic.Dataset.ofRows(ds.sparkSession, execution.LogicalRDD(qe.analyzed.output, qe.toRdd)(
       ds.sparkSession, Some(qe.optimizedPlan.stats), None))
   }
+
+  /** A DataFrame of `schema` over `rows`, as a one-node plan. */
+  def ofInternalRows(spark: SparkSession, schema: StructType, rows: RDD[InternalRow]): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
+
+  /** `body`, which runs jobs over `df.queryExecution.toRdd`, as one SQL
+    * execution of `df`'s plan named `name`: its jobs, plan and phase
+    * times reach the query-execution listeners the way an action's do. */
+  def execute[T](df: DataFrame, name: String)(body: => T): T =
+    execution.SQLExecution.withNewExecutionId(
+      df.asInstanceOf[classic.Dataset[Row]].queryExecution, Some(name))(body)
 
   /** A Column over a Catalyst expression: resolves in whatever plan it
     * lands in, with no function-registry lookup. */

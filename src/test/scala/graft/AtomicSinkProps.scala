@@ -53,7 +53,7 @@ object AtomicSinkProps extends Properties("atomic-sink") {
   property("random append/overwrite/expire/vacuum sequence == version-lifecycle model") =
     Prop.forAll(seqGen) { ops =>
       import spark.implicits._
-      val loc = java.nio.file.Files.createTempDirectory("graft_asp").toString + "/t"
+      val loc = TestSpark.tempDir("graft_asp").toString + "/t"
       val schema = Seq((0L, "x")).toDF("id", "v").schema
       def write(rows: List[(Long, String)], mode: String): Unit =
         rows.toDF("id", "v").coalesce(1)

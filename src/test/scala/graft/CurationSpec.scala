@@ -499,8 +499,8 @@ class CurationSpec extends AnyFunSuite {
 
   test("state reader surfaces checkpoint-accumulated state across two incremental runs") {
     import org.apache.spark.sql.types._
-    val in = java.nio.file.Files.createTempDirectory("cur_st11_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("cur_st11_ck").toString
+    val in = TestSpark.tempDir("cur_st11_in").toString
+    val ckpt = TestSpark.tempDir("cur_st11_ck").toString
     val sch = StructType(Seq(StructField("event_id", LongType),
       StructField("event_type", StringType)))
     def run(): Unit = {

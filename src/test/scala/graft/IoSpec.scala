@@ -10,7 +10,7 @@ class IoSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   test("K4: CREATE TABLE USING parquet is idempotent and catalog-visible") {
-    val loc = java.nio.file.Files.createTempDirectory("graft_ddl").toString
+    val loc = TestSpark.tempDir("graft_ddl").toString
     val ddl =
       s"""CREATE TABLE IF NOT EXISTS bank_payments (
          |  id STRING, message_id STRING, fecha_pago DATE, hora_pago STRING,
@@ -31,7 +31,7 @@ class IoSpec extends AnyFunSuite {
   test("corrupt JSON records: PERMISSIVE captures them, DROPMALFORMED drops them") {
     // ingestion robustness (the reference's try/except row fallback,
     // load_data:118-159, as reader policy instead of per-row code)
-    val dir = java.nio.file.Files.createTempDirectory("graft_corrupt").toString
+    val dir = TestSpark.tempDir("graft_corrupt").toString
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "a.jsonl"),
       """{"id": 1, "v": "ok"}
         |{"id": 2, "v": oops not json
@@ -57,7 +57,7 @@ class IoSpec extends AnyFunSuite {
   test("schema evolution: mergeSchema reads old and new file generations together") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_evolve").toString + "/t"
+    val dir = TestSpark.tempDir("graft_evolve").toString + "/t"
     // generation 1: (id, v) — generation 2 adds a column
     Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(dir)
     Seq((3L, "c", 30.0)).toDF("id", "v", "score").write.mode("append").parquet(dir)
@@ -474,7 +474,7 @@ class IoSpec extends AnyFunSuite {
     val o = graft.schemas.Tables.orders(spark, TestSpark.sf0001)
       .observe(obs, count(lit(1)).as("rows"),
         sum(when(col("o_totalprice") <= 0, 1).otherwise(0)).as("bad_price"))
-    val out = java.nio.file.Files.createTempDirectory("graft_obs").toString + "/t"
+    val out = TestSpark.tempDir("graft_obs").toString + "/t"
     o.write.mode("overwrite").parquet(out)
     val m = obs.get
     assert(m("rows") == spark.read.parquet(out).count())
@@ -483,7 +483,7 @@ class IoSpec extends AnyFunSuite {
 
   test("deleteWhere rewrites only affected partitions; untouched files stay byte-identical") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_del").toString + "/t"
+    val dir = TestSpark.tempDir("graft_del").toString + "/t"
     val src = (0L until 300L).map(i => (i, i % 3)).toDF("id", "band")
     graft.io.Warehouse.appendPartitioned(src, dir, Seq("band"))
     def files(band: Long) =
@@ -514,7 +514,7 @@ class IoSpec extends AnyFunSuite {
 
   test("deleteWhere keeps NULL-predicate rows — an erasure must not over-delete") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_deln").toString + "/t"
+    val dir = TestSpark.tempDir("graft_deln").toString + "/t"
     val src = Seq((Some(2L), 0L), (Some(3L), 0L), (None, 0L), (Some(4L), 1L))
       .toDF("id", "band")
     graft.io.Warehouse.appendPartitioned(src, dir, Seq("band"))
@@ -533,7 +533,7 @@ class IoSpec extends AnyFunSuite {
     // SURVIVORS from the rewrite and then dropped the whole directory —
     // a targeted delete of 1 row silently erased all 10
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_delnp").toString + "/t"
+    val dir = TestSpark.tempDir("graft_delnp").toString + "/t"
     val src = Seq(
       (1L, Some("ar")), (2L, Some("ar")),
       (10L, None), (11L, None), (12L, None), (13L, None)
@@ -564,7 +564,7 @@ class IoSpec extends AnyFunSuite {
     // EMPTY table (only _SUCCESS) made deleteWhere throw
     // UNABLE_TO_INFER_SCHEMA instead of reporting a no-op (0, 0).
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_delvoid").toString + "/t"
+    val dir = TestSpark.tempDir("graft_delvoid").toString + "/t"
     val src = Seq((Option.empty[String], 3L, 0L), (Option.empty[String], 9L, 1L))
       .toDF("p", "x", "id")
     graft.io.Warehouse.appendPartitioned(src, dir, Seq("p"))
@@ -574,7 +574,7 @@ class IoSpec extends AnyFunSuite {
     val back = spark.read.parquet(dir).select($"id").as[Long].collect().toSet
     assert(back == Set(0L), "the NULL partition's survivor must be rewritten")
     // empty table: no-op, not an exception
-    val empty = java.nio.file.Files.createTempDirectory("graft_delempty").toString + "/t"
+    val empty = TestSpark.tempDir("graft_delempty").toString + "/t"
     graft.io.Warehouse.appendPartitioned(src.limit(0), empty, Seq("p"))
     assert(graft.io.Warehouse.deleteWhere(spark, empty, "p", col("x") > 5) == ((0L, 0L)))
     // crash leftovers under hidden dirs (_temporary) are NOT data: the
@@ -598,7 +598,7 @@ class IoSpec extends AnyFunSuite {
     // rows readable without tripping the post-condition (which re-scans
     // only REWRITTEN partitions)
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_delesc").toString + "/t"
+    val dir = TestSpark.tempDir("graft_delesc").toString + "/t"
     val src = Seq(
       (1L, "a/b"), (2L, "a/b"),
       (3L, "x:y"), (4L, "k=v"),

@@ -18,7 +18,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("antiJoin gate makes re-loading idempotent (run twice ⇒ same warehouse)") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString + "/t"
+    val wh = TestSpark.tempDir("graft_wh").toString + "/t"
     val batch = Seq((1, "x"), (2, "y")).toDF("id", "v")
     batch.write.mode("overwrite").parquet(wh)
     (1 to 2).foreach { _ =>

@@ -15,7 +15,7 @@ class PipelineSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def freshDir(p: String) =
-    java.nio.file.Files.createTempDirectory(p).toString + "/t"
+    TestSpark.tempDir(p).toString + "/t"
 
   test("§3.1 ticket pipeline: render→parse→gate→load, idempotent") {
     val wh = freshDir("graft_p1")

@@ -355,24 +355,18 @@ class PlanSpec extends AnyFunSuite {
       s"no built-in join may appear under the band query:\n$p")
   }
 
-  test("pageRank superstep broadcast is size-gated by node count") {
+  test("pageRank's DataFrame superstep, the path past the gate, shuffles its rank join") {
     import spark.implicits._
     val withDeg = Seq((1L, 2L, 1L), (2L, 3L, 1L)).toDF("src", "dst", "outdeg")
     val ranks = Seq((1L, 0.5), (2L, 0.5)).toDF("node", "rank")
-    // disable size-estimate auto-broadcast so only the explicit hint decides
+    // disable size-estimate auto-broadcast so only the plan's own choice shows
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val under = graft.ext.Graph
-        .superstep(withDeg, ranks, n = 2, 0.85, 0.15, maxBcastNodes = 10)
+      val p = graft.ext.Graph.superstep(withDeg, ranks, n = 2, 0.85, 0.15)
         .queryExecution.executedPlan.toString
-      assert(under.contains("BroadcastHashJoin"),
-        s"under the gate the rank side must broadcast:\n$under")
-      val over = graft.ext.Graph
-        .superstep(withDeg, ranks, n = 2, 0.85, 0.15, maxBcastNodes = 1)
-        .queryExecution.executedPlan.toString
-      assert(!over.contains("BroadcastHashJoin"),
-        s"past the gate the join must degrade to a shuffled join:\n$over")
+      assert(!p.contains("BroadcastHashJoin"),
+        s"past the gate the rank join must be a shuffled join:\n$p")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
@@ -423,8 +417,17 @@ class PlanSpec extends AnyFunSuite {
       // inside the first superstep's job), which makes every superstep's
       // dst aggregation reuse that partitioning — the only visible
       // exchanges left are each driver action's own SinglePartition
-      // count-agg: 8 (3 setup + 1 per superstep × 5) → 5 (one per job)
-      "graph_pagerank" -> 5,
+      // count-agg: 8 (3 setup + 1 per superstep × 5) → 5 (one per job).
+      // 5 → 2 when the supersteps under the gate became RDD jobs: the
+      // loop's SQL executions are the node count over the cached edge set
+      // (0: the walker stops at the cache read), the result's count and
+      // the caller's count (1 each). That is not every shuffle the query
+      // runs: the real total is 6 shuffle stages, adding the edge set's
+      // distinct inside the cache and three RDD shuffles that are not plan
+      // nodes (the node count's, and the index pass's by src and by dst).
+      // PageRankPathsSpec pins pageRank's own shuffle stages (5 with its
+      // result count, none per superstep)
+      "graph_pagerank" -> 2,
       "dedup_cluster_cc" -> 13,
       "text_tfidf_sim_topk" -> 8,
       // 8 → 4: measured with the PQ code table present (the test runs
@@ -491,7 +494,7 @@ class PlanSpec extends AnyFunSuite {
   // the query in the same JVM).
   for ((name, budget) <- Seq(
       "graph_label_propagation" -> 3,
-      "graph_pagerank" -> 5)) {
+      "graph_pagerank" -> 2)) {
     test(s"$name budget holds on a warm rerun (retention eviction order)") {
       shuffleExchangesAcross(name): Unit // warm the retained result
       val got = shuffleExchangesAcross(name)

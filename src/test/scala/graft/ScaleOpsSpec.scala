@@ -23,8 +23,8 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("bucketed warehouse tables join without exchanging the bucketed side") {
-    val loc1 = java.nio.file.Files.createTempDirectory("graft_b1").toString
-    val loc2 = java.nio.file.Files.createTempDirectory("graft_b2").toString
+    val loc1 = TestSpark.tempDir("graft_b1").toString
+    val loc2 = TestSpark.tempDir("graft_b2").toString
     spark.sql("DROP TABLE IF EXISTS wh_orders_b")
     spark.sql("DROP TABLE IF EXISTS wh_items_b")
     val o = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "o")
@@ -123,7 +123,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("partitioned warehouse prunes partitions at the scan") {
-    val loc = java.nio.file.Files.createTempDirectory("graft_part").toString + "/t"
+    val loc = TestSpark.tempDir("graft_part").toString + "/t"
     val o = graft.schemas.Tables.orders(spark, TestSpark.sf0001)
       .withColumn("month", date_format($"o_orderdate", "yyyy-MM"))
     graft.io.Warehouse.appendPartitioned(o, loc, Seq("month"))
@@ -136,7 +136,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("dynamic partition overwrite replaces only the backfilled partition") {
-    val loc = java.nio.file.Files.createTempDirectory("graft_dynpart").toString + "/t"
+    val loc = TestSpark.tempDir("graft_dynpart").toString + "/t"
     val o = graft.schemas.Tables.orders(spark, TestSpark.sf0001)
       .withColumn("month", date_format($"o_orderdate", "yyyy-MM"))
       .select($"o_orderkey", $"o_totalprice", $"month")
@@ -199,7 +199,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("compaction rewrites many small files into few, preserving data exactly") {
-    val loc = java.nio.file.Files.createTempDirectory("graft_compact").toString + "/t"
+    val loc = TestSpark.tempDir("graft_compact").toString + "/t"
     val o = graft.schemas.Tables.orders(spark, TestSpark.sf0001)
     o.repartition(20).write.parquet(loc)
     o.limit(0).repartition(20).write.mode("append").parquet(loc) // empty-file debris
@@ -216,7 +216,7 @@ class ScaleOpsSpec extends AnyFunSuite {
 
   test("compaction torn between the two swap renames (table only at __precompact) " +
        "is recovered by the next run, not failed or lost") {
-    val loc = java.nio.file.Files.createTempDirectory("graft_compact_torn").toString + "/t"
+    val loc = TestSpark.tempDir("graft_compact_torn").toString + "/t"
     val o = graft.schemas.Tables.orders(spark, TestSpark.sf0001)
     o.repartition(8).write.parquet(loc)
     val before = spark.read.parquet(loc)
@@ -291,7 +291,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("persisted centroids serve multiprobe ANN identically to the inline training pass") {
-    val loc = java.nio.file.Files.createTempDirectory("graft_cents").toString + "/t"
+    val loc = TestSpark.tempDir("graft_cents").toString + "/t"
     val e = graft.schemas.Tables.embeddings(spark, TestSpark.sf0001)
     val q = e.filter($"vec_id" < 10)
     // train once, persist to the warehouse, reload — then serve from the table
@@ -308,7 +308,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("partition expiry deletes old partitions without reading data") {
-    val loc = java.nio.file.Files.createTempDirectory("graft_expire").toString + "/t"
+    val loc = TestSpark.tempDir("graft_expire").toString + "/t"
     val o = graft.schemas.Tables.orders(spark, TestSpark.sf0001)
       .withColumn("odate", date_format($"o_orderdate", "yyyy-MM-dd"))
     graft.io.Warehouse.appendPartitioned(o, loc, Seq("odate"))
@@ -325,7 +325,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("dynamic partition pruning: a filtered dim prunes the partitioned fact at runtime") {
-    val loc = java.nio.file.Files.createTempDirectory("graft_dpp").toString + "/fact"
+    val loc = TestSpark.tempDir("graft_dpp").toString + "/fact"
     val o = graft.schemas.Tables.orders(spark, TestSpark.sf0001)
       .withColumn("month", date_format($"o_orderdate", "yyyy-MM"))
     o.write.partitionBy("month").parquet(loc)
@@ -333,7 +333,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     val target = o.select($"month").orderBy($"month").head().getString(0)
     // dim must be a real (non-local) relation with a surviving selective
     // filter, or the PartitionPruning rule sees nothing to propagate
-    val dimLoc = java.nio.file.Files.createTempDirectory("graft_dpp").toString + "/dim"
+    val dimLoc = TestSpark.tempDir("graft_dpp").toString + "/dim"
     Seq((target, "t"), ("9999-99", "x")).toDF("month", "tag").write.parquet(dimLoc)
     val dim = spark.read.parquet(dimLoc).filter($"tag" === "t")
     val joined = fact.join(dim, Seq("month"))
@@ -347,8 +347,8 @@ class ScaleOpsSpec extends AnyFunSuite {
   test("z-ordered write prunes candidate files on both keys (2-D data skipping)") {
     val o = graft.schemas.Tables.orders(spark, TestSpark.sf0001)
       .select($"o_orderkey", $"o_custkey")
-    val zLoc = java.nio.file.Files.createTempDirectory("graft_z").toString + "/t"
-    val rLoc = java.nio.file.Files.createTempDirectory("graft_z").toString + "/r"
+    val zLoc = TestSpark.tempDir("graft_z").toString + "/t"
+    val rLoc = TestSpark.tempDir("graft_z").toString + "/r"
     Warehouse.appendZOrdered(o, zLoc, "o_orderkey", "o_custkey", 16)
     o.repartition(16).write.parquet(rLoc) // hash layout: no locality at all
     def candidates(loc: String, kBox: Long, cBox: Long) =
@@ -370,7 +370,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   test("z-ordered write: empty input is a no-op, all-NULL key fails loudly") {
     val o = graft.schemas.Tables.orders(spark, TestSpark.sf0001)
       .select($"o_orderkey", $"o_custkey")
-    val loc = java.nio.file.Files.createTempDirectory("graft_z").toString + "/t"
+    val loc = TestSpark.tempDir("graft_z").toString + "/t"
     Warehouse.appendZOrdered(o.filter(lit(false)), loc, "o_orderkey", "o_custkey", 4)
     assert(!new java.io.File(loc).exists(), "empty input writes nothing")
     val allNull = o.withColumn("o_custkey", lit(null).cast("long"))
@@ -382,7 +382,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("range-clustered write produces files with disjoint value ranges (data skipping)") {
-    val loc = java.nio.file.Files.createTempDirectory("graft_clust").toString + "/t"
+    val loc = TestSpark.tempDir("graft_clust").toString + "/t"
     val o = graft.schemas.Tables.orders(spark, TestSpark.sf0001)
     graft.io.Warehouse.appendClustered(o, loc, "o_orderdate", 4)
     val files = new java.io.File(loc).listFiles().filter(_.getName.endsWith(".parquet"))

@@ -23,7 +23,7 @@ class SchemaPinSpec extends AnyFunSuite {
   test("rewriting a table at the same path invalidates the pinned schema") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_schemapin").toString
+    val dir = graft.TestSpark.tempDir("graft_schemapin").toString
     val path = s"$dir/t.parquet"
     Seq((1L, "a")).toDF("id", "v").write.mode("overwrite").parquet(path)
     val first = Tables(s, dir, "t").schema
@@ -43,7 +43,7 @@ class SchemaPinSpec extends AnyFunSuite {
   test("a same-length single-file rewrite with the same mtime re-infers") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_schemapin_file")
+    val dir = graft.TestSpark.tempDir("graft_schemapin_file")
     // one parquet file per dataset, differing only in a same-length
     // column name: equal byte length, so only the footer tells them apart
     def singleFile(name: String): java.nio.file.Path = {
@@ -66,8 +66,8 @@ class SchemaPinSpec extends AnyFunSuite {
   test("siteRead pins by call site across per-run paths") {
     val s = spark
     import s.implicits._
-    val d1 = java.nio.file.Files.createTempDirectory("graft_site1").toString
-    val d2 = java.nio.file.Files.createTempDirectory("graft_site2").toString
+    val d1 = graft.TestSpark.tempDir("graft_site1").toString
+    val d2 = graft.TestSpark.tempDir("graft_site2").toString
     Seq((1L, "x")).toDF("id", "v").write.parquet(s"$d1/out")
     Seq((2L, "y"), (3L, "z")).toDF("id", "v").write.parquet(s"$d2/out")
     val site = s"SchemaPinSpec:${System.nanoTime()}" // unique per test run

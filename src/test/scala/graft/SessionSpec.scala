@@ -153,6 +153,16 @@ class SessionSpec extends AnyFunSuite {
       assert(queries.collect { case (p, t) if t.contains(needle) => p }.isEmpty, needle)
   }
 
+  test("src/test makes temp directories only through TestSpark.tempDir") {
+    val root = Paths.get("src/test/scala")
+    val walk = Files.walk(root)
+    val makers = try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .filter(p => "createTemp(Directory|File)\\(".r.findFirstIn(Files.readString(p)).nonEmpty)
+      .map(p => root.relativize(p).toString).toSet
+    finally walk.close()
+    assert(makers == Set("graft/TestSpark.scala"))
+  }
+
   test("src/main reads exactly the three SPARK_GRAFT_* dials") {
     val dial = "\"SPARK_GRAFT_([A-Z0-9_]+)\"".r
     val read = text.values.flatMap(t => dial.findAllMatchIn(t).map(_.group(1))).toSet

@@ -53,7 +53,7 @@ class SourceSpec extends AnyFunSuite {
       .writeStream.format("memory").queryName("ledger_stream")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_ledger_ck").toString)
+        TestSpark.tempDir("graft_ledger_ck").toString)
       .start()
     q.awaitTermination(60000)
     val got = spark.table("ledger_stream")
@@ -66,7 +66,7 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("atomic sink: commit publishes exactly the task files plus a manifest") {
-    val loc = java.nio.file.Files.createTempDirectory("graft_atomic").toString + "/t"
+    val loc = TestSpark.tempDir("graft_atomic").toString + "/t"
     val df = graft.schemas.Tables.orders(spark, TestSpark.sf0001)
       .select($"o_orderkey", $"o_orderpriority").repartition(4)
     df.write.format("graft-atomic").option("path", loc).mode("append").save()
@@ -82,7 +82,7 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("atomic sink: second append merges into the manifest; overwrite truncates") {
-    val loc = java.nio.file.Files.createTempDirectory("graft_atomic").toString + "/t"
+    val loc = TestSpark.tempDir("graft_atomic").toString + "/t"
     val df = graft.schemas.Tables.region(spark, TestSpark.sf0001)
       .select($"r_regionkey", $"r_name").repartition(2)
     def manifest() = java.nio.file.Files
@@ -114,7 +114,7 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("atomic sink read path: only manifest-listed files are visible") {
-    val loc = java.nio.file.Files.createTempDirectory("graft_atomic").toString + "/t"
+    val loc = TestSpark.tempDir("graft_atomic").toString + "/t"
     val df = graft.schemas.Tables.orders(spark, TestSpark.sf0001)
       .select($"o_orderkey", $"o_orderpriority", $"o_totalprice")
     df.repartition(4).write.format("graft-atomic").option("path", loc)
@@ -142,7 +142,7 @@ class SourceSpec extends AnyFunSuite {
     // null round-trip: a null column survives write -> read
     val withNull = df.limit(10).withColumn("o_orderpriority",
       org.apache.spark.sql.functions.lit(null).cast("string"))
-    val loc2 = java.nio.file.Files.createTempDirectory("graft_atomic").toString + "/t"
+    val loc2 = TestSpark.tempDir("graft_atomic").toString + "/t"
     withNull.write.format("graft-atomic").option("path", loc2).mode("append").save()
     val back = spark.read.schema(schema).format("graft-atomic").load(loc2)
     assert(back.filter($"o_orderpriority".isNull).count() == 10)
@@ -150,7 +150,7 @@ class SourceSpec extends AnyFunSuite {
 
   test("atomic sink time travel: versioned snapshots readable until expired") {
     import graft.sources.AtomicSink
-    val loc = java.nio.file.Files.createTempDirectory("graft_atomic").toString + "/t"
+    val loc = TestSpark.tempDir("graft_atomic").toString + "/t"
     val df = graft.schemas.Tables.nation(spark, TestSpark.sf0001)
       .select($"n_nationkey", $"n_name")
     val schema = df.schema
@@ -180,7 +180,7 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("atomic sink commit lock: stale locks break, held locks make commits wait") {
-    val loc = java.nio.file.Files.createTempDirectory("graft_atomic").toString + "/t"
+    val loc = TestSpark.tempDir("graft_atomic").toString + "/t"
     val df = graft.schemas.Tables.region(spark, TestSpark.sf0001)
       .select($"r_regionkey", $"r_name").repartition(2)
     new java.io.File(loc).mkdirs()
@@ -216,7 +216,7 @@ class SourceSpec extends AnyFunSuite {
     // (token + aged mtime) it observed twice — simulate the handover by
     // swapping the lock content to a fresh incarnation mid-wait and
     // verify the committer keeps waiting instead of breaking through.
-    val loc = java.nio.file.Files.createTempDirectory("graft_atomic").toString + "/t"
+    val loc = TestSpark.tempDir("graft_atomic").toString + "/t"
     val df = graft.schemas.Tables.region(spark, TestSpark.sf0001)
       .select($"r_regionkey", $"r_name").repartition(2)
     new java.io.File(loc).mkdirs()
@@ -242,7 +242,7 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("atomic sink: a failed job publishes nothing (abort cleans staging)") {
-    val loc = java.nio.file.Files.createTempDirectory("graft_atomic").toString + "/t"
+    val loc = TestSpark.tempDir("graft_atomic").toString + "/t"
     val boom = udf((k: Long) =>
       if (k % 500 == 499) throw new RuntimeException("boom") else k)
     intercept[Exception] {
@@ -268,7 +268,7 @@ class SourceSpec extends AnyFunSuite {
 
   test("AvroIo roundtrips all bridged types with nulls, one container per partition") {
     import graft.sources.AvroIo
-    val dir = java.nio.file.Files.createTempDirectory("graft_avro_t").toString + "/t"
+    val dir = TestSpark.tempDir("graft_avro_t").toString + "/t"
     val df = Seq(
       (1L, 1, 1.5, "a", true),
       (2L, 2, 2.5, "b", false),
@@ -301,7 +301,7 @@ class SourceSpec extends AnyFunSuite {
 
   test("AvroIo staged commit: a failing write leaves the previous table intact") {
     import graft.sources.AvroIo
-    val dir = java.nio.file.Files.createTempDirectory("graft_avro_c").toString + "/t"
+    val dir = TestSpark.tempDir("graft_avro_c").toString + "/t"
     val v1 = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")
     assert(AvroIo.write(v1, dir) >= 1)
     // poisoned v2: one partition throws mid-write — the job fails, and
@@ -327,7 +327,7 @@ class SourceSpec extends AnyFunSuite {
 
   test("AvroIo torn swap (table only at __old) is restored by the next call") {
     import graft.sources.AvroIo
-    val dir = java.nio.file.Files.createTempDirectory("graft_avro_t").toString + "/t"
+    val dir = TestSpark.tempDir("graft_avro_t").toString + "/t"
     val v1 = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
     assert(AvroIo.write(v1, dir) >= 1)
     // simulate a crash between rename(base->bak) and rename(staging->base)
@@ -344,7 +344,7 @@ class SourceSpec extends AnyFunSuite {
 
   test("AvroIo read closes early-exited iterators (limit stops mid-file)") {
     import graft.sources.AvroIo
-    val dir = java.nio.file.Files.createTempDirectory("graft_avro_l").toString + "/t"
+    val dir = TestSpark.tempDir("graft_avro_l").toString + "/t"
     AvroIo.write((1L to 1000L).map(i => (i, s"v$i")).toDF("k", "v").coalesce(1), dir)
     // CollectLimitExec stops pulling mid-partition: the task-completion
     // listener (not iterator exhaustion) must close the container stream
@@ -359,7 +359,7 @@ class SourceSpec extends AnyFunSuite {
   test("XML roundtrip escapes markup-significant characters (s13's seam the fixture can't hit)") {
     // the customer fixture has no <,&,>,',\" in any string — this pins the
     // writer-escape/reader-unescape cycle s13_scan_xml relies on
-    val dir = java.nio.file.Files.createTempDirectory("graft_xml_esc").toString + "/t"
+    val dir = TestSpark.tempDir("graft_xml_esc").toString + "/t"
     val rows = Seq((1L, """a<b&c>d"e'f"""), (2L, "line1\nline2"), (3L, "]]>&amp;&lt;"))
     rows.toDF("id", "s").write.format("xml")
       .option("rowTag", "rec").mode("overwrite").save(dir)
@@ -372,7 +372,7 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("XML roundtrip preserves NULLs (writer omits the element, reader restores null)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_xml_null").toString + "/t"
+    val dir = TestSpark.tempDir("graft_xml_null").toString + "/t"
     Seq((1L, Some("x"), Some(10L)), (2L, None, Some(20L)), (3L, Some("z"), None))
       .toDF("id", "s", "v")
       .write.format("xml").option("rowTag", "rec").mode("overwrite").save(dir)
@@ -399,7 +399,7 @@ class SourceSpec extends AnyFunSuite {
     // What must NEVER happen: a mix of v1 and v2 rows, or a silent
     // fallback to the new version.
     import graft.sources.AtomicSink
-    val loc = java.nio.file.Files.createTempDirectory("graft_atomic_rv").toString + "/t"
+    val loc = TestSpark.tempDir("graft_atomic_rv").toString + "/t"
     val rowsV1 = (0L until 20L).map(i => (i, "v1"))
     val rowsV2 = (100L until 120L).map(i => (i, "v2"))
     rowsV1.toDF("id", "src").coalesce(2).write.format("graft-atomic")
@@ -466,7 +466,7 @@ class SourceSpec extends AnyFunSuite {
     // the failure this pins: two manifest read-modify-writes interleave
     // and the second publish drops the first's files — the lost update
     // the commit lock + owner fence exist to prevent
-    val loc = java.nio.file.Files.createTempDirectory("graft_atomic_cc").toString + "/t"
+    val loc = TestSpark.tempDir("graft_atomic_cc").toString + "/t"
     val writers = 4
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val ts = (0 until writers).map { w =>

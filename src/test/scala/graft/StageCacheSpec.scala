@@ -19,9 +19,9 @@ class StageCacheSpec extends AnyFunSuite {
   test("repeat staging of an equal plan is a byte-identical copy; different plans never alias") {
     val s = spark
     import s.implicits._
-    val d1 = java.nio.file.Files.createTempDirectory("graft_scs1").toString
-    val d2 = java.nio.file.Files.createTempDirectory("graft_scs2").toString
-    val d3 = java.nio.file.Files.createTempDirectory("graft_scs3").toString
+    val d1 = graft.TestSpark.tempDir("graft_scs1").toString
+    val d2 = graft.TestSpark.tempDir("graft_scs2").toString
+    val d3 = graft.TestSpark.tempDir("graft_scs3").toString
     def frame(n: Int) = s.range(n).select(col("id"), (col("id") % 7).as("k"))
     // two stagings of the SAME plan (fresh DataFrame objects — equality is
     // semantic, not reference) into different dirs
@@ -45,8 +45,8 @@ class StageCacheSpec extends AnyFunSuite {
   test("externally reaped staging dir is a cache miss, not an NPE") {
     val s = spark
     import s.implicits._
-    val d1 = java.nio.file.Files.createTempDirectory("graft_scs4").toString
-    val d2 = java.nio.file.Files.createTempDirectory("graft_scs5").toString
+    val d1 = graft.TestSpark.tempDir("graft_scs4").toString
+    val d2 = graft.TestSpark.tempDir("graft_scs5").toString
     def frame() = s.range(50).select(col("id"), (col("id") * 3).as("v"))
     PackCore.stageArrival(d1, frame(), "b1")
     // simulate an OS /tmp reaper removing every live staging dir the

@@ -16,7 +16,7 @@ class StreamingSpec extends AnyFunSuite {
     StructField("event_id", LongType), StructField("ts", TimestampType),
     StructField("user_id", LongType), StructField("value", DoubleType)))
 
-  private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
+  private def tmp(prefix: String) = TestSpark.tempDir(prefix).toString
 
   /** Stage one arrival batch: any DataFrame written as parquet files
     * directly inside `dir` (the streaming file source lists only the

@@ -92,7 +92,7 @@ object WarehouseNullProps extends Properties("warehouse-null") {
   // its dir (the error's table stays inspectable); a returned-false case
   // cleans up like a pass — its :| label carries the diagnostics.
   private def withDir[A](tag: String)(body: String => A): A = {
-    val root = java.nio.file.Files.createTempDirectory(s"graft_np_$tag")
+    val root = TestSpark.tempDir(s"graft_np_$tag")
     val r = body(root.toString + "/t")
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)

@@ -57,7 +57,7 @@ class XlsxSpec extends AnyFunSuite {
   test("roundtrip through Spark: write real xlsx, scan with explicit schema") {
     val df = Seq((1, "north & east", 2.5), (2, "süd <öst>", -0.25), (3, null, 0.0))
       .toDF("id", "name", "score")
-    val dir = java.nio.file.Files.createTempDirectory("graft_xlsx").toString
+    val dir = TestSpark.tempDir("graft_xlsx").toString
     Xlsx.writeFile(df, s"$dir/report.xlsx")
     val back = Xlsx.read(spark, dir, StructType(Seq(
         StructField("id", IntegerType), StructField("name", StringType),
@@ -83,7 +83,7 @@ class XlsxSpec extends AnyFunSuite {
   }
 
   test("writeFile enforces its bounded-export contract") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_xlsx_bound").toString
+    val dir = TestSpark.tempDir("graft_xlsx_bound").toString
     val big = spark.range(Xlsx.WriteFileMaxRows + 1L).toDF("id")
     val e = intercept[IllegalArgumentException] {
       Xlsx.writeFile(big, s"$dir/too_big.xlsx")
@@ -92,7 +92,7 @@ class XlsxSpec extends AnyFunSuite {
   }
 
   test("a directory of workbooks parallelizes per file (the weekly report drop)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_xlsx_many").toString
+    val dir = TestSpark.tempDir("graft_xlsx_many").toString
     (1 to 3).foreach { w =>
       Xlsx.writeFile(Seq((w, s"report_$w")).toDF("week", "name"),
         s"$dir/week_$w.xlsx")
@@ -107,7 +107,7 @@ class XlsxSpec extends AnyFunSuite {
     // filename-keyed ingestion (the MP report grammar): rows from a
     // multi-file scan must carry their own file's path, not a
     // partition-mate's
-    val dir = java.nio.file.Files.createTempDirectory("graft_xlsx_prov").toString
+    val dir = TestSpark.tempDir("graft_xlsx_prov").toString
     (1 to 3).foreach { w =>
       Xlsx.writeFile(
         Seq((w * 10, s"a$w"), (w * 10 + 1, s"b$w")).toDF("id", "tag"),

@@ -39,8 +39,8 @@ class ZOrderRetrievalSpec extends AnyFunSuite {
       $"id",
       pmod(hash($"id" * 7 + 1), lit(256)).cast("long").as("x"),
       pmod(hash($"id" * 13 + 5), lit(256)).cast("long").as("y"))
-    val zdir = java.nio.file.Files.createTempDirectory("graft_zlay").toString + "/t"
-    val cdir = java.nio.file.Files.createTempDirectory("graft_clay").toString + "/t"
+    val zdir = TestSpark.tempDir("graft_zlay").toString + "/t"
+    val cdir = TestSpark.tempDir("graft_clay").toString + "/t"
     df.withColumn("z", Ops.zValue($"x", $"y", 8))
       .repartitionByRange(16, $"z").sortWithinPartitions($"z")
       .write.parquet(zdir)
