@@ -299,26 +299,4 @@ object Warehouse {
       s"compact: rename $staged -> $dir failed (previous data preserved at $bak)")
     if (fs.exists(dir) && fs.exists(bak)) { fs.delete(bak, true); () }
   }
-
-  /** Retention expiry over a hive-partitioned layout: drop whole partition
-    * directories whose partition value sorts below `cutoff` — a pure
-    * metadata/file operation, no data read or rewritten (the reference
-    * expires logs after 14 days, main.tf:843-846; at 100 TB retention must
-    * be partition-level deletes, not row filters). Values compare as
-    * strings, which is correct for ISO dates and zero-padded keys.
-    * Listing/deletes ride the Hadoop FileSystem API (r13: the
-    * java.io.File version listed nothing on any non-local path, so remote
-    * retention silently never expired anything). */
-  def expirePartitions(spark: SparkSession, path: String, partitionCol: String,
-                       cutoff: String): Seq[String] = {
-    val prefix = partitionCol + "="
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return Nil
-    val expired = fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-      .filter(_.getPath.getName.stripPrefix(prefix) < cutoff)
-    expired.foreach(s => fs.delete(s.getPath, true))
-    expired.map(_.getPath.getName.stripPrefix(prefix)).toSeq.sorted
-  }
 }

@@ -883,7 +883,8 @@ object PackPipeline {
     },
 
     // ST15 (live) — streaming dedup with WATERMARK-BOUNDED state
-    // (dropDuplicatesWithinWatermark, the Spark 3.5+ API): plain
+    // (StreamingOps.dedupStream over dropDuplicatesWithinWatermark, the
+    // Spark 3.5+ API): plain
     // dropDuplicates on a streaming frame keeps key state FOREVER unless
     // the event-time column itself is part of the dedup key — the
     // classic unbounded-state footgun for "dedup by id" at 100 TB/day.
@@ -910,9 +911,8 @@ object PackPipeline {
           org.apache.spark.sql.types.TimestampType)))
       val name = s"st15_live_run_${run.id}"
       val ss = Session.derived(s, Session.Stream)
-      ss.readStream.schema(sch).parquet(run.in)
-        .withWatermark("ts", "90 days")
-        .dropDuplicatesWithinWatermark("user_id", "event_type")
+      graft.streaming.StreamingOps.dedupStream(ss.readStream.schema(sch).parquet(run.in),
+          "ts", "90 days", "user_id", "event_type")
         .select(col("user_id"), col("event_type"))
         .writeStream.format("memory").queryName(name)
         .outputMode("append")

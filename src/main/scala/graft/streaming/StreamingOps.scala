@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** Streaming semantics (SURVEY.md §2.10): the reference's cron/webhook
@@ -45,10 +45,13 @@ object StreamingOps {
       .option("sourceArchiveDir", archiveDir)
       .parquet(dir)
 
-  /** ST3 — stateful exactly-once-per-key: watermark-bounded dropDuplicates. */
+  /** ST3 — stateful exactly-once-per-key with watermark-bounded state:
+    * a key's state expires once the watermark passes its event time plus
+    * `watermark`. Plain `dropDuplicates(keys)` on a stream keeps every
+    * key forever unless the event time is itself part of the key. */
   def dedupStream(df: DataFrame, tsCol: String, watermark: String,
                   keys: String*): DataFrame =
-    df.withWatermark(tsCol, watermark).dropDuplicates(keys)
+    df.withWatermark(tsCol, watermark).dropDuplicatesWithinWatermark(keys)
 
   /** ST4 + K3 + K7 — run the staged batch to the warehouse and stop:
     * AvailableNow trigger, append sink, failed batches recorded to an
@@ -244,75 +247,6 @@ object StreamingOps {
     * (count, sum) per key. */
   final case class EventRow(event_id: Long, user_id: Long, value: Double)
   final case class UserTotal(user_id: Long, n: Long, total: Double)
-
-  /** Session windows with gap timeout via flatMapGroupsWithState: a
-    * session closes when `gapMs` elapses without events for the key (or
-    * at end-of-input for AvailableNow runs via the final state timeout).
-    * Emits one row per CLOSED session — the custom-window shape the
-    * built-in tumbling/sliding windows can't express. State per key =
-    * (session start, last-seen, count, sum). */
-  final case class TimedEvent(user_id: Long, ts: java.sql.Timestamp, value: Double)
-  final case class Session(user_id: Long, start: java.sql.Timestamp,
-                           end: java.sql.Timestamp, n: Long, total: Double)
-  final case class SessState(start: Long, last: Long, n: Long, acc: Double)
-
-  def sessionWindows(ds: Dataset[TimedEvent], gapMs: Long): Dataset[Session] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessState, Session](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[TimedEvent], state: GroupState[SessState]) =>
-          // NULL event-time rows are unassignable to any session — drop
-          // them (the same hygiene rule the graph/dedup families apply to
-          // NULL keys). The watermark operator passes NULL-ts rows
-          // through, so without this one bad row's .getTime would kill
-          // the task and with it the whole streaming query.
-          val sorted = rows.filter(_.ts != null).toSeq.sortBy(_.ts.getTime)
-          val closed = Seq.newBuilder[Session]
-          var st = state.getOption.orNull
-          if (state.hasTimedOut && st != null) {
-            closed += Session(uid, new java.sql.Timestamp(st.start),
-              new java.sql.Timestamp(st.last), st.n, st.acc)
-            st = null
-          }
-          sorted.foreach { e =>
-            val t = e.ts.getTime
-            st match {
-              case null => st = SessState(t, t, 1L, e.value)
-              case s if t - s.last > gapMs =>
-                closed += Session(uid, new java.sql.Timestamp(s.start),
-                  new java.sql.Timestamp(s.last), s.n, s.acc)
-                st = SessState(t, t, 1L, e.value)
-              case s => st = SessState(s.start, t, s.n + 1, s.acc + e.value)
-            }
-          }
-          if (st != null) {
-            state.update(st)
-            state.setTimeoutTimestamp(st.last + gapMs)
-          } else state.remove()
-          closed.result().iterator
-      }
-  }
-
-  /** ST6 (alerting half) — the CloudWatch-alarm → SNS-email path
-    * (main.tf:1124-1187) as a StreamingQueryListener: query lifecycle and
-    * failure events land in an in-memory alert log (swap `record` for a
-    * pager/webhook call in production). Register via
-    * `spark.streams.addListener(new AlertListener)`. */
-  final class AlertListener extends org.apache.spark.sql.streaming.StreamingQueryListener {
-    import org.apache.spark.sql.streaming.StreamingQueryListener._
-    private val log = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    def alerts: Seq[String] = { import scala.jdk.CollectionConverters._; log.asScala.toSeq }
-    private def record(kind: String, detail: String): Unit = { log.add(s"$kind: $detail"); () }
-    override def onQueryStarted(e: QueryStartedEvent): Unit =
-      record("started", e.id.toString)
-    override def onQueryProgress(e: QueryProgressEvent): Unit =
-      record("progress", s"${e.progress.id} rows=${e.progress.numInputRows}")
-    override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-      record(if (e.exception.isDefined) "ALERT-failure" else "terminated",
-        s"${e.id} ${e.exception.getOrElse("")}")
-  }
 
   /** Per-user running totals through the Spark 4 arbitrary-state v2 API
     * (`transformWithState` + `StatefulProcessor`): typed named state

@@ -124,8 +124,11 @@ class WarmStartProcessor
   * to epoch MILLISECONDS batch-side, so the 30-minute-gap comparisons
   * are integer math stated identically in the oracle (sub-ms jitter
   * can otherwise flip a gap that lands exactly on the boundary). The
-  * `ts` timestamp column rides along solely to drive the watermark. */
-case class TsEvent(user_id: Long, ts: java.sql.Timestamp, ms: Long)
+  * `ts` timestamp column rides along solely to drive the watermark. A
+  * row with no event time (`ms` NULL) belongs to no session, and the
+  * processors drop it: the watermark operator passes NULL event times
+  * through, and one such row must not fail the whole stream. */
+case class TsEvent(user_id: Long, ts: java.sql.Timestamp, ms: Option[Long])
 
 /** Open-session accumulator: earliest arrival, latest arrival, count. */
 case class SessionAcc(start_ms: Long, last_ms: Long, n: Long)
@@ -202,7 +205,7 @@ class SessionTimerProcessor(gapMs: Long)
 
   override def handleInputRows(key: Long, rows: Iterator[TsEvent],
                                timerValues: TimerValues): Iterator[SessionOut] = {
-    val ms = rows.map(_.ms).toArray
+    val ms = rows.flatMap(_.ms).toArray
     if (ms.isEmpty) return Iterator.empty
     java.util.Arrays.sort(ms)
     val sess = SessionMath.sessionize(ms, gapMs)
@@ -270,7 +273,7 @@ class SessionizerWithTs(gapMs: Long, flushAtMs: Long = Long.MaxValue)
                                timerValues: TimerValues): Iterator[SessionOutT] = {
     var flush = false
     val real = scala.collection.mutable.ArrayBuffer.empty[Long]
-    rows.foreach { e => if (e.ms >= flushAtMs) flush = true else real += e.ms }
+    rows.flatMap(_.ms).foreach(ms => if (ms >= flushAtMs) flush = true else real += ms)
     val ms = real.toArray
     java.util.Arrays.sort(ms)
     val sess = SessionMath.sessionize(ms, gapMs)

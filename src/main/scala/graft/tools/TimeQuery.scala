@@ -9,7 +9,7 @@ import scala.util.Try
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.{GraftBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.QueryPlanningTracker
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
@@ -20,7 +20,9 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.functions.{array_sort, col, count, lit, map_entries, struct, sum, to_json, xxhash64}
 import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.types.{DecimalType, MapType}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.ext.BoundedCache
@@ -42,7 +44,7 @@ import graft.queries.Pack
   * Every run starts cache-cold: [[BoundedCache]] and the session's
   * cache are cleared before its `construct`, so no line depends on the
   * queries that ran before it, and runs 2.. are JIT-warm but cache-cold.
-  * Each record line holds three phases, run in this order:
+  * Each record line holds four phases, run in this order:
   *  - `construct`: `fn(spark, sfDir)` — file listing, schema pins and the
   *    eager streaming drains the st* queries run inside `fn`;
   *  - `count`: `df.count()`, the bench's action. Catalyst prunes every
@@ -50,7 +52,8 @@ import graft.queries.Pack
   *    projection chain may never run under it;
   *  - `noop`: a write to the built-in `noop` sink, which evaluates every
   *    projected column and writes nothing — the full compute cost, with
-  *    no IO on the way out.
+  *    no IO on the way out;
+  *  - `fp`: the result's [[fingerprint]], one more job over the frame.
   *
   * Every phase carries the same counters: `wall_s`; Catalyst
   * `analysis_ms`/`optimization_ms`/`planning_ms` (the
@@ -71,17 +74,19 @@ import graft.queries.Pack
   * [[record]]; streams and fixpoint loops reach them through the
   * forwarders of their [[graft.Session.derived]] session.
   *
-  * Every line also carries `plan`: the [[planFacts]] node counts of the
-  * frame's own `df.queryExecution.executedPlan`, walked by [[nodes]]
-  * after `count`, and `rows`, the count's result. That plan is an
-  * `AdaptiveSparkPlanExec` that never runs (the count and the noop write
-  * execute plans of their own), so its facts are the plan as it stands
-  * before execution: a join AQE converts to a broadcast at runtime never
-  * shows in them. Run 1's line adds `plan_text`, its
-  * `explain("formatted")` output.
-  *
-  * SPARK_GRAFT_SHUFFLE decouples partition count from core count: a
-  * partition-shape sweep is one record per shuffle setting. */
+  * Every line also carries `result`, the `fp` phase's row count and
+  * fingerprint (a decimal string). `tools/benchdiff.py` compares them
+  * between runs 1.. of one record and between two records: one in
+  * reverse pack order, or one per SPARK_GRAFT_SHUFFLE setting, which
+  * decouples partition count from core count (partition-count
+  * invariance, or a partition-shape sweep). And it carries `plan`: the
+  * [[planFacts]] node counts of the frame's own
+  * `df.queryExecution.executedPlan`, walked by [[nodes]] after `count`.
+  * That plan is an `AdaptiveSparkPlanExec` that never runs (the count,
+  * the noop write and the fingerprint execute plans of their own), so
+  * its facts are the plan as it stands before execution: a join AQE
+  * converts to a broadcast at runtime never shows in them. Run 1's line
+  * adds `plan_text`, its `explain("formatted")` output. */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
     if (args.isEmpty || !Files.isDirectory(Paths.get(args.head))) {
@@ -133,22 +138,51 @@ object TimeQuery {
         BoundedCache.clear()
         spark.catalog.clearCache()
         val (df, construct) = phase(Pack.byName(name).fn(spark, sfDir))
-        val (rows, count) = phase(df.count())
+        val (_, count) = phase(df.count())
         val plan = nodes(df.queryExecution.executedPlan)
         val facts = planFacts.map { case (k, f) => s""""$k":${plan.count(f)}""" }
         val text =
           if (run == 1) s""","plan_text":${str(df.queryExecution.explainString(FormattedMode))}"""
           else ""
         val (_, noop) = phase(df.write.format("noop").mode("overwrite").save())
+        val ((rows, fp), fpPhase) = phase(fingerprint(df))
         emit(s"""{"query":${str(name)},"run":$run,"construct":${construct.json},""" +
-          s""""count":${count.json},"noop":${noop.json},""" +
-          s""""plan":${(facts :+ s""""rows":$rows""").mkString("{", ",", "}")}$text}""")
+          s""""count":${count.json},"noop":${noop.json},"fp":${fpPhase.json},""" +
+          s""""result":{"rows":$rows,"fp":${str(fp)}},""" +
+          s""""plan":${facts.mkString("{", ",", "}")}$text}""")
       }
     } finally {
       spark.streams.removeListener(rec.streams)
       spark.listenerManager.unregister(rec)
       spark.sparkContext.removeSparkListener(rec)
     }
+  }
+
+  /** `df`'s row count and an order-free fold of its rows, the
+    * DECIMAL(38,0) sum of each row's `xxhash64(to_json(struct(*)))`, both
+    * computed in one job on the executors, so nothing result-sized
+    * crosses the driver; the fold of no rows is "0". Equal multisets of
+    * rows fingerprint equal whatever the partitioning or row order, so it
+    * cannot see an ORDER BY whose ties moved (PartitionInvarianceSpec
+    * compares ordered output). The sum is decimal because a LONG sum of
+    * 64-bit hashes overflows within a few rows under ANSI. `to_json`
+    * keeps NULL fields, so (NULL, 1) and (1, NULL) differ even if field
+    * names stopped telling them apart. A map column encodes in its
+    * internal entry order, which need not survive a repartition, so
+    * top-level maps fold as their sorted entry lists; nested maps (inside
+    * a struct or an array) are not canonicalized, and the pack has none. */
+  def fingerprint(df: DataFrame): (Long, String) = {
+    val canon = df.schema.fields.map { f =>
+      f.dataType match {
+        case _: MapType => array_sort(map_entries(col(f.name))).as(f.name)
+        case _ => col(f.name)
+      }
+    }
+    val row = df.select(xxhash64(to_json(struct(canon.toSeq: _*),
+          Map("ignoreNullFields" -> "false")))
+        .cast(DecimalType(38, 0)).as("h"))
+      .agg(count(lit(1)).as("n"), sum(col("h")).as("s")).head()
+    (row.getLong(0), if (row.isNullAt(1)) "0" else row.getDecimal(1).toPlainString)
   }
 
   /** Every node a physical plan runs, in pre-order. It descends AQE

@@ -307,23 +307,6 @@ class ScaleOpsSpec extends AnyFunSuite {
     assert(fromTable.nonEmpty)
   }
 
-  test("partition expiry deletes old partitions without reading data") {
-    val loc = TestSpark.tempDir("graft_expire").toString + "/t"
-    val o = graft.schemas.Tables.orders(spark, TestSpark.sf0001)
-      .withColumn("odate", date_format($"o_orderdate", "yyyy-MM-dd"))
-    graft.io.Warehouse.appendPartitioned(o, loc, Seq("odate"))
-    // cutoff = one year past the earliest order → a real split point
-    val cutoff = o.selectExpr(
-      "CAST(date_add(min(o_orderdate), 365) AS STRING)").head().getString(0)
-    val expectKeep = o.filter($"odate" >= cutoff).count()
-    val dropped = graft.io.Warehouse.expirePartitions(spark, loc, "odate", cutoff)
-    assert(dropped.nonEmpty && dropped.forall(_ < cutoff))
-    val kept = spark.read.parquet(loc)
-    assert(kept.count() == expectKeep)
-    // partition-column inference types odate back as DATE → cast to compare
-    assert(kept.selectExpr("CAST(min(odate) AS STRING)").head().getString(0) >= cutoff)
-  }
-
   test("dynamic partition pruning: a filtered dim prunes the partitioned fact at runtime") {
     val loc = TestSpark.tempDir("graft_dpp").toString + "/fact"
     val o = graft.schemas.Tables.orders(spark, TestSpark.sf0001)

@@ -125,15 +125,16 @@ class SessionSpec extends AnyFunSuite {
     assert(installs == 3, "install is called from QDef.tuned, Ops.bandJoin and Ops.topKPerKey")
   }
 
-  /** Query code writes no session conf: streams and loops get their
-    * settings from a derived session, which only `graft.Session` makes.
-    * The one exception is Schemas' `nanosAsLong`, set on the session that
-    * reads `events`, because the flag is read again when the caller's
-    * frame executes its scan. Tools may configure the sessions they build. */
+  /** Neither query code nor a tool writes session conf: streams and
+    * loops get their settings from a derived session, which only
+    * `graft.Session` makes, and a tool's variants are records made under
+    * the SPARK_GRAFT_* dials. The one exception is Schemas' `nanosAsLong`,
+    * set on the session that reads `events`, because the flag is read
+    * again when the caller's frame executes its scan. */
   test("src/main checkpoints nothing, and writes conf only in Session and nanosAsLong") {
     assert(text.collect { case (p, t) if t.contains("localCheckpoint(") => p }.isEmpty)
     val writes = for {
-      (p, t) <- text.toSeq.sortBy(_._1) if !p.startsWith("graft/tools/")
+      (p, t) <- text.toSeq.sortBy(_._1)
       line <- t.linesIterator if "conf\\.(set|unset)\\(".r.findFirstIn(line).nonEmpty
     } yield p -> line.trim
     val (session, others) = writes.partition(_._1 == "graft/Session.scala")
@@ -144,13 +145,13 @@ class SessionSpec extends AnyFunSuite {
       assert(!text.values.exists(_.contains(gone)), gone)
   }
 
-  /** Per-run state has one owner, `graft.io.Runs`: query code makes no
-    * temp directory and keeps no run counter of its own. */
-  test("graft/queries makes no temp directory and keeps no run counter") {
-    val queries = text.filter(_._1.startsWith("graft/queries/"))
-    assert(queries.nonEmpty)
-    for (needle <- Seq("createTempDirectory", "streamRun", "st11Run"))
-      assert(queries.collect { case (p, t) if t.contains(needle) => p }.isEmpty, needle)
+  /** Per-run state has one owner, `graft.io.Runs`: no other code makes a
+    * temp directory or keeps a run counter of its own. Bench's IO probe
+    * is the one exception, a part of the driver's harness. */
+  test("src/main makes no temp directory outside Bench, and keeps no run counter") {
+    for (needle <- Seq("createTempDirectory", "createTempFile", "streamRun", "st11Run"))
+      assert(text.collect { case (p, t) if t.contains(needle) => p }.toSet -- Set("graft/Bench.scala")
+        == Set.empty, needle)
   }
 
   test("src/test makes temp directories only through TestSpark.tempDir") {

@@ -456,6 +456,29 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("session windows: a NULL event-time row is dropped, not a query-killing NPE") {
+    import graft.streaming.SessionOut
+    val in = tmp("graft_inSn"); val ckpt = tmp("graft_ckptSn"); val out = tmp("graft_twsSn")
+    withRocksDb {
+      // one NULL-ts row rides along with two real rows for the same key:
+      // the watermark operator does NOT filter NULL event times, so the
+      // processor must
+      stageSessions(in, Seq((1L, "2024-01-01 10:00:00"), (1L, null),
+        (1L, "2024-01-01 12:00:00")), "b1")
+      runSessionTimer(in, out, ckpt)
+      // b2: sentinel fires the open tail's timer
+      stageSessions(in, Seq((-1L, "2024-01-05 00:00:00")), "b2")
+      runSessionTimer(in, out, ckpt)
+      val rows = spark.read.parquet(s"$out/t").filter($"user_id" >= 0)
+        .as[SessionOut].collect().sortBy(_.start_ms)
+      val t10 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00").getTime
+      val t12 = java.sql.Timestamp.valueOf("2024-01-01 12:00:00").getTime
+      // the NULL-ts row joins no session; the 2h gap still splits the two
+      assert(rows.map(r => (r.user_id, r.start_ms, r.n)).toSeq ==
+        Seq((1L, t10, 1L), (1L, t12, 1L)), s"got: ${rows.mkString(", ")}")
+    }
+  }
+
   test("chained stateful operators: SessionizerWithTs + windowed rollup in one query, " +
        "flush markers close tails above the watermark") {
     import graft.streaming.{SessionizerWithTs, TsEvent}
@@ -604,76 +627,6 @@ class StreamingSpec extends AnyFunSuite {
     val rows = spark.sql("SELECT p_id, v_id FROM ij_out ORDER BY p_id")
       .as[(Long, Long)].collect().toSeq
     assert(rows == Seq((100L, 1L)))
-  }
-
-  test("flatMapGroupsWithState session windows close on the inactivity gap") {
-    val in = tmp("graft_in8"); val ckpt = tmp("graft_ckpt8")
-    stageBatch(in, Seq(
-      (1L, "2024-01-01 10:00:00", 7L, 1.0), (2L, "2024-01-01 10:05:00", 7L, 2.0),
-      (3L, "2024-01-01 12:00:00", 7L, 4.0)), "b1") // 2h gap closes the first session
-    val src = StreamingOps.fileSource(spark, in, schema)
-      .withWatermark("ts", "0 seconds")
-      .select($"user_id", $"ts", $"value").as[StreamingOps.TimedEvent]
-    val q = StreamingOps.sessionWindows(src, gapMs = 10 * 60 * 1000)
-      .writeStream.format("memory").queryName("sess_out").outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val rows = spark.sql(
-      "SELECT user_id, CAST(start AS STRING), CAST(end AS STRING), n, total FROM sess_out")
-      .as[(Long, String, String, Long, Double)].collect().toSeq
-    assert(rows == Seq((7L, "2024-01-01 10:00:00", "2024-01-01 10:05:00", 2L, 3.0)))
-  }
-
-  test("session windows: a NULL event-time row is dropped, not a query-killing NPE") {
-    val in = tmp("graft_in8n"); val ckpt = tmp("graft_ckpt8n")
-    // one NULL-ts row rides along with two real rows for the same key —
-    // the watermark operator does NOT filter NULL event times, so the
-    // group function must tolerate it
-    stageDF(in,
-      Seq((1L, Some("2024-01-01 10:00:00"), 7L, 1.0),
-          (2L, None, 7L, 2.0),
-          (3L, Some("2024-01-01 12:00:00"), 7L, 4.0))
-        .toDF("event_id", "ts_s", "user_id", "value")
-        .withColumn("ts", to_timestamp($"ts_s")).drop("ts_s")
-        .select($"event_id", $"ts", $"user_id", $"value"),
-      "b1")
-    val src = StreamingOps.fileSource(spark, in, schema)
-      .withWatermark("ts", "0 seconds")
-      .select($"user_id", $"ts", $"value").as[StreamingOps.TimedEvent]
-    val q = StreamingOps.sessionWindows(src, gapMs = 10 * 60 * 1000)
-      .writeStream.format("memory").queryName("sess_null_out").outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val rows = spark.sql(
-      "SELECT user_id, CAST(start AS STRING), n, total FROM sess_null_out")
-      .as[(Long, String, Long, Double)].collect().toSeq
-    // the NULL-ts row contributes to no session; the 2h gap still closes
-    // the first single-event session
-    assert(rows == Seq((7L, "2024-01-01 10:00:00", 1L, 1.0)))
-  }
-
-  test("ST6 alerting: listener records lifecycle and reports failures") {
-    val in = tmp("graft_in9"); val ckpt = tmp("graft_ckpt9")
-    stageBatch(in, Seq((1L, "2024-01-01 10:00:00", 1L, 1.0)), "b1")
-    val listener = new StreamingOps.AlertListener
-    spark.streams.addListener(listener)
-    try {
-      val q = StreamingOps.fileSource(spark, in, schema)
-        .writeStream.format("memory").queryName("alert_out")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      // listener events are async; drain
-      var waited = 0
-      while (!listener.alerts.exists(_.startsWith("terminated")) && waited < 100) {
-        Thread.sleep(100); waited += 1
-      }
-      assert(listener.alerts.exists(_.startsWith("started")))
-      assert(listener.alerts.exists(_.startsWith("terminated")))
-      assert(!listener.alerts.exists(_.startsWith("ALERT-failure")))
-    } finally spark.streams.removeListener(listener)
   }
 
   test("streaming merge sink: re-delivered keys overwrite instead of duplicating") {

@@ -9,17 +9,19 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.tools.TimeQuery
 
 /** TimeQuery's per-layer record: one parseable line per (query, run) with
-  * the three phases and their counters, attributed to the right phase,
-  * and no listener left behind on the session it measured. */
+  * the four phases and their counters, attributed to the right phase, a
+  * result fingerprint, and no listener left behind on the session it
+  * measured. */
 class TimeQuerySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-  private val phases = Seq("construct", "count", "noop")
+  private val phases = Seq("construct", "count", "noop", "fp")
   private val names = Seq("q1_agg", "st4_stream_tumbling_live")
 
   /** Listeners on the context before the run, the record, and the
-    * listeners after. The session's query-execution and streaming buses
-    * are created first (each is registered on first use), so the census
-    * before the run already holds them. A listener that holds up every
+    * listeners after. The session's query-execution and streaming buses,
+    * and the run-directory owner's listener, are created first (each is
+    * registered on first use), so the census before the run already
+    * holds them. A listener that holds up every
     * stage-completed event makes delivery lag behind each phase: a phase
     * counts its last stage only if the record waits for delivery. */
   private lazy val (before, lines, after) = {
@@ -30,6 +32,7 @@ class TimeQuerySpec extends AnyFunSuite {
     spark.listenerManager.register(noop)
     spark.listenerManager.unregister(noop)
     spark.streams
+    graft.io.Runs.siteRoot(spark, "TimeQuerySpec")
     val lag = new SparkListener {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = Thread.sleep(200)
     }
@@ -51,7 +54,7 @@ class TimeQuerySpec extends AnyFunSuite {
     if (n.isNumber) Seq(path -> n.asDouble)
     else n.properties.asScala.toSeq.flatMap(e => leaves(e.getValue, s"$path.${e.getKey}"))
 
-  test("record: a calib line, then one line per (query, run) with three phases of the same counters") {
+  test("record: a calib line, then one line per (query, run) with four phases of the same counters and a result") {
     assert(lines.size == 1 + names.size)
     assert(json.head.get("calib_s").asDouble > 0)
     assert(json.tail.map(_.get("query").asText) == names)
@@ -63,11 +66,20 @@ class TimeQuerySpec extends AnyFunSuite {
     }
     assert(counterSets.distinct.size == 1)
     assert(counterSets.head.contains(".stream_ms.triggerExecution"))
+    for (j <- json.tail) {
+      val r = j.get("result")
+      assert(r.fieldNames.asScala.toSeq == Seq("rows", "fp"), j.get("query"))
+      assert(r.get("rows").isIntegralNumber && r.get("rows").asLong >= 1, r)
+      assert(r.get("fp").isTextual && BigDecimal(r.get("fp").asText).isWhole, r)
+    }
   }
 
   test("record: a batch query's jobs land in count and noop, with no streaming batches") {
     val q1 = recordOf("q1_agg")
-    for (ph <- Seq("count", "noop")) {
+    // the fingerprint's job is its own phase's: count runs what the
+    // bench's action runs, and no more
+    assert(q1.get("count").get("jobs").asInt == 3, q1.get("count"))
+    for (ph <- Seq("count", "noop", "fp")) {
       def n(k: String) = q1.get(ph).get(k).asDouble
       // every job of q1 runs at least one stage, every stage a task
       assert(n("jobs") >= 1 && n("stages") >= n("jobs") && n("tasks") >= n("stages"), q1.get(ph))
@@ -122,12 +134,12 @@ class TimeQuerySpec extends AnyFunSuite {
     * constant group) is a window with no partition spec. */
   private lazy val planned: Seq[JsonNode] = {
     val out = Seq.newBuilder[String]
-    TimeQuery.record(spark, TestSpark.sf0001, Seq("agg_group_topk", "k16_sink_training_shards"), 2,
+    TimeQuery.record(spark, TestSpark.sf0001, Seq("agg_group_topk", "k16_sink_training_shards"), 3,
       out += _)
     out.result().map(new ObjectMapper().readTree(_))
   }
   private val planKeys = Seq("scans", "xchg_hash", "xchg_range", "bcast", "smj", "bhj",
-    "sort_agg", "obj_agg", "cached", "topk", "rows")
+    "sort_agg", "obj_agg", "cached", "topk")
 
   test("record: the calib line names the queries; every line has the plan keys, run 1 the plan text") {
     assert(planned.head.get("queries").elements.asScala.map(_.asText).toSeq ==
@@ -143,12 +155,15 @@ class TimeQuerySpec extends AnyFunSuite {
   }
 
   test("record: agg_group_topk's plan broadcasts its join and ends in one top-k, the same every run") {
-    val runs = planned.tail.filter(_.get("query").asText == "agg_group_topk").map(_.get("plan"))
-    assert(runs.size == 2 && runs.distinct.size == 1, runs)
+    val lines = planned.tail.filter(_.get("query").asText == "agg_group_topk")
+    val runs = lines.map(_.get("plan"))
+    assert(runs.size == 3 && runs.distinct.size == 1, runs)
     val plan = runs.head
     assert(plan.get("bcast").asInt >= 1 && plan.get("bhj").asInt >= 1, plan)
     assert(plan.get("topk").asInt == 1, plan)
-    assert(plan.get("rows").asLong >= 1, plan)
+    // cold run 1 and warm runs 2-3 return the same rows
+    val results = lines.map(_.get("result"))
+    assert(results.distinct.size == 1 && results.head.get("rows").asLong >= 1, results)
   }
 
   test("record: a global running total counts as a single-partition window") {
@@ -172,6 +187,24 @@ class TimeQuerySpec extends AnyFunSuite {
     }
     // the JIT compiles throughout a run, so its counter moves
     assert(all.map(_.get("jit_ms").asDouble).sum > 0)
+  }
+
+  test("fingerprint: row order is free; a changed cell, a moved NULL or a changed map differ; map entry order is free") {
+    import spark.implicits._
+    def fp(df: org.apache.spark.sql.DataFrame): (Long, String) = TimeQuery.fingerprint(df)
+    val rows = Seq((1L, "a", 1.5), (2L, "b", 2.5), (3L, null, 3.5))
+    val base = fp(rows.toDF("k", "s", "x"))
+    assert(base._1 == 3 && base._2 != "0", base)
+    assert(fp(rows.reverse.toDF("k", "s", "x").repartition(3)) == base)
+    assert(fp(rows.updated(1, (2L, "b", 2.25)).toDF("k", "s", "x"))._2 != base._2)
+    assert(fp(Seq((Option.empty[Int], Option(1))).toDF("a", "b")) !=
+      fp(Seq((Option(1), Option.empty[Int])).toDF("a", "b")))
+    assert(fp(Seq.empty[(Long, String)].toDF("k", "s")) == ((0L, "0")))
+    val m = fp(Seq((1, Map("x" -> 1, "y" -> 2))).toDF("k", "m"))
+    assert(fp(Seq((1, Map("y" -> 2, "x" -> 1))).toDF("k", "m")) == m)
+    // both literal maps keep their entries in the order written
+    assert(fp(spark.sql("SELECT 1 AS k, map('y', 2, 'x', 1) AS m")) == m)
+    assert(fp(Seq((1, Map("x" -> 1, "y" -> 3))).toDF("k", "m"))._2 != m._2)
   }
 
   test("record: an unknown query name fails naming it, before any query runs") {

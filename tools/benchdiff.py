@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
-"""Calib-normalized bench comparison (VERDICT r16 task 4).
+"""Calib-normalized bench comparison, and result comparison for TimeQuery
+records.
 
-Usage: benchdiff.py OLD.json NEW.json [threshold]
+Usage: benchdiff.py OLD NEW [threshold]
 
 Each record is a Bench JSON line, a driver BENCH_r*.json whose `tail`
 holds the line, or a `graft.tools.TimeQuery` record (JSON lines, `calib_s`
@@ -12,9 +13,20 @@ settings make a scale or shape comparison (SCALE.md). Per-query times divide by 
 comparison, so box-speed drift between runs cancels out — r14's "1.6-1.9x
 regressions" were pure box drift that this normalization makes visible.
 Queries whose normalized ratio exceeds the threshold (default 1.2) are
-flagged; exit 1 if any regression is flagged, so a round close can gate
-on it.  Only queries present in BOTH records' headline dicts compare
+flagged. Only queries present in BOTH records' headline dicts compare
 (Bench emits the slowest ~40; the rest are sub-noise).
+
+A TimeQuery record also carries each run's `result.fp`, an order-free
+fingerprint of the query's rows. The diff flags a query whose runs
+disagree within one record (cold run 1 against warm runs 2..), and a
+query whose fingerprint differs between two records: one at another
+SPARK_GRAFT_SHUFFLE setting (partition-count invariance) or in reverse
+pack order (independence from what ran before). A TimeQuery record that
+lacks a result for a query its calib line names is refused. To check
+fingerprints alone, pass a threshold no time ratio reaches (say 1e9).
+
+Exit 1 if any time regression or any fingerprint difference is flagged,
+so a round close can gate on it.
 """
 import json
 import re
@@ -22,19 +34,49 @@ import sys
 
 
 def load_record(lines):
-    """A TimeQuery record as {calib, queries}: per query, the minimum over
-    runs >= 2 of construct + count wall seconds."""
-    calib, best = None, {}
+    """A TimeQuery record as {calib, queries, fps}: per query, the minimum
+    over runs >= 2 of construct + count wall seconds, and each run's
+    `result.fp` by run number. Raises ValueError unless every line has a
+    result and every query the calib line names has a line."""
+    head, best, fps = None, {}, {}
     for line in lines:
         if not line.strip():
             continue
         d = json.loads(line)
         if "calib_s" in d:
-            calib = d["calib_s"]
-        elif d.get("run", 1) >= 2:
+            head = d
+            continue
+        q, run = d["query"], d.get("run", 1)
+        if "result" not in d:
+            raise ValueError(f"{q} run {run} has no result")
+        fps.setdefault(q, {})[run] = d["result"]["fp"]
+        if run >= 2:
             t = d["construct"]["wall_s"] + d["count"]["wall_s"]
-            best[d["query"]] = min(t, best.get(d["query"], t))
-    return {"calib": calib, "queries": best}
+            best[q] = min(t, best.get(q, t))
+    if head is None or not head.get("queries"):
+        raise ValueError("no calib line naming the record's queries")
+    missing = [q for q in head["queries"] if q not in fps]
+    if missing:
+        raise ValueError(f"{len(missing)}/{len(head['queries'])} queries have no result "
+                         f"(first: {', '.join(missing[:5])})")
+    return {"calib": head["calib_s"], "queries": best, "fps": fps}
+
+
+def fp_diffs(old, new):
+    """(query, where, detail) for every fingerprint difference: runs that
+    disagree within either record, then queries whose fingerprints differ
+    between the two. Records without fingerprints (Bench lines) add none."""
+    diffs = []
+    for side, rec in (("old", old), ("new", new)):
+        for q, runs in sorted(rec.get("fps", {}).items()):
+            if len(set(runs.values())) > 1:
+                diffs.append((q, f"{side} runs", " ".join(f"run{r}={fp}" for r, fp in sorted(runs.items()))))
+    if "fps" in old and "fps" in new:
+        for q in sorted(set(old["fps"]) & set(new["fps"])):
+            o, n = set(old["fps"][q].values()), set(new["fps"][q].values())
+            if o != n:
+                diffs.append((q, "old/new", f"{'|'.join(sorted(o))} -> {'|'.join(sorted(n))}"))
+    return diffs
 
 
 def load(path):
@@ -44,7 +86,10 @@ def load(path):
     except json.JSONDecodeError:
         first = None
     if isinstance(first, dict) and "calib_s" in first:
-        return load_record(text.splitlines())
+        try:
+            return load_record(text.splitlines())
+        except ValueError as e:
+            raise SystemExit(f"{path}: {e} — record refused")
     try:
         d = json.loads(text)
     except json.JSONDecodeError:
@@ -64,9 +109,9 @@ def load(path):
     raise SystemExit(f"{path}: no bench record found")
 
 
-def main():
-    old, new = load(sys.argv[1]), load(sys.argv[2])
-    thr = float(sys.argv[3]) if len(sys.argv) > 3 else 1.2
+def main(argv):
+    old, new = load(argv[0]), load(argv[1])
+    thr = float(argv[2]) if len(argv) > 2 else 1.2
 
     # r16+ records carry calib_end too: the box drifts DURING a run, so
     # normalize by the midpoint of the run's box-speed envelope when
@@ -115,8 +160,14 @@ def main():
         print(f"{r:>10.2f}  {q:<40} {to:>8.3f} {tn:>8.3f}  {flag}")
     print(f"== {flagged} normalized regression(s) over {thr}x "
           f"across {len(rows)} common queries")
-    sys.exit(1 if flagged else 0)
+    diffs = fp_diffs(old, new)
+    if "fps" in old or "fps" in new:
+        for q, where, detail in diffs:
+            print(f"  FP-DIFF  {q:<40} {where}: {detail}")
+        common = set(old.get("fps", {})) & set(new.get("fps", {}))
+        print(f"== {len(diffs)} fingerprint difference(s); {len(common)} common queries")
+    return 1 if flagged or diffs else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main(sys.argv[1:]))

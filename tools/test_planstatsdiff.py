@@ -11,7 +11,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import planstatsdiff  # noqa: E402
 
 PLAN = {"scans": 2, "xchg_hash": 1, "xchg_range": 0, "bcast": 1, "smj": 0, "bhj": 1,
-        "sort_agg": 0, "obj_agg": 0, "cached": 0, "topk": 1, "rows": 20}
+        "sort_agg": 0, "obj_agg": 0, "cached": 0, "topk": 1}
 
 
 class RenderTest(unittest.TestCase):
